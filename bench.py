@@ -446,7 +446,6 @@ def run_bench() -> dict:
             SketchSpec("len", "kll", value_col="text_len"),
         ],
         salt_buckets=CPUS,
-        salt_cols=["conv_id"],
     ).collect()
     queries["grouped_salted_by_role"] = round(time.perf_counter() - t0, 3)
 

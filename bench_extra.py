@@ -132,7 +132,6 @@ def t_grouped_role(spark, plans=False):
             SketchSpec("len", "kll", value_col="text_len"),
         ],
         salt_buckets=CPUS,
-        salt_cols=["conv_id"],
     )
     if plans:
         write_plan(out, "grouped_salted_by_role_after.txt")

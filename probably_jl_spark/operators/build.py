@@ -224,12 +224,11 @@ def tree_merge(partials: DataFrame, specs: list[SketchSpec], depth: int | None =
         and nparts * _est_partial_bytes(specs) <= _DRIVER_MERGE_MAX_BYTES
     ):
         rows = [tuple(r) for r in sel.collect()]
-        if not rows:
-            row = tuple([None] * len(state_cols) + [0])
-        else:
-            row = rows[0]
-            for nxt in rows[1:]:
-                row = merge_rows(row, nxt)
+        if not rows:  # no partials: every sketch empty, like an empty build
+            return {**{s.name: s.new() for s in specs}, "__n_rows": 0}
+        row = rows[0]
+        for nxt in rows[1:]:
+            row = merge_rows(row, nxt)
         out = {s.name: sketch_from_bytes(row[i]) for i, s in enumerate(specs)}
         out["__n_rows"] = row[-1]
         return out

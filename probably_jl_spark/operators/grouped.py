@@ -2,29 +2,35 @@
 (north_rule skew handling).
 
 Per-group sketches (e.g. distinct conv_ids per tool, turn-length digest
-per role) never materialize a group's rows. Stage 1 is a ``mapInPandas``
-pass identical in shape to the global build (build.py): each input
-partition keeps a ``{group-key -> sketch}`` dict, updates it per Arrow
-batch with vectorized kernels, and emits one small *state* row per
-(partition, key). Stage 2 shuffles only those serialized states (KBs per
-group) and merges them per key — correct because every sketch merge is
-commutative + associative (SURVEY.md §4.2).
+per role) never materialize a group's rows. Every sketch is mergeable, so
+each route does two jobs only: assign group codes, then fold states.
 
-Why this shape at 100 TB (VERDICT r01 "What's wrong #2"): the previous
-``groupBy(key).applyInPandas`` loaded an entire group into one pandas
-frame — a billion-row hot key was a straight executor OOM. Here a hot key
-costs one sketch per partition, and rows never shuffle at all.
+* Generic route (any spec mix): a ``mapInPandas`` pass keeps a
+  ``{group-key -> sketch}`` dict per input partition and emits one small
+  *state* row per (partition, key); only those states shuffle, and a
+  per-key ``applyInPandas`` merges them in ascending partition order.
+* Vectorized routes (all-HLL or all-KMV spec lists): no per-group Python.
+  One deferred key coder (``_KeyCoder``) assigns first-seen group codes
+  and the kind's kernel folds (code, payload) arrays. The partial route
+  builds map-side partials, hash-repartitions them and merges them with
+  rollup's state fold (``operators/rollup.py::_rollup_builder``, the only
+  vectorized state merge); the direct route shuffles raw (key, hash) rows
+  once and emits final states (``mapInArrow`` for one non-float key).
+
+The coder stashes each batch's own factorized uniques and codes, and
+consolidates them with ONE factorize over known keys + stashed uniques
+when the pending bytes (codes, payloads, state blobs) pass
+``_FOLD_BYTES``, or when live plus pending keys could pass the builder's
+flush cap — so flush points match a per-batch live-key count exactly.
 
 Skew/fan-in controls:
 
 * ``max_states_per_partition`` bounds stage-1 memory on high-cardinality
-  keys (per-user sketches): when the dict exceeds the cap, partials are
-  flushed mid-partition and rebuilt — merges make that lossless.
-* ``salt_buckets=S > 1`` bounds stage-2 fan-in on huge clusters: states
-  first merge on ``(key, partition_id mod S)``, then the S survivors merge
-  per key — two state shuffles, never row shuffles. (Row-level salting is
-  obsolete in this design; ``salt_cols`` is accepted for API compatibility
-  and ignored.)
+  keys (per-user sketches): when the live keys exceed the cap, partials
+  are flushed mid-partition and rebuilt — merges make that lossless.
+* ``salt_buckets=S > 1`` bounds the generic route's per-key fan-in on
+  huge clusters: states first merge on ``(key, partition_id mod S)``, then
+  the S survivors merge per key — two state shuffles, never row shuffles.
 
 Merges apply in ascending partition-id order, so grouped states are
 deterministic across identical runs even for merge-order-sensitive kinds
@@ -146,34 +152,14 @@ def _absorb_max(acc: np.ndarray, packed: np.ndarray) -> np.ndarray:
 _MASK24 = np.int64((1 << 24) - 1)
 
 
-def _group_codes(pdf: pd.DataFrame, group_cols: list[str], keys_index):
-    """(per-row global group codes, updated persistent key index). Batch
-    keys factorize C-level; new keys join the index through one hash-join
-    ``get_indexer`` probe — no per-row Python."""
-    if len(group_cols) == 1:
-        bl_codes, bl_uniques = pdf[group_cols[0]].factorize(use_na_sentinel=False)
-        bl_uniques = pd.Index(bl_uniques)
-    else:
-        mi = pd.MultiIndex.from_frame(pdf[list(group_cols)])
-        bl_codes, bl_uniques = mi.factorize(use_na_sentinel=False)
-    if keys_index is None:
-        return np.asarray(bl_codes, dtype=np.int64), bl_uniques
-    lut = keys_index.get_indexer(bl_uniques)
-    new = lut < 0
-    if new.any():
-        lut[new] = len(keys_index) + np.arange(int(new.sum()), dtype=np.int64)
-        keys_index = keys_index.append(bl_uniques[new])
-    return lut[bl_codes], keys_index
-
-
 class _HllKernel:
-    """Per-kind hooks for the shared vectorized grouped builders
-    (`_vec_partial_builder` / `_vec_merge_builder`). The HLL accumulator
-    is one sorted int64 array of ``(group_code << 24) | (register_idx
-    << 6) | rho`` (idx needs <= 18 bits at p <= 18, rho <= 61 needs 6),
-    merged with register-max dedup — 8 B per nonzero (group, register),
-    so with sparse HLL states (sketches/hll.py) both accumulator and
-    shuffled partials stay proportional to what the groups saw."""
+    """Per-kind hooks for the vectorized grouped and rollup builders. The
+    HLL accumulator is one sorted int64 array of ``(group_code << 24) |
+    (register_idx << 6) | rho`` (idx needs <= 18 bits at p <= 18, rho <=
+    61 needs 6), merged with register-max dedup — 8 B per nonzero (group,
+    register), so with sparse HLL states (sketches/hll.py) both
+    accumulator and shuffled partials stay proportional to what the
+    groups saw."""
 
     def __init__(self, specs: list[SketchSpec]):
         self.ps = {s.name: s.new().p for s in specs}
@@ -184,8 +170,8 @@ class _HllKernel:
 
     def row_payloads(self, spec, h: np.ndarray) -> np.ndarray:
         """Group-independent per-row payload (register_idx << 6 | rho):
-        computed per batch, combined with group codes later — the direct
-        route defers group-code assignment to amortize the key index."""
+        computed per batch, combined with the deferred group codes at
+        consolidation."""
         from ..sketches.hashing import trailing_zeros64
 
         p = self.ps[spec.name]
@@ -201,13 +187,10 @@ class _HllKernel:
         packed.sort()
         return _absorb_max(acc, _dedup_max_rho(packed))
 
-    def absorb_rows(self, acc, spec, g: np.ndarray, h: np.ndarray):
-        return self.absorb_payloads(acc, spec, g, self.row_payloads(spec, h))
-
     def absorb_states(self, acc, spec, g: np.ndarray, blobs):
         from ..sketches.hll import _dedup_max_rho, packed_entries_many_from_bytes
 
-        counts, ent = packed_entries_many_from_bytes(list(blobs))
+        counts, ent = packed_entries_many_from_bytes(blobs)
         if not ent.size:
             return acc
         packed = (np.repeat(g, counts) << np.int64(24)) | ent.astype(np.int64)
@@ -232,7 +215,7 @@ class _HllKernel:
 
 
 class _KmvKernel:
-    """KMV hooks for the shared vectorized grouped builders: the
+    """KMV hooks for the vectorized grouped and rollup builders: the
     accumulator is a (group_code int64, hash uint64) array pair in
     (group, hash) order, capped at the k smallest distinct hashes per
     group each fold (`_kmv_combine`) — unlike HLL's 24-bit payload the
@@ -252,13 +235,10 @@ class _KmvKernel:
     def absorb_payloads(self, acc, spec, g: np.ndarray, pay: np.ndarray):
         return _kmv_combine(acc[0], acc[1], g, pay, self.ks[spec.name])
 
-    def absorb_rows(self, acc, spec, g: np.ndarray, h: np.ndarray):
-        return _kmv_combine(acc[0], acc[1], g, h, self.ks[spec.name])
-
     def absorb_states(self, acc, spec, g: np.ndarray, blobs):
         from ..sketches.kmv import mins_many_from_bytes
 
-        counts, hh = mins_many_from_bytes(list(blobs))
+        counts, hh = mins_many_from_bytes(blobs)
         if not hh.size:
             return acc
         gg = np.repeat(g, counts)
@@ -305,54 +285,134 @@ def _kmv_combine(
 
 _VEC_KERNELS = {"hll": _HllKernel, "kmv": _KmvKernel}
 
+# pending bytes (codes, row counts, payloads, state blobs) per deferred
+# consolidation; ~4M raw rows of one spec at 16 B/row
+_FOLD_BYTES = 1 << 26
 
-def _emit_state_rows(
-    specs: list[SketchSpec],
-    group_cols: list[str],
-    kernel,
-    keys_index,
-    n_rows: np.ndarray,
-    accs: dict,
-    ord_key: int | None,
-) -> pd.DataFrame:
-    """One output row per group code from the kernel accumulators.
-    Blob wrapping is vectorized too (`packed_entries_many_to_bytes` /
-    `mins_many_to_bytes`: one flat buffer + C-level bytes slicing, ~0.5
-    us/group vs ~5.6 scalar); the only remaining per-group work is
-    proportional to OUTPUT rows, never input rows."""
-    n = len(keys_index)
+
+def _pd_keys(pdf: pd.DataFrame, group_cols: list[str]) -> pd.Index:
+    """A batch's group keys as an Index (a MultiIndex for several columns)."""
     if len(group_cols) == 1:
-        out = pd.DataFrame({group_cols[0]: keys_index})
-    else:
-        out = keys_index.to_frame(index=False)
-        out.columns = list(group_cols)
-    if ord_key is not None:
-        out[_ORD_COL] = ord_key
-    out[_NROWS_COL] = n_rows[:n]
-    for s in specs:
-        out[s.state_col] = kernel.emit_blobs(accs[s.name], s, n)
-    return out
+        return pd.Index(pdf[group_cols[0]])
+    return pd.MultiIndex.from_frame(pdf[list(group_cols)])
 
 
-def _vec_partial_builder(
-    specs: list[SketchSpec], group_cols: list[str], col_map: dict, cap: int, kernel
-):
-    """Vectorized partial builder shared by the single-kind fast routes
-    (kernels: `_HllKernel`, `_KmvKernel`): no per-group Python in the
-    batch loop. Each batch factorizes its group keys (C-level), maps them
-    to stable first-seen codes through a persistent
-    ``pd.Index.get_indexer`` (hash join, C-level), and folds (code, hash)
-    rows into the kernel's accumulator with one sort + one merge per
-    batch regardless of group count. State emit and state decode are
-    vectorized too (many-blob wire helpers in sketches/hll.py, kmv.py),
-    so no stage of the route loops Python per group beyond a C-level
-    bytes slice. Partials are byte-identical to the generic dict
-    builder's — same flush points, same canonical wire — gated by
-    test_grouped_hll_fast_path_byte_identical and its KMV twin.
+def _pd_encode(parts: list) -> tuple[np.ndarray, pd.Index]:
+    """(codes, uniques) of the concatenated key Indexes, first-seen order;
+    NaN keys form one group (pandas compares them by value)."""
+    keys = parts[0].append(parts[1:]) if len(parts) > 1 else parts[0]
+    codes, uniques = keys.factorize(use_na_sentinel=False)
+    return np.asarray(codes, dtype=np.int64), uniques
 
-    Why: the generic dict-of-sketches loop costs ~5-10 us of Python per
-    (group, batch); at the north_star's distinct-tools-per-conv_id shape
-    (~1e6 live groups per partition) that dominates the build."""
+
+def _pa_encode(parts: list):
+    """Arrow twin of ``_pd_encode``: null keys get code -1."""
+    import pyarrow as pa
+
+    enc = (pa.concat_arrays(parts) if len(parts) > 1 else parts[0]).dictionary_encode()
+    idx = enc.indices.fill_null(-1) if enc.indices.null_count else enc.indices
+    return idx.to_numpy(zero_copy_only=False).astype(np.int64), enc.dictionary
+
+
+class _KeyCoder:
+    """Deferred group coder shared by every vectorized grouped and rollup
+    builder. ``add`` stashes one batch (its own uniques, its codes into
+    them, its row counts and payloads); ``consolidate`` maps every stashed
+    batch through ONE ``encode`` of known keys + stashed uniques — known
+    keys lead, so first-seen codes never change — and returns the global
+    code per pending row plus the payloads in batch order. Re-coding each
+    batch against the live keys instead costs O(live keys) per batch,
+    quadratic in a high-cardinality partition.
+
+    ``add`` asks for a consolidation when the pending bytes pass
+    ``_FOLD_BYTES`` or when live keys plus pending uniques could pass
+    ``cap``: consolidating then lets the builder flush on exactly the
+    batches a per-batch live-key count would."""
+
+    def __init__(self, encode, cap: int | None = None):
+        self.encode, self.cap = encode, cap
+        self.reset()
+
+    def reset(self) -> None:
+        self.keys = None  # known uniques in code order
+        self.n_rows = np.zeros(0, dtype=np.int64)
+        self._pend: list = []
+        self._n_uniq = self._n_bytes = 0
+
+    def __len__(self) -> int:
+        return 0 if self.keys is None else len(self.keys)
+
+    def add(self, uniques, codes: np.ndarray, rows, payload, nbytes: int) -> bool:
+        """Stash a batch; ``rows`` holds per-row counts, None for one each."""
+        self._pend.append((uniques, codes, rows, payload))
+        self._n_uniq += len(uniques)
+        self._n_bytes += codes.nbytes + nbytes + (0 if rows is None else rows.nbytes)
+        return self._n_bytes >= _FOLD_BYTES or (
+            self.cap is not None and len(self) + self._n_uniq > self.cap
+        )
+
+    def consolidate(self) -> tuple[np.ndarray, list]:
+        pend, self._pend, self._n_uniq, self._n_bytes = self._pend, [], 0, 0
+        if not pend:
+            return np.empty(0, dtype=np.int64), []
+        parts = ([] if self.keys is None else [self.keys]) + [p[0] for p in pend]
+        codes, self.keys = self.encode(parts)
+        offs = np.cumsum([0] + [len(u) for u in parts])
+        base = len(parts) - len(pend)
+        g = np.concatenate(
+            [codes[offs[base + i] : offs[base + i + 1]][p[1]] for i, p in enumerate(pend)]
+        )
+        if len(self) > self.n_rows.size:
+            self.n_rows = np.concatenate(
+                [self.n_rows, np.zeros(len(self) - self.n_rows.size, dtype=np.int64)]
+            )
+        if pend[0][2] is None:
+            self.n_rows += np.bincount(g, minlength=self.n_rows.size)
+        else:
+            # np.add.at keeps the row counts exact int64 (bincount
+            # weights would round past 2^53 — a stated design case for
+            # hot keys)
+            np.add.at(self.n_rows, g, np.concatenate([p[2] for p in pend]))
+        return g, [p[3] for p in pend]
+
+
+class _KernelCol:
+    """Raw-row accumulator of one spec: the kind kernel's packed fold."""
+
+    def __init__(self, kernel, spec: SketchSpec):
+        self.kernel, self.spec = kernel, spec
+        self.reset()
+
+    def reset(self) -> None:
+        self.acc = self.kernel.init_acc()
+
+    def absorb(self, g: np.ndarray, payloads: list) -> None:
+        self.acc = self.kernel.absorb_payloads(self.acc, self.spec, g, np.concatenate(payloads))
+
+    def emit_blobs(self, n: int) -> list:
+        return self.kernel.emit_blobs(self.acc, self.spec, n)
+
+    def emit_buf(self, n: int):
+        return self.kernel.emit_buf(self.acc, self.spec, n)
+
+
+def _fold(coder: _KeyCoder, cols: dict) -> None:
+    g, pays = coder.consolidate()
+    if g.size:
+        for c, acc in cols.items():
+            acc.absorb(g, [p[c] for p in pays])
+
+
+def _fold_builder(group_cols: list[str], cap: int | None, with_ord: bool, new_cols, stash):
+    """mapInPandas body of every pandas-side vectorized build: raw rows
+    (grouped partial and direct routes) and state rows (both rollup
+    stages, which include the grouped partial route's merge).
+    ``stash(pdf)`` -> (per-row counts or None, {out col: payload},
+    payload bytes); ``new_cols()`` -> {out col: accumulator with
+    ``absorb(g, payloads)``, ``emit_blobs(n)`` and ``reset()``}. Flushes
+    when the live keys pass ``cap``; ``with_ord`` tags the output with
+    the merge order key ``pid << 20 | flush``, so mid-partition flushes
+    keep a total deterministic merge order even for one (key, pid)."""
 
     def fn(batches):
         from pyspark import TaskContext
@@ -360,353 +420,157 @@ def _vec_partial_builder(
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx is not None else -1
         flush = 0
-        keys_index = None
-        n_rows = np.empty(0, dtype=np.int64)
-        accs = {s.name: kernel.init_acc() for s in specs}
+        coder = _KeyCoder(_pd_encode, cap)
+        cols = new_cols()
+
+        def emit():
+            n = len(coder)
+            if len(group_cols) == 1:
+                out = pd.DataFrame({group_cols[0]: coder.keys})
+            else:
+                out = coder.keys.to_frame(index=False)
+                out.columns = list(group_cols)
+            if with_ord:
+                out[_ORD_COL] = (pid << 20) | flush
+            out[_NROWS_COL] = coder.n_rows[:n]
+            for c, acc in cols.items():
+                out[c] = acc.emit_blobs(n)
+            return out
+
         for pdf in batches:
             if not len(pdf):
                 continue
-            arrays = batch_arrays(pdf, specs, col_map)
-            g, keys_index = _group_codes(pdf, group_cols, keys_index)
-            if len(keys_index) > n_rows.size:
-                n_rows = np.concatenate(
-                    [n_rows, np.zeros(len(keys_index) - n_rows.size, dtype=np.int64)]
-                )
-            n_rows += np.bincount(g, minlength=n_rows.size)
-            for s in specs:
-                accs[s.name] = kernel.absorb_rows(accs[s.name], s, g, arrays[s.name][0])
-            if len(keys_index) > cap:
-                yield _emit_state_rows(
-                    specs, group_cols, kernel, keys_index, n_rows, accs, (pid << 20) | flush
-                )
+            codes, uniques = _pd_encode([_pd_keys(pdf, group_cols)])
+            if not coder.add(uniques, codes, *stash(pdf)):
+                continue
+            _fold(coder, cols)
+            if cap is not None and len(coder) > cap:
+                yield emit()
                 flush += 1
-                keys_index = None
-                n_rows = np.empty(0, dtype=np.int64)
-                accs = {s.name: kernel.init_acc() for s in specs}
-        if keys_index is not None and len(keys_index):
-            yield _emit_state_rows(
-                specs, group_cols, kernel, keys_index, n_rows, accs, (pid << 20) | flush
-            )
+                coder.reset()
+                for acc in cols.values():
+                    acc.reset()
+        _fold(coder, cols)
+        if len(coder):
+            yield emit()
 
     return fn
 
 
-def _vec_merge_builder(specs: list[SketchSpec], group_cols: list[str], kernel):
-    """Vectorized per-partition merge of state rows — replaces the
-    per-key ``applyInPandas`` merge for single-kind HLL/KMV spec lists.
-    Partials are hash-repartitioned on the group columns, so each group's
-    rows land in exactly one partition; within the partition every blob
-    decodes into the kernel accumulator and ALL groups merge in one pass.
-    Safe precisely because these states are pure set functions with
-    byte-exact commutative merges — row order within the partition cannot
-    matter (order-sensitive kinds like t-digest must keep the ordered
-    applyInPandas path). Blob decode is one vectorized parse over the
-    joined STATE-row buffer per batch (many-blob wire helpers, ~0.5-2
-    us/state row vs ~10 scalar), and state rows number one per group per
-    upstream partition, not input rows."""
+def _vec_row_builder(
+    specs: list[SketchSpec], group_cols: list[str], col_map: dict, kernel, cap: int | None
+):
+    """Vectorized raw-row build (kernels: `_HllKernel`, `_KmvKernel`): no
+    per-group Python in the batch loop. With a ``cap`` it is the partial
+    route's stage 1 — partials tagged with their merge order, flushed on
+    the same batches as the generic dict builder, byte-identical to it
+    (test_grouped_hll_fast_path_byte_identical and its KMV twin). With
+    ``cap=None`` it is the pandas direct route: rows arrive
+    hash-partitioned on the group columns, so every group is complete in
+    the partition and the states it emits are final."""
 
-    def fn(batches):
-        keys_index = None
-        n_rows = np.empty(0, dtype=np.int64)
-        accs = {s.name: kernel.init_acc() for s in specs}
-        pend_uniq: list = []
-        pend: list = []  # (codes, n_rows int64 array, {spec: blob sequence})
-        pend_n = 0
+    def stash(pdf):
+        arrays = batch_arrays(pdf, specs, col_map)
+        pay = {s.state_col: kernel.row_payloads(s, arrays[s.name][0]) for s in specs}
+        return None, pay, sum(p.nbytes for p in pay.values())
 
-        def consolidate():
-            nonlocal keys_index, n_rows, pend_uniq, pend, pend_n
-            if not pend_uniq:
-                return
-            parts = ([] if keys_index is None else [keys_index]) + pend_uniq
-            combined = parts[0].append(parts[1:]) if len(parts) > 1 else parts[0]
-            codes, keys_index = combined.factorize(use_na_sentinel=False)
-            codes = np.asarray(codes, dtype=np.int64)
-            offs = np.zeros(len(parts) + 1, dtype=np.int64)
-            np.cumsum([len(u) for u in parts], out=offs[1:])
-            base = 0 if len(parts) > len(pend_uniq) else -1  # skip keys_index slot
-            if len(keys_index) > n_rows.size:
-                n_rows = np.concatenate(
-                    [n_rows, np.zeros(len(keys_index) - n_rows.size, dtype=np.int64)]
-                )
-            for i, (bl, nr, blobs) in enumerate(pend):
-                g = codes[offs[base + i + 1] : offs[base + i + 2]][bl]
-                # np.add.at keeps the row counts exact int64 (bincount
-                # weights would round past 2^53 — a stated design case
-                # for hot keys)
-                np.add.at(n_rows, g, nr)
-                for s in specs:
-                    accs[s.name] = kernel.absorb_states(accs[s.name], s, g, blobs[s.name])
-            pend_uniq, pend, pend_n = [], [], 0
-
-        # same deferred-consolidation shape as _vec_direct_builder (one
-        # factorize per ~_FOLD_ROWS state rows instead of an Index
-        # rebuild per batch); state-blob references pin at most a
-        # _FOLD_ROWS-row window of input batches.
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            if len(group_cols) == 1:
-                bl_codes, bl_uniques = pdf[group_cols[0]].factorize(use_na_sentinel=False)
-                bl_uniques = pd.Index(bl_uniques)
-            else:
-                mi = pd.MultiIndex.from_frame(pdf[list(group_cols)])
-                bl_codes, bl_uniques = mi.factorize(use_na_sentinel=False)
-            pend_uniq.append(bl_uniques)
-            pend.append(
-                (
-                    np.asarray(bl_codes, dtype=np.int64),
-                    pdf[_NROWS_COL].to_numpy(dtype=np.int64),
-                    {s.name: pdf[s.state_col] for s in specs},
-                )
-            )
-            pend_n += len(pdf)
-            if pend_n >= _FOLD_ROWS:
-                consolidate()
-        consolidate()
-        if keys_index is not None and len(keys_index):
-            yield _emit_state_rows(specs, group_cols, kernel, keys_index, n_rows, accs, None)
-
-    return fn
-
-
-_FOLD_ROWS = 1 << 22  # pending rows per deferred consolidation (~4M, ~16 B/row held)
-
-
-def _vec_direct_builder(specs: list[SketchSpec], group_cols: list[str], col_map: dict, kernel):
-    """Post-shuffle single-pass build for the vectorized kinds: raw
-    (group, hash) rows arrive hash-partitioned on the group columns, so
-    every group is complete within the partition and the kernel emits
-    FINAL states directly — no partial-state emit, no state exchange, no
-    blob decode. Used when map-side pre-aggregation cannot pay (see
-    ``grouped_sketch``): at ~1 row per (group, partition) the partial
-    route wraps and re-parses one blob per INPUT row.
-
-    Group codes are assigned in DEFERRED blocks of ``_FOLD_ROWS`` rows
-    rather than per batch: each batch only factorizes its own keys
-    (C-level) and stashes (uniques, codes, payloads); a consolidation
-    then maps all stashed uniques through ONE factorize over
-    ``keys_index.append(stashed)`` and folds the payloads into the
-    kernel accumulator with one sort. The per-batch alternative
-    (``Index.append`` + ``get_indexer``) rebuilt the key hash table and
-    its is_unique check every 64k rows — O(live groups) per batch, the
-    dominant cost of the 20M-group bench build (profiled ~2.2s of a
-    4.2s partition). First-seen code order is preserved (keys_index
-    leads the factorize input, so existing codes keep their values),
-    making emitted states and row order identical to the incremental
-    path; memory holds ~16 bytes/pending row, bounded by
-    ``_FOLD_ROWS``."""
-
-    def fn(batches):
-        keys_index = None
-        n_rows = np.empty(0, dtype=np.int64)
-        accs = {s.name: kernel.init_acc() for s in specs}
-        pend_uniq: list = []
-        pend_codes: list = []
-        pend_pay: dict[str, list] = {s.name: [] for s in specs}
-        pend_n = 0
-
-        def consolidate():
-            nonlocal keys_index, n_rows, pend_uniq, pend_codes, pend_n
-            if not pend_uniq:
-                return
-            parts = ([] if keys_index is None else [keys_index]) + pend_uniq
-            combined = parts[0].append(parts[1:]) if len(parts) > 1 else parts[0]
-            codes, keys_index = combined.factorize(use_na_sentinel=False)
-            codes = np.asarray(codes, dtype=np.int64)
-            offs = np.zeros(len(parts) + 1, dtype=np.int64)
-            np.cumsum([len(u) for u in parts], out=offs[1:])
-            base = 0 if len(parts) > len(pend_uniq) else -1  # skip keys_index slot
-            g_all = np.concatenate(
-                [
-                    codes[offs[base + i + 1] : offs[base + i + 2]][bl]
-                    for i, bl in enumerate(pend_codes)
-                ]
-            )
-            if len(keys_index) > n_rows.size:
-                n_rows = np.concatenate(
-                    [n_rows, np.zeros(len(keys_index) - n_rows.size, dtype=np.int64)]
-                )
-            n_rows += np.bincount(g_all, minlength=n_rows.size)
-            for s in specs:
-                accs[s.name] = kernel.absorb_payloads(
-                    accs[s.name], s, g_all, np.concatenate(pend_pay[s.name])
-                )
-                pend_pay[s.name].clear()
-            pend_uniq, pend_codes, pend_n = [], [], 0
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            arrays = batch_arrays(pdf, specs, col_map)
-            if len(group_cols) == 1:
-                bl_codes, bl_uniques = pdf[group_cols[0]].factorize(use_na_sentinel=False)
-                bl_uniques = pd.Index(bl_uniques)
-            else:
-                mi = pd.MultiIndex.from_frame(pdf[list(group_cols)])
-                bl_codes, bl_uniques = mi.factorize(use_na_sentinel=False)
-            pend_uniq.append(bl_uniques)
-            pend_codes.append(np.asarray(bl_codes, dtype=np.int64))
-            for s in specs:
-                pend_pay[s.name].append(kernel.row_payloads(s, arrays[s.name][0]))
-            pend_n += len(pdf)
-            if pend_n >= _FOLD_ROWS:
-                consolidate()
-        consolidate()
-        if keys_index is not None and len(keys_index):
-            yield _emit_state_rows(specs, group_cols, kernel, keys_index, n_rows, accs, None)
-
-    return fn
+    return _fold_builder(
+        group_cols,
+        cap,
+        cap is not None,
+        lambda: {s.state_col: _KernelCol(kernel, s) for s in specs},
+        stash,
+    )
 
 
 # pa.BinaryArray offsets are int32: cap the state bytes per emitted batch
 _EMIT_BYTES = 1 << 29
+_INT32_MAX = (1 << 31) - 1
 
 
 def _vec_direct_builder_arrow(
     specs: list[SketchSpec], group_cols: list[str], col_map: dict, kernel
 ):
-    """``mapInArrow`` twin of ``_vec_direct_builder`` for single-column
-    hashable group keys: the same deferred-consolidation build, but group
-    keys stay Arrow-native end to end. Input batches never convert to
-    pandas (2.4M string->PyObject conversions per bench partition),
-    per-batch factorization is ``Array.dictionary_encode`` (C++), the
-    consolidation re-encodes ``concat_arrays(keys, stashed-uniques)``
-    (prior keys lead, so existing codes keep their values), and the
-    output RecordBatch is assembled zero-copy: the group column IS the
-    final dictionary, and the state column wraps the kernels'
-    ``emit_buf`` flat (buf, offs) pair into a BinaryArray — no per-group
-    Python bytes objects on either side. States are byte-identical to
-    the pandas route (pure set functions; gated by the direct-route
-    tests). Null group keys collect into a separate bucket emitted as
-    the LAST row (pandas factorize would slot NaN at first appearance —
-    row order is the only difference). Float group keys take the pandas
-    route instead: Arrow hashes NaN/-0.0 bitwise, pandas by value."""
+    """``mapInArrow`` twin of the pandas direct build for one hashable,
+    non-float group column: the same coder and kernels, with Arrow's
+    ``dictionary_encode`` as the encode step. Input batches never convert
+    to pandas, and the output RecordBatch is assembled zero-copy: the
+    group column IS the coder's final dictionary, and each state column
+    wraps the kernel's ``emit_buf`` (buf, offs) pair into a BinaryArray.
+    States are byte-identical to the pandas route (gated by the
+    direct-route tests). Null group keys collect into a separate bucket
+    emitted as the LAST row (pandas factorize slots NaN at first
+    appearance — row order is the only difference). Float group keys take
+    the pandas route: Arrow hashes NaN/-0.0 bitwise, pandas by value."""
     gcol = group_cols[0]
 
     def fn(batches):
         import pyarrow as pa
 
-        keys_arr = None
-        n_rows = np.empty(0, dtype=np.int64)
-        accs = {s.name: kernel.init_acc() for s in specs}
-        null_pay: dict[str, list] = {s.name: [] for s in specs}
-        null_n = 0
-        pend_uniq: list = []
-        pend_codes: list = []
-        pend_pay: dict[str, list] = {s.name: [] for s in specs}
-        pend_n = 0
-        out_fields = None
-
-        def consolidate():
-            nonlocal keys_arr, n_rows, pend_uniq, pend_codes, pend_n
-            if not pend_uniq:
-                return
-            parts = ([] if keys_arr is None else [keys_arr]) + pend_uniq
-            enc = pa.concat_arrays(parts).dictionary_encode()
-            codes = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-            keys_arr = enc.dictionary
-            offs = np.zeros(len(parts) + 1, dtype=np.int64)
-            np.cumsum([len(u) for u in parts], out=offs[1:])
-            base = 0 if len(parts) > len(pend_uniq) else -1  # skip keys_arr slot
-            g_all = np.concatenate(
-                [
-                    codes[offs[base + i + 1] : offs[base + i + 2]][bl]
-                    for i, bl in enumerate(pend_codes)
-                ]
-            )
-            if len(keys_arr) > n_rows.size:
-                n_rows = np.concatenate(
-                    [n_rows, np.zeros(len(keys_arr) - n_rows.size, dtype=np.int64)]
-                )
-            n_rows += np.bincount(g_all, minlength=n_rows.size)
-            for s in specs:
-                accs[s.name] = kernel.absorb_payloads(
-                    accs[s.name], s, g_all, np.concatenate(pend_pay[s.name])
-                )
-                pend_pay[s.name].clear()
-            pend_uniq, pend_codes, pend_n = [], [], 0
-
+        coder = _KeyCoder(_pa_encode)
+        cols = {s.state_col: _KernelCol(kernel, s) for s in specs}
+        null_pay: dict[str, list] = {c: [] for c in cols}
+        key_type = None
         for rb in batches:
             if rb.num_rows == 0:
                 continue
-            if out_fields is None:
-                out_fields = {f.name: f.type for f in rb.schema}
-            garr = rb.column(rb.schema.get_field_index(gcol))
-            hs = {}
+            garr = rb.column(gcol)
+            key_type = garr.type
+            pay = {}
             for s in specs:
-                harr = rb.column(rb.schema.get_field_index(col_map[s.name]["h"]))
+                harr = rb.column(col_map[s.name]["h"])
                 if harr.null_count:
                     harr = harr.fill_null(0)
-                hs[s.name] = harr.to_numpy(zero_copy_only=False).view(np.uint64)
-            enc = garr.dictionary_encode()
-            bl_codes = enc.indices.fill_null(-1).to_numpy(zero_copy_only=False).astype(np.int64)
+                h = harr.to_numpy(zero_copy_only=False).view(np.uint64)
+                pay[s.state_col] = kernel.row_payloads(s, h)
+            codes, uniques = _pa_encode([garr])
             if garr.null_count:
-                nulls = bl_codes < 0
-                null_n += int(nulls.sum())
-                for s in specs:
-                    null_pay[s.name].append(
-                        kernel.row_payloads(s, hs[s.name][nulls])
-                    )
-                keep = ~nulls
-                bl_codes = bl_codes[keep]
-                for s in specs:
-                    hs[s.name] = hs[s.name][keep]
-                if not bl_codes.size:
+                keep = codes >= 0
+                for c in cols:
+                    null_pay[c].append(pay[c][~keep])
+                    pay[c] = pay[c][keep]
+                codes = codes[keep]
+                if not codes.size:
                     continue
-            pend_uniq.append(enc.dictionary)
-            pend_codes.append(bl_codes)
-            for s in specs:
-                pend_pay[s.name].append(kernel.row_payloads(s, hs[s.name]))
-            pend_n += len(bl_codes)
-            if pend_n >= _FOLD_ROWS:
-                consolidate()
-        consolidate()
-        n = 0 if keys_arr is None else len(keys_arr)
-        if n == 0 and null_n == 0:
+            if coder.add(uniques, codes, None, pay, sum(p.nbytes for p in pay.values())):
+                _fold(coder, cols)
+        _fold(coder, cols)
+        n = len(coder)
+        n_null = sum(p.size for p in null_pay[next(iter(cols))])
+        if n == 0 and n_null == 0:
             return
-        key_out = keys_arr if keys_arr is not None else pa.array([], type=out_fields[gcol])
-        nr = n_rows[:n]
-        if null_n:
+        keys = coder.keys if n else pa.array([], type=key_type)
+        nr = coder.n_rows[:n]
+        if n_null:
             # null group emitted last: absorb its payloads under code n
-            key_out = pa.concat_arrays(
-                [key_out, pa.array([None], type=key_out.type)]
-            )
-            nr = np.concatenate([nr, [null_n]])
-            for s in specs:
-                gg = np.full(
-                    sum(p.size for p in null_pay[s.name]), n, dtype=np.int64
-                )
-                accs[s.name] = kernel.absorb_payloads(
-                    accs[s.name], s, gg, np.concatenate(null_pay[s.name])
-                )
+            keys = pa.concat_arrays([keys, pa.array([None], type=keys.type)])
+            nr = np.concatenate([nr, [n_null]])
+            for c, acc in cols.items():
+                acc.absorb(np.full(n_null, n, dtype=np.int64), null_pay[c])
             n += 1
-        bufs = {s.name: kernel.emit_buf(accs[s.name], s, n) for s in specs}
+        bufs = {c: acc.emit_buf(n) for c, acc in cols.items()}
         start = 0
         while start < n:
             stop = n
-            for s in specs:  # keep each chunk's state bytes under int32 offsets
-                offs = bufs[s.name][1]
-                stop = min(
-                    stop, int(np.searchsorted(offs, offs[start] + _EMIT_BYTES)) - 1
-                )
+            for _, offs in bufs.values():  # keep each chunk under int32 offsets
+                stop = min(stop, int(np.searchsorted(offs, offs[start] + _EMIT_BYTES)) - 1)
             stop = max(stop, start + 1)
-            arrays = [key_out.slice(start, stop - start)]
-            names = [gcol]
-            arrays.append(pa.array(nr[start:stop], type=pa.int64()))
-            names.append(_NROWS_COL)
-            for s in specs:
-                buf, offs = bufs[s.name]
+            arrays = [keys.slice(start, stop - start), pa.array(nr[start:stop], type=pa.int64())]
+            for c, (buf, offs) in bufs.items():
+                if offs[stop] - offs[start] > _INT32_MAX:
+                    raise ValueError(
+                        f"grouped_sketch: state column {c!r} holds a "
+                        f"{int(offs[stop] - offs[start])}-byte group state, past the "
+                        "2^31-byte offsets of an Arrow binary column"
+                    )
                 rel = (offs[start : stop + 1] - offs[start]).astype(np.int32)
-                chunk = buf[offs[start] : offs[stop]]
+                chunk = np.ascontiguousarray(buf[offs[start] : offs[stop]])
                 arrays.append(
                     pa.Array.from_buffers(
-                        pa.binary(),
-                        stop - start,
-                        [None, pa.py_buffer(rel), pa.py_buffer(np.ascontiguousarray(chunk))],
+                        pa.binary(), stop - start, [None, pa.py_buffer(rel), pa.py_buffer(chunk)]
                     )
                 )
-                names.append(s.state_col)
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
+            yield pa.RecordBatch.from_arrays(arrays, names=[gcol, _NROWS_COL, *bufs])
             start = stop
 
     return fn
@@ -805,40 +669,35 @@ def grouped_sketch(
     group_cols: list[str],
     specs: list[SketchSpec],
     salt_buckets: int | None = None,
-    salt_cols: list[str] | None = None,  # obsolete, ignored (see module doc)
-    salt_seed: int = 0xBEEF,
     max_states_per_partition: int = 1 << 16,
     pre_partial: bool | None = None,
 ) -> DataFrame:
     """Per-group sketch states: returns one row per group with
     ``group_cols + [n_rows] + state_<name> binary`` columns.
 
-    Rows never shuffle: partition-local partial states are built in one
-    streaming pass, then only states move. ``salt_buckets=S`` adds a
-    pre-merge level on (key, partition mod S) to bound per-key fan-in on
-    very wide scans; the default (None) derives S from the scan's
-    partition count so fan-in stays ~256 at any width.
+    Rows never shuffle on the generic route: partition-local partial
+    states are built in one streaming pass, then only states move.
+    ``salt_buckets=S`` adds a pre-merge level on (key, partition mod S)
+    to bound per-key fan-in on very wide scans; the default (None)
+    derives S from the scan's partition count so fan-in stays ~256 at any
+    width.
 
-    All-HLL spec lists take a fully vectorized route instead: the packed
-    partial builder, one hash repartition on the group columns, and a
-    partition-wide register-max merge (`_vec_merge_builder`) — no per-key
-    ``applyInPandas`` and no salt level (the vectorized merge has no
-    per-key fan-in limit, so ``salt_buckets`` is moot there). Same bytes
-    out; the dispatch exists because a billion-group build (north_star:
-    distinct tools per conv_id) is output-bound, not group-loop-bound,
-    on this path.
+    All-HLL and all-KMV spec lists take a vectorized route instead (see
+    the module doc): no per-key ``applyInPandas`` and no salt level (the
+    streaming state merge has no per-key fan-in limit, so
+    ``salt_buckets`` is moot there). ``pre_partial`` picks its stage-1
+    shape (guide §2.3 "aggregate before you shuffle" — which cuts BOTH
+    ways):
 
-    ``pre_partial`` picks the vectorized route's stage-1 shape (r6,
-    guide §2.3 "aggregate before you shuffle" — which cuts BOTH ways):
-
-    * ``True``: map-side partial states (the r5 plan) — right when each
-      scan partition repeats its group keys, so partials shrink the
-      exchange (low-cardinality keys, clustered layouts).
+    * ``True``: map-side partial states, hash-repartitioned and merged
+      by rollup's streaming state fold — right when each scan partition
+      repeats its group keys, so partials shrink the exchange
+      (low-cardinality keys, clustered layouts).
     * ``False``: shuffle the raw (group, hash) projection once and build
       FINAL states in a single post-shuffle pass. At group cardinality
-      near the row count (the 20M-conv bench shape, rows scattered by a
-      round-robin write) the partial route wraps, exchanges, and
-      re-parses ~one state blob per INPUT row — measured 69s vs 31s.
+      near the row count (rows scattered by a round-robin write) the
+      partial route wraps, exchanges, and re-parses ~one state blob per
+      INPUT row — measured 69s vs 31s on the 20M-conv bench shape.
     * ``None`` (default): decide from a bounded distinct-ratio sample of
       the scan (``_preagg_dedup_ratio``; > 0.5 distinct per sampled row
       =>> direct). One tiny ``limit`` job; never a full scan.
@@ -848,40 +707,39 @@ def grouped_sketch(
     test_grouped_direct_route_byte_identical)."""
     kinds = {s.kind for s in specs}
     if len(kinds) == 1 and next(iter(kinds)) in _VEC_KERNELS:
+        from .rollup import _rollup_builder
+
         kernel = _VEC_KERNELS[next(iter(kinds))](specs)
         spec_cols, col_map = plan_columns(specs)
         prepared = df.select(*[F.col(c) for c in group_cols], *spec_cols)
         if pre_partial is None:
             pre_partial = _preagg_dedup_ratio(prepared, group_cols, 200_000) <= 0.5
+        out_schema = _grouped_schema(prepared, group_cols, specs, with_ord=False)
         if not pre_partial:
-            out_schema = _grouped_schema(prepared, group_cols, specs, with_ord=False)
             shuffled = prepared.repartition(*group_cols)
             from pyspark.sql.types import DoubleType, FloatType
 
             if len(group_cols) == 1 and not isinstance(
                 prepared.schema[group_cols[0]].dataType, (DoubleType, FloatType)
             ):
-                # Arrow-native build: keys never convert to PyObjects and
-                # the output assembles zero-copy (see builder docstring).
-                # Float keys stay on the pandas route — Arrow factorizes
-                # NaN/-0.0 bitwise, pandas by value.
                 return shuffled.mapInArrow(
                     _vec_direct_builder_arrow(specs, group_cols, col_map, kernel),
                     schema=out_schema,
                 )
             return shuffled.mapInPandas(
-                _vec_direct_builder(specs, group_cols, col_map, kernel),
+                _vec_row_builder(specs, group_cols, col_map, kernel, None),
                 schema=out_schema,
             )
         partials = prepared.mapInPandas(
-            _vec_partial_builder(specs, group_cols, col_map, max_states_per_partition, kernel),
+            _vec_row_builder(specs, group_cols, col_map, kernel, max_states_per_partition),
             schema=_grouped_schema(prepared, group_cols, specs, with_ord=True),
         )
-        out_schema = StructType([f for f in partials.schema.fields if f.name != _ORD_COL])
+        # HLL/KMV merges are order-insensitive: no sort before the fold
+        merge = _rollup_builder(group_cols, [s.state_col for s in specs], None, with_ord=False)
         return (
             partials.repartition(*group_cols)
             .drop(_ORD_COL)
-            .mapInPandas(_vec_merge_builder(specs, group_cols, kernel), schema=out_schema)
+            .mapInPandas(merge, schema=out_schema)
         )
     partials = _pre_merge_states(df, group_cols, specs, salt_buckets, max_states_per_partition)
     out_schema = StructType(

@@ -7,59 +7,62 @@ states instead of rescanning 10^12 turns.
 
 ``rollup_states`` has the same no-hot-key two-stage shape as the grouped
 build (operators/grouped.py): stage 1 folds each input partition's state
-rows into one partial per coarse key (mapInPandas, flush-capped memory),
-so a coarse key covering the whole table costs one partial per partition
-— never a single-task row pile-up; stage 2 hash-repartitions only those
-folded partials on the coarse key and merges each partition in ONE
-streaming pass, rows pre-sorted by (key, origin order) so
-merge-order-sensitive kinds (t-digest, KLL, cuckoo) apply partials in
-ascending partition order — the same determinism law as the grouped
-build, with no per-key pandas group materialization at any fan-in.
+rows into one partial per coarse key (flush-capped memory), so a coarse
+key covering the whole table costs one partial per partition — never a
+single-task row pile-up; stage 2 hash-repartitions only those folded
+partials on the coarse key and merges each partition in ONE streaming
+pass, rows pre-sorted by (key, origin order) so merge-order-sensitive
+kinds (t-digest, KLL, cuckoo) apply partials in ascending partition order
+— the same determinism law as the grouped build, with no per-key pandas
+group materialization at any fan-in.
 
-Column routing is detected executor-side from the blobs' own kind bytes:
-HLL and KMV columns delegate to the grouped build's vectorized kernels
-(`_HllKernel`/`_KmvKernel`: joined-buffer many-blob decode -> packed
-accumulator -> flat-buffer emit, no per-state-row Python), every other
-kind folds through the generic ``merge_blobs`` dispatch. Because HLL and
-KMV states are canonical pure set functions, rolling up fine-grained
-states is BYTE-identical to building the coarse states directly from the
-raw rows (gated by test + the rollup_day_to_type oracle query);
-order-sensitive kinds stay inside their published bounds.
+Both stages run the grouped build's pandas fold (``_fold_builder``: the
+shared deferred key coder, byte-budgeted consolidation) over ``_ColAcc``
+columns — the only vectorized state merge in the library; the grouped
+partial route runs stage 2 as its merge, unsorted, because its HLL/KMV
+merges do not depend on order. Column routing is detected executor-side
+from the blobs' own kind bytes: HLL and KMV columns fold through the
+grouped kernels (`_HllKernel`/`_KmvKernel`: joined-buffer many-blob
+decode -> packed accumulator -> flat-buffer emit, no per-state-row
+Python), every other kind folds through the generic ``merge_blobs``
+dispatch. Because HLL and KMV states are canonical pure set functions,
+rolling up fine-grained states is BYTE-identical to building the coarse
+states directly from the raw rows (gated by test + the rollup_day_to_type
+oracle query); order-sensitive kinds stay inside their published bounds.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 
 from ..sketches import codec
-from .grouped import _ORD_COL, _NROWS_COL, _VEC_KERNELS, _group_codes
+from .grouped import _NROWS_COL, _ORD_COL, _VEC_KERNELS, _fold_builder
 from .specs import SketchSpec, merge_blobs
 
 
-def _check_uniform_param(blobs, col: str, kind: str, expect: int | None):
+def _check_uniform_param(blobs: pa.Array, col: str, kind: str, expect: int | None):
     """All blobs of a rollup column must agree on the sizing parameter
     (HLL p at byte 8; KMV k as <u4 at bytes 8:12) — a mixed-parameter
-    merge would silently produce garbage registers, so it raises. Reads
-    only the header bytes (no joined-buffer build; the decode helpers do
-    that once, later), with an explicit length guard so a truncated blob
-    gets a contextful error instead of a bare gather IndexError."""
+    merge would silently produce garbage registers, so it raises. One
+    gather over the blobs' joined buffer, with an explicit length guard so
+    a truncated blob gets a contextful error instead of a bare gather
+    IndexError."""
+    flat, offs = codec.blob_buffers(blobs)
+    starts, lens = offs[:-1], np.diff(offs)
     need = 9 if kind == "hll" else 16
-    lens = np.fromiter((len(b) for b in blobs), count=len(blobs), dtype=np.int64)
     if int(lens.min()) < need:
         raise ValueError(
             f"rollup_states: column {col!r} holds a sketch blob too "
             f"short for a {kind} header ({int(lens.min())} < {need} bytes)"
         )
     if kind == "hll":
-        vals = np.fromiter((b[8] for b in blobs), count=len(blobs), dtype=np.int64)
+        vals = flat[starts + 8].astype(np.int64)
     else:
-        vals = np.frombuffer(b"".join(b[8:12] for b in blobs), dtype="<u4").astype(
-            np.int64
-        )
+        vals = flat[(starts[:, None] + np.arange(8, 12)).ravel()].view("<u4").astype(np.int64)
     if expect is None:
         expect = int(vals[0])
     if (vals != expect).any():
@@ -72,12 +75,14 @@ def _check_uniform_param(blobs, col: str, kind: str, expect: int | None):
 
 
 class _ColAcc:
-    """Per-column rollup accumulator, routed by the column's own kind
+    """Per-column state accumulator, routed by the column's own kind
     byte at first sight: 'hll' / 'kmv' delegate to the grouped build's
     vectorized kernels (one shared implementation of the packed fold and
     flat-buffer emit), anything else folds a {group code -> blob} dict
     through the generic ``merge_blobs`` dispatch (one Python merge per
-    STATE row — rollup inputs are state tables, never raw rows)."""
+    STATE row — rollup inputs are state tables, never raw rows).
+    Payloads arrive as one Arrow binary array per pending batch
+    (``_rollup_builder``)."""
 
     def __init__(self, col: str):
         self.col = col
@@ -87,22 +92,22 @@ class _ColAcc:
         self.spec: SketchSpec | None = None
         self.acc = None
 
-    def absorb(self, g: np.ndarray, blobs: list) -> None:
+    def absorb(self, g: np.ndarray, payloads: list) -> None:
+        blobs = pa.concat_arrays(payloads) if len(payloads) > 1 else payloads[0]
         # a null state cell (outer-joined or hand-built state table) is
         # documented as unsupported — name the column instead of dying
         # deep in the executor with a bare TypeError (ADVICE r5)
-        if any(b is None for b in blobs):
+        if blobs.null_count:
             raise ValueError(
                 f"rollup_states: column {self.col!r} contains null state blobs"
             )
         if self.kind is None:
-            k = codec.peek_kind(blobs[0])
+            k = codec.peek_kind(blobs[0].as_py())
             self.kind = {codec.KIND_HLL: "hll", codec.KIND_KMV: "kmv"}.get(k, "generic")
-            if self.kind == "generic":
-                self.acc = {}
+            self.reset()
         if self.kind == "generic":
             acc = self.acc
-            for code, blob in zip(g.tolist(), blobs):
+            for code, blob in zip(g.tolist(), blobs.to_pylist()):
                 acc[code] = merge_blobs(acc.get(code), blob)
             return
         self.param = _check_uniform_param(blobs, self.col, self.kind, self.param)
@@ -130,61 +135,26 @@ class _ColAcc:
 def _rollup_builder(
     group_cols: list[str], state_cols: list[str], cap: int | None, with_ord: bool
 ):
-    """Shared mapInPandas body for both rollup stages. Stage 1
-    (``with_ord=True``): flush-capped partials, one per (partition,
-    coarse key), tagged with the deterministic merge order key. Stage 2
-    (``with_ord=False``): one streaming pass over a hash-partitioned,
-    (key, ord)-sorted partition — every group's partials fold in
-    ascending origin order (the grouped build's determinism law) with no
-    per-key pandas group materialization."""
+    """mapInPandas body for both rollup stages and the grouped partial
+    route's merge. Stage 1 (``with_ord=True``): flush-capped partials, one
+    per (partition, coarse key), tagged with the deterministic merge
+    order key. Stage 2 (``with_ord=False``): one streaming pass over a
+    hash-partitioned partition — pending batches fold in row order, so a
+    (key, ord)-sorted input applies every group's partials in ascending
+    origin order (the grouped build's determinism law) with no per-key
+    pandas group materialization. Blobs convert to one Arrow binary array
+    per batch (C-level), which the checks and decoders read in place."""
 
-    def fn(batches):
-        from pyspark import TaskContext
+    def stash(pdf):
+        pay = {
+            c: pa.array(pdf[c], type=pa.large_binary(), from_pandas=True) for c in state_cols
+        }
+        rows = pdf[_NROWS_COL].to_numpy(dtype=np.int64)
+        return rows, pay, sum(a.nbytes for a in pay.values())
 
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else -1
-        flush = 0
-        keys_index = None
-        n_rows = np.empty(0, dtype=np.int64)
-        cols = {c: _ColAcc(c) for c in state_cols}
-
-        def emit(ord_key):
-            n = len(keys_index)
-            if len(group_cols) == 1:
-                out = pd.DataFrame({group_cols[0]: keys_index})
-            else:
-                out = keys_index.to_frame(index=False)
-                out.columns = list(group_cols)
-            if ord_key is not None:
-                out[_ORD_COL] = ord_key
-            out[_NROWS_COL] = n_rows[:n]
-            for c in state_cols:
-                out[c] = cols[c].emit_blobs(n)
-            return out
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            g, keys_index = _group_codes(pdf, group_cols, keys_index)
-            if len(keys_index) > n_rows.size:
-                n_rows = np.concatenate(
-                    [n_rows, np.zeros(len(keys_index) - n_rows.size, dtype=np.int64)]
-                )
-            if _NROWS_COL in pdf.columns:
-                np.add.at(n_rows, g, pdf[_NROWS_COL].to_numpy(dtype=np.int64))
-            for c in state_cols:
-                cols[c].absorb(g, list(pdf[c]))
-            if cap is not None and len(keys_index) > cap:
-                yield emit((pid << 20) | flush)
-                flush += 1
-                keys_index = None
-                n_rows = np.empty(0, dtype=np.int64)
-                for c in state_cols:
-                    cols[c].reset()
-        if keys_index is not None and len(keys_index):
-            yield emit(((pid << 20) | flush) if with_ord else None)
-
-    return fn
+    return _fold_builder(
+        group_cols, cap, with_ord, lambda: {c: _ColAcc(c) for c in state_cols}, stash
+    )
 
 
 def rollup_states(
@@ -232,7 +202,9 @@ def rollup_states(
     fields.append(StructField(_NROWS_COL, LongType()))
     fields += [StructField(c, BinaryType()) for c in state_cols]
     part_schema = StructType(fields)
-    keep = all_group + ([_NROWS_COL] if _NROWS_COL in df.columns else []) + state_cols
+    if _NROWS_COL not in df.columns:
+        df = df.withColumn(_NROWS_COL, F.lit(0).cast(LongType()))
+    keep = all_group + [_NROWS_COL] + state_cols
     partials = df.select(*keep).mapInPandas(
         _rollup_builder(all_group, state_cols, max_states_per_partition, with_ord=True),
         schema=part_schema,

@@ -80,7 +80,7 @@ def hll_grouped_users_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     states = grouped_sketch(
         ev, ["event_type"], [SketchSpec("u", "hll", key_cols=("user_id",))],
-        salt_buckets=8, salt_cols=["user_id"],
+        salt_buckets=8,
     ).toPandas()
     exact = {
         r["event_type"]: r["n"]
@@ -122,9 +122,10 @@ def hll_grouped_orders_by_supplier(spark: SparkSession, sf_dir: str) -> DataFram
 def hll_grouped_parts_by_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """High-cardinality grouped build — one group per l_orderkey (~15k at
     sf0.01, scales with SF): distinct parts per order. Exercises the
-    all-HLL vectorized route (packed partial builder + partition-wide
-    register-max merge, operators/grouped.py::_vec_merge_builder) where
-    output rows ~ input rows / 4. Gate: per-group estimates within
+    all-HLL vectorized routes (deferred-coded packed build,
+    operators/grouped.py::_vec_row_builder; the partial route merges with
+    rollup's streaming state fold, operators/rollup.py::_rollup_builder)
+    where output rows ~ input rows / 4. Gate: per-group estimates within
     max(2, 3sigma*n) of exact — at tiny per-group n the only error source
     is register collisions (P ~ n^2/2m per group), an ABSOLUTE error of 1
     per collision, so the relative 1.04/sqrt(m) bound is the wrong model
@@ -155,7 +156,7 @@ def hll_grouped_parts_by_order(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def kmv_grouped_parts_by_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """High-cardinality grouped KMV (vectorized (group, hash) k-min route,
-    operators/grouped.py::_vec_partial_builder + _KmvKernel): distinct parts per
+    operators/grouped.py::_vec_row_builder + _KmvKernel): distinct parts per
     l_orderkey. Per-order distinct counts sit far below k=1024, where a
     KMV sketch holds EVERY distinct hash — so the oracle demands exact
     equality of the estimates, not a bound (64-bit hash collisions are
@@ -401,7 +402,6 @@ def grouped_quantiles_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
             SketchSpec("kl", "kll", value_col="value", params={"k": 200}),
         ],
         salt_buckets=4,
-        salt_cols=["event_id"],
     ).toPandas()
     qs = (("0.5", 0.5), ("0.99", 0.99))
     est_rows = []

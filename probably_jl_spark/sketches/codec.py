@@ -14,6 +14,8 @@ from __future__ import annotations
 
 import struct
 
+import numpy as np
+
 MAGIC = b"PJS1"
 
 KIND_HLL = 1
@@ -58,3 +60,20 @@ def peek_version(data: bytes) -> int:
     if magic != MAGIC:
         raise ValueError(f"bad magic {magic!r}")
     return version
+
+
+def blob_buffers(blobs) -> tuple[np.ndarray, np.ndarray]:
+    """(flat uint8 buffer, int64 offsets) of many blobs: blob i is
+    ``flat[offs[i]:offs[i+1]]``. A pyarrow (large_)binary array is read in
+    place; any other sequence of bytes is joined once."""
+    if hasattr(blobs, "buffers"):
+        import pyarrow as pa
+
+        _, ob, db = blobs.buffers()
+        otype = np.int64 if pa.types.is_large_binary(blobs.type) else np.int32
+        offs = np.frombuffer(ob, dtype=otype)[blobs.offset : blobs.offset + len(blobs) + 1]
+        flat = np.frombuffer(db, dtype=np.uint8) if db is not None else np.zeros(0, np.uint8)
+        return flat, offs.astype(np.int64)
+    offs = np.zeros(len(blobs) + 1, dtype=np.int64)
+    np.cumsum(np.fromiter(map(len, blobs), count=len(blobs), dtype=np.int64), out=offs[1:])
+    return np.frombuffer(b"".join(blobs), dtype=np.uint8), offs

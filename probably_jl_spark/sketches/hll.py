@@ -407,8 +407,8 @@ def packed_entries_many_to_bytes(
 
 def packed_entries_many_from_bytes(blobs) -> tuple[np.ndarray, np.ndarray]:
     """(per-blob entry counts int64, entries uint32 concatenated in blob
-    order) for a sequence of HLL state blobs — the decode half of the
-    grouped vectorized route's state merge. Sparse-v2 blobs (the route's
+    order) for a sequence (or pyarrow binary array) of HLL state blobs —
+    the decode half of the grouped vectorized route's state merge. Sparse-v2 blobs (the route's
     own wire) parse in one gather over the joined buffer; anything else
     (dense v1, legacy) falls back to the per-blob validating decoder and
     splices in order. ~11x faster than per-blob ``unwrap`` at merge
@@ -418,10 +418,8 @@ def packed_entries_many_from_bytes(blobs) -> tuple[np.ndarray, np.ndarray]:
     n = len(blobs)
     if n == 0:
         return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.uint32)
-    lens = np.fromiter((len(b) for b in blobs), count=n, dtype=np.int64)
-    flat = np.frombuffer(b"".join(blobs), dtype=np.uint8)
-    offs = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(lens, out=offs[1:])
+    flat, offs = codec.blob_buffers(blobs)
+    lens = np.diff(offs)
     starts = offs[:-1]
     head = np.frombuffer(_PREFIX_V2, dtype=np.uint8)
     is_v2 = (lens >= 9) & ((lens - 9) % 4 == 0)
@@ -433,7 +431,7 @@ def packed_entries_many_from_bytes(blobs) -> tuple[np.ndarray, np.ndarray]:
     other = np.flatnonzero(~is_v2)
     dec = {}
     for i in other.tolist():
-        dec[i] = packed_entries_from_bytes(blobs[i])[1]
+        dec[i] = packed_entries_from_bytes(flat[offs[i] : offs[i + 1]].tobytes())[1]
         counts[i] = dec[i].size
     out_b = np.zeros(n + 1, dtype=np.int64)
     np.cumsum(counts, out=out_b[1:])

@@ -114,17 +114,15 @@ def mins_many_to_bytes(k: int, mins: np.ndarray, bounds: np.ndarray) -> list:
 
 def mins_many_from_bytes(blobs) -> tuple[np.ndarray, np.ndarray]:
     """(per-blob min counts int64, mins uint64 concatenated in blob order)
-    — vectorized decode of a sequence of KMV state blobs; blobs that
-    don't match this encoder's own layout fall back to the validating
-    scalar decoder and splice in order. k is NOT returned (callers own
+    — vectorized decode of a sequence (or pyarrow binary array) of KMV
+    state blobs; blobs that don't match this encoder's own layout fall
+    back to the validating scalar decoder and splice in order. k is NOT returned (callers own
     both wire ends; same contract as the scalar absorb loop)."""
     n = len(blobs)
     if n == 0:
         return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.uint64)
-    lens = np.fromiter((len(b) for b in blobs), count=n, dtype=np.int64)
-    flat = np.frombuffer(b"".join(blobs), dtype=np.uint8)
-    offs = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(lens, out=offs[1:])
+    flat, offs = codec.blob_buffers(blobs)
+    lens = np.diff(offs)
     starts = offs[:-1]
     head = np.frombuffer(_PREFIX, dtype=np.uint8)
     ok = lens >= 16
@@ -142,7 +140,7 @@ def mins_many_from_bytes(blobs) -> tuple[np.ndarray, np.ndarray]:
     counts[~ok] = 0
     dec = {}
     for i in np.flatnonzero(~ok).tolist():
-        dec[i] = mins_from_bytes(blobs[i])[1]
+        dec[i] = mins_from_bytes(flat[offs[i] : offs[i + 1]].tobytes())[1]
         counts[i] = dec[i].size
     out_b = np.zeros(n + 1, dtype=np.int64)
     np.cumsum(counts, out=out_b[1:])

@@ -1,0 +1,160 @@
+"""The shared deferred key coder of the vectorized grouped and rollup
+builders (operators/grouped.py::_KeyCoder), driven without Spark: codes
+match one factorize over all keys, flush points match a per-batch
+live-key count, the byte budget never changes a builder's output, and the
+Arrow emitter refuses a state past int32 offsets."""
+
+import numpy as np
+import pandas as pd
+import pyarrow as pa
+import pytest
+
+from probably_jl_spark.operators import grouped
+from probably_jl_spark.operators.grouped import (
+    _KeyCoder,
+    _fold_builder,
+    _pd_encode,
+    _pd_keys,
+    _vec_direct_builder_arrow,
+)
+from probably_jl_spark.operators.rollup import _rollup_builder
+from probably_jl_spark.operators.specs import SketchSpec
+
+
+def _batches(df: pd.DataFrame, size: int) -> list[pd.DataFrame]:
+    return [df.iloc[i : i + size].reset_index(drop=True) for i in range(0, len(df), size)]
+
+
+def _coder_codes(batches, group_cols, fold_after) -> np.ndarray:
+    """Per-row global codes from the coder, consolidating after the batch
+    indexes in ``fold_after`` and at the end."""
+    coder = _KeyCoder(_pd_encode)
+    out = []
+    for i, pdf in enumerate(batches):
+        codes, uniques = _pd_encode([_pd_keys(pdf, group_cols)])
+        coder.add(uniques, codes, None, {}, 0)
+        if i in fold_after:
+            out.append(coder.consolidate()[0])
+    out.append(coder.consolidate()[0])
+    return np.concatenate(out)
+
+
+@pytest.mark.parametrize("fold_after", [set(), {0}, {1, 2, 4}, set(range(20))])
+def test_coder_codes_equal_one_factorize(fold_after):
+    rs = np.random.default_rng(7)
+    n = 1000
+    f = rs.integers(0, 40, n).astype(np.float64)
+    f[rs.random(n) < 0.1] = np.nan
+    df = pd.DataFrame({"f": f, "s": rs.choice(["a", "b", "c"], n)})
+    batches = _batches(df, 97)
+
+    got = _coder_codes(batches, ["f"], fold_after)
+    want, uniq = pd.factorize(df["f"], use_na_sentinel=False)
+    assert (got == want).all()
+    assert np.isnan(uniq).sum() == 1  # NaN keys form one group
+
+    got = _coder_codes(batches, ["f", "s"], fold_after)
+    want, _ = pd.MultiIndex.from_frame(df[["f", "s"]]).factorize(use_na_sentinel=False)
+    assert (got == want).all()
+
+
+def _flushes(builder, batches) -> list[tuple[list, list]]:
+    return [(list(o["k"]), list(o["n_rows"])) for o in builder(iter(batches))]
+
+
+def test_coder_flushes_on_live_count_batches():
+    """Under a cap, the fold builder flushes on exactly the batches where
+    a per-batch live-key count passes the cap, with the same keys (first-
+    seen order) and row counts."""
+    rs = np.random.default_rng(3)
+    df = pd.DataFrame({"k": rs.integers(0, 300, 5000)})
+    batches = _batches(df, 64)
+
+    def stash(pdf):
+        return None, {}, 0
+
+    for cap in (1, 10, 100, 250, 1000):
+        want, live = [], {}
+        for pdf in batches:
+            for k in pdf["k"]:
+                live[k] = live.get(k, 0) + 1
+            if len(live) > cap:
+                want.append((list(live), list(live.values())))
+                live = {}
+        if live:
+            want.append((list(live), list(live.values())))
+        got = _flushes(_fold_builder(["k"], cap, True, dict, stash), batches)
+        assert got == want, cap
+
+
+def _state_batches() -> list[pd.DataFrame]:
+    """State rows with repeated keys: HLL, KMV and (generic) CMS columns."""
+    from probably_jl_spark.sketches.cms import CountMinSketch
+    from probably_jl_spark.sketches.hll import HyperLogLog
+    from probably_jl_spark.sketches.kmv import KMV
+
+    rs = np.random.default_rng(11)
+    rows = []
+    for i in range(300):
+        h = rs.integers(0, 2**64, rs.integers(1, 50), dtype=np.uint64)
+        hll, kmv, cms = HyperLogLog(10), KMV(32), CountMinSketch(64, 3)
+        hll.update_hashes(h)
+        kmv.update_hashes(h)
+        cms.update_hashes(h)
+        rows.append((f"k{rs.integers(0, 40)}", int(h.size), hll.to_bytes(), kmv.to_bytes(), cms.to_bytes()))
+    df = pd.DataFrame(rows, columns=["k", "n_rows", "u", "m", "c"])
+    return _batches(df, 23)
+
+
+def test_merge_builder_output_ignores_byte_budget(monkeypatch):
+    """The state merge consolidating on every batch (a one-byte budget)
+    emits the same keys, row counts and state bytes as with one
+    consolidation per partition."""
+    batches = _state_batches()
+    calls = []
+    real = _KeyCoder.consolidate
+
+    def counting(self):
+        calls.append(len(self._pend))
+        return real(self)
+
+    monkeypatch.setattr(_KeyCoder, "consolidate", counting)
+    one = list(_rollup_builder(["k"], ["u", "m", "c"], None, False)(iter(batches)))
+    assert [c for c in calls if c] == [len(batches)]
+
+    calls.clear()
+    monkeypatch.setattr(grouped, "_FOLD_BYTES", 1)
+    every = list(_rollup_builder(["k"], ["u", "m", "c"], None, False)(iter(batches)))
+    assert [c for c in calls if c] == [1] * len(batches)
+
+    assert len(one) == len(every) == 1
+    pd.testing.assert_frame_equal(one[0], every[0])
+
+
+class _HugeStateKernel:
+    """Kernel stub whose single group claims a 2^31 + 8 byte state."""
+
+    @staticmethod
+    def init_acc():
+        return None
+
+    def row_payloads(self, spec, h):
+        return h
+
+    def absorb_payloads(self, acc, spec, g, pay):
+        return acc
+
+    def emit_buf(self, acc, spec, n):
+        return np.zeros(16, dtype=np.uint8), np.array([0, (1 << 31) + 8], dtype=np.int64)
+
+
+def test_arrow_emit_refuses_state_past_int32_offsets():
+    specs = [SketchSpec("u", "hll", key_cols=("user_id",))]
+    col_map = {"u": {"h": "__h0"}}
+    rb = pa.RecordBatch.from_arrays(
+        [pa.array(["a", "a"]), pa.array([1, 2], type=pa.int64())],
+        names=["g", "__h0"],
+    )
+    fn = _vec_direct_builder_arrow(specs, ["g"], col_map, _HugeStateKernel())
+    with pytest.raises(ValueError, match=r"grouped_sketch: state column 'state_u'"):
+        list(fn(iter([rb])))

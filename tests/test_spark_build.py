@@ -129,7 +129,7 @@ def test_grouped_and_salted_agree(spark, events):
         .sort_index()
     )
     salted = (
-        grouped_sketch(events, ["event_type"], specs, salt_buckets=8, salt_cols=["user_id"])
+        grouped_sketch(events, ["event_type"], specs, salt_buckets=8)
         .toPandas()
         .set_index("event_type")
         .sort_index()
@@ -862,3 +862,41 @@ def test_tree_merge_heavy_states_keep_tree():
     assert 256 * _est_partial_bytes(heavy) > _DRIVER_MERGE_MAX_BYTES
     light = [SketchSpec("u", "hll", key_cols=("u",))]
     assert 256 * _est_partial_bytes(light) <= _DRIVER_MERGE_MAX_BYTES
+
+
+def test_tree_merge_empty_partials(spark, events):
+    """Zero partials fold to empty sketches and zero rows on the driver
+    instead of decoding a missing state."""
+    specs = [
+        SketchSpec("u", "hll", key_cols=("user_id",)),
+        SketchSpec("td", "tdigest", value_col="value"),
+    ]
+    empty = build_partials(events, specs, lineage=False).filter(F.lit(False))
+    out = tree_merge(empty, specs)
+    assert out["__n_rows"] == 0
+    for s in specs:
+        assert out[s.name].to_bytes() == s.new().to_bytes()
+
+
+def test_grouped_route_plan_nodes(spark, events):
+    """Each grouped_sketch route keeps the executed-plan shape the
+    benchmark's route check reads: direct = MapInArrow; partial =
+    MapInPandas with no MapInArrow and no Sort (its merge is
+    order-insensitive); generic = FlatMapGroupsInPandas."""
+    import re
+
+    hll = [SketchSpec("u", "hll", key_cols=("user_id",))]
+    mixed = hll + [SketchSpec("td", "tdigest", value_col="value")]
+
+    def plan(df):
+        df.collect()
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    direct = plan(grouped_sketch(events, ["event_type"], hll, pre_partial=False))
+    assert "MapInArrow" in direct and "FlatMapGroupsInPandas" not in direct
+    partial = plan(grouped_sketch(events, ["event_type"], hll, pre_partial=True))
+    assert "MapInPandas" in partial
+    assert "MapInArrow" not in partial and "FlatMapGroupsInPandas" not in partial
+    assert not re.search(r"\bSort\b", partial)
+    generic = plan(grouped_sketch(events, ["event_type"], mixed))
+    assert "FlatMapGroupsInPandas" in generic
