@@ -19,6 +19,7 @@ exactly one hash shuffle on the (salted) group key.
 
 from __future__ import annotations
 
+import functools
 import math
 import time
 from dataclasses import dataclass
@@ -188,12 +189,28 @@ _DRIVER_MERGE_MAX_BYTES = 64 << 20
 
 
 def _est_partial_bytes(specs: list[SketchSpec]) -> int:
-    """Upper-ish bound on one partial row's serialized state bytes: the
-    empty sketch's wire (full-table kinds — bloom/cms/cuckoo — serialize
-    their whole array when empty) plus 64KB slack per spec for kinds
-    whose wire grows with content (sparse HLL <= 16KB dense at p14,
-    t-digest/KLL/MG buffers)."""
-    return sum(len(s.new().to_bytes()) + (64 << 10) for s in specs)
+    """Upper bound on one partial row's serialized state bytes, sized per
+    kind from the spec's parameters: the empty wire (header; bloom, cms
+    and cuckoo wires are their whole fixed-size table) plus the most the
+    wire grows with content — dense HLL registers (the sparse wire
+    densifies at m/8 entries), k KMV hashes, k MG (key, count) pairs,
+    <= delta t-digest (mean, weight) centroids, and KLL's <= 3k + 2H items
+    plus H level sizes for H <= 64 levels."""
+    total = 0
+    for s in specs:
+        sk = s.new()
+        total += len(sk.to_bytes())
+        if s.kind == "hll":
+            total += 1 << sk.p
+        elif s.kind == "kmv":
+            total += 8 * sk.k
+        elif s.kind == "mg":
+            total += 16 * sk.k
+        elif s.kind == "tdigest":
+            total += 16 * math.ceil(sk.delta)
+        elif s.kind == "kll":
+            total += 8 * (3 * sk.k + 2 * 64) + 4 * 64
+    return total
 
 
 def tree_merge(partials: DataFrame, specs: list[SketchSpec], depth: int | None = None) -> dict:
@@ -208,13 +225,17 @@ def tree_merge(partials: DataFrame, specs: list[SketchSpec], depth: int | None =
     deterministic for the merge-order-sensitive kinds (t-digest/KLL/MG),
     exactly like the grouped route's ordered merges. Order-insensitive
     kinds (HLL/CMS/Bloom/KMV) are byte-identical either way
-    (test_distributed_equals_local)."""
+    (test_distributed_equals_local). Zero partials give empty sketches
+    and ``__n_rows`` 0 on both paths."""
     state_cols = [s.state_col for s in specs]
     sel = partials.select(*state_cols, "n_rows")
     rdd = sel.rdd
     nparts = max(1, rdd.getNumPartitions())
 
     def merge_rows(a, b):
+        # None is the identity: an empty partition or input folds to None
+        if a is None or b is None:
+            return b if a is None else a
         merged = [merge_blobs(x, y) for x, y in zip(a[:-1], b[:-1])]
         return (*merged, a[-1] + b[-1])
 
@@ -223,26 +244,20 @@ def tree_merge(partials: DataFrame, specs: list[SketchSpec], depth: int | None =
         and nparts <= _DRIVER_MERGE_MAX_PARTIALS
         and nparts * _est_partial_bytes(specs) <= _DRIVER_MERGE_MAX_BYTES
     ):
-        rows = [tuple(r) for r in sel.collect()]
-        if not rows:  # no partials: every sketch empty, like an empty build
-            return {**{s.name: s.new() for s in specs}, "__n_rows": 0}
-        row = rows[0]
-        for nxt in rows[1:]:
-            row = merge_rows(row, nxt)
-        out = {s.name: sketch_from_bytes(row[i]) for i, s in enumerate(specs)}
-        out["__n_rows"] = row[-1]
-        return out
-
-    # NB: do NOT coalesce() here — a non-shuffle coalesce propagates into
-    # the mapInPandas stage and would serialize the build itself; the tree
-    # adds only ~sqrt(nparts) reduce tasks on top of the scan tasks.
-    if depth is None:
-        # each extra level is one more scheduling wave (~0.5s fixed): depth
-        # 2 handles thousands of ≤MB state rows; go deeper only at real
-        # cluster fan-in (100k+ partials)
-        depth = 2 if nparts <= 2048 else max(3, int(math.ceil(math.log(nparts, 32))))
-
-    row = rdd.map(tuple).treeReduce(merge_rows, depth=depth)
+        row = functools.reduce(merge_rows, (tuple(r) for r in sel.collect()), None)
+    else:
+        # NB: do NOT coalesce() here — a non-shuffle coalesce propagates
+        # into the mapInPandas stage and would serialize the build itself;
+        # the tree adds only ~sqrt(nparts) reduce tasks on top of the scan
+        # tasks.
+        if depth is None:
+            # each extra level is one more scheduling wave (~0.5s fixed):
+            # depth 2 handles thousands of ≤MB state rows; go deeper only
+            # at real cluster fan-in (100k+ partials)
+            depth = 2 if nparts <= 2048 else max(3, int(math.ceil(math.log(nparts, 32))))
+        row = rdd.map(tuple).treeAggregate(None, merge_rows, merge_rows, depth=depth)
+    if row is None:  # no partials: every sketch empty, like an empty build
+        return {**{s.name: s.new() for s in specs}, "__n_rows": 0}
     out = {s.name: sketch_from_bytes(row[i]) for i, s in enumerate(specs)}
     out["__n_rows"] = row[-1]
     return out

@@ -14,8 +14,10 @@ each route does two jobs only: assign group codes, then fold states.
   and the kind's kernel folds (code, payload) arrays. The partial route
   builds map-side partials, hash-repartitions them and merges them with
   rollup's state fold (``operators/rollup.py::_rollup_builder``, the only
-  vectorized state merge); the direct route shuffles raw (key, hash) rows
-  once and emits final states (``mapInArrow`` for one non-float key).
+  vectorized state merge), all in ``mapInPandas``. The direct route
+  shuffles raw (key, hash) rows once and emits final states from one
+  ``mapInArrow`` builder for every key shape: Arrow ``dictionary_encode``
+  codes each key column and the codes fold pairwise across columns.
 
 The coder stashes each batch's own factorized uniques and codes, and
 consolidates them with ONE factorize over known keys + stashed uniques
@@ -44,7 +46,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import BinaryType, LongType, StructField, StructType
+from pyspark.sql.types import ArrayType, BinaryType, DoubleType, FloatType, LongType, MapType
+from pyspark.sql.types import StructField, StructType
 
 from .build import batch_arrays, plan_columns
 from .specs import SketchSpec, merge_blobs
@@ -306,12 +309,27 @@ def _pd_encode(parts: list) -> tuple[np.ndarray, pd.Index]:
 
 
 def _pa_encode(parts: list):
-    """Arrow twin of ``_pd_encode``: null keys get code -1."""
+    """Arrow twin of ``_pd_encode`` over struct arrays of the key columns.
+    Each column is dictionary-encoded, a null key coded at first sight as
+    in pandas; the per-column codes fold pairwise as ``codes * card +
+    codes_j``, re-encoded after each step, so codes stay below the row
+    count and the product below n² fits int64. The uniques are the
+    first-occurrence rows."""
     import pyarrow as pa
 
-    enc = (pa.concat_arrays(parts) if len(parts) > 1 else parts[0]).dictionary_encode()
-    idx = enc.indices.fill_null(-1) if enc.indices.null_count else enc.indices
-    return idx.to_numpy(zero_copy_only=False).astype(np.int64), enc.dictionary
+    keys = pa.concat_arrays(parts) if len(parts) > 1 else parts[0]
+    codes = None
+    for col in keys.flatten():
+        enc = col.dictionary_encode(null_encoding="encode")
+        c = enc.indices.to_numpy().astype(np.int64)
+        if codes is not None:
+            enc = pa.array(codes * len(enc.dictionary) + c).dictionary_encode()
+            c = enc.indices.to_numpy().astype(np.int64)
+        codes = c
+    # codes are first-seen ordered: a row is a first occurrence exactly
+    # where the running max code grows
+    first = np.flatnonzero(np.diff(np.maximum.accumulate(codes), prepend=-1))
+    return codes, keys.take(first)
 
 
 class _KeyCoder:
@@ -405,7 +423,7 @@ def _fold(coder: _KeyCoder, cols: dict) -> None:
 
 def _fold_builder(group_cols: list[str], cap: int | None, with_ord: bool, new_cols, stash):
     """mapInPandas body of every pandas-side vectorized build: raw rows
-    (grouped partial and direct routes) and state rows (both rollup
+    (the grouped partial route's stage 1) and state rows (both rollup
     stages, which include the grouped partial route's merge).
     ``stash(pdf)`` -> (per-row counts or None, {out col: payload},
     payload bytes); ``new_cols()`` -> {out col: accumulator with
@@ -458,16 +476,13 @@ def _fold_builder(group_cols: list[str], cap: int | None, with_ord: bool, new_co
 
 
 def _vec_row_builder(
-    specs: list[SketchSpec], group_cols: list[str], col_map: dict, kernel, cap: int | None
+    specs: list[SketchSpec], group_cols: list[str], col_map: dict, kernel, cap: int
 ):
-    """Vectorized raw-row build (kernels: `_HllKernel`, `_KmvKernel`): no
-    per-group Python in the batch loop. With a ``cap`` it is the partial
-    route's stage 1 — partials tagged with their merge order, flushed on
-    the same batches as the generic dict builder, byte-identical to it
-    (test_grouped_hll_fast_path_byte_identical and its KMV twin). With
-    ``cap=None`` it is the pandas direct route: rows arrive
-    hash-partitioned on the group columns, so every group is complete in
-    the partition and the states it emits are final."""
+    """The partial route's stage 1 (kernels: `_HllKernel`, `_KmvKernel`):
+    no per-group Python in the batch loop. Partials are tagged with their
+    merge order and flush on the same batches as the generic dict
+    builder, byte-identical to it (test_grouped_hll_fast_path_byte_identical
+    and its KMV twin)."""
 
     def stash(pdf):
         arrays = batch_arrays(pdf, specs, col_map)
@@ -475,11 +490,7 @@ def _vec_row_builder(
         return None, pay, sum(p.nbytes for p in pay.values())
 
     return _fold_builder(
-        group_cols,
-        cap,
-        cap is not None,
-        lambda: {s.state_col: _KernelCol(kernel, s) for s in specs},
-        stash,
+        group_cols, cap, True, lambda: {s.state_col: _KernelCol(kernel, s) for s in specs}, stash
     )
 
 
@@ -491,31 +502,25 @@ _INT32_MAX = (1 << 31) - 1
 def _vec_direct_builder_arrow(
     specs: list[SketchSpec], group_cols: list[str], col_map: dict, kernel
 ):
-    """``mapInArrow`` twin of the pandas direct build for one hashable,
-    non-float group column: the same coder and kernels, with Arrow's
-    ``dictionary_encode`` as the encode step. Input batches never convert
-    to pandas, and the output RecordBatch is assembled zero-copy: the
-    group column IS the coder's final dictionary, and each state column
-    wraps the kernel's ``emit_buf`` (buf, offs) pair into a BinaryArray.
-    States are byte-identical to the pandas route (gated by the
-    direct-route tests). Null group keys collect into a separate bucket
-    emitted as the LAST row (pandas factorize slots NaN at first
-    appearance — row order is the only difference). Float group keys take
-    the pandas route: Arrow hashes NaN/-0.0 bitwise, pandas by value."""
-    gcol = group_cols[0]
+    """``mapInArrow`` body of the direct route: rows arrive
+    hash-partitioned on the group columns, so every group is complete in
+    the partition and the states it emits are final. The shared coder and
+    kernels run with ``_pa_encode`` over a struct array of the key
+    columns. Input batches never convert to pandas, and the output
+    RecordBatch is assembled zero-copy: the group columns ARE the coder's
+    final uniques, and each state column wraps the kernel's ``emit_buf``
+    (buf, offs) pair into a BinaryArray. States are byte-identical to the
+    partial route (gated by the direct-route tests)."""
 
     def fn(batches):
         import pyarrow as pa
 
         coder = _KeyCoder(_pa_encode)
         cols = {s.state_col: _KernelCol(kernel, s) for s in specs}
-        null_pay: dict[str, list] = {c: [] for c in cols}
-        key_type = None
         for rb in batches:
             if rb.num_rows == 0:
                 continue
-            garr = rb.column(gcol)
-            key_type = garr.type
+            keys = pa.StructArray.from_arrays([rb.column(c) for c in group_cols], group_cols)
             pay = {}
             for s in specs:
                 harr = rb.column(col_map[s.name]["h"])
@@ -523,31 +528,14 @@ def _vec_direct_builder_arrow(
                     harr = harr.fill_null(0)
                 h = harr.to_numpy(zero_copy_only=False).view(np.uint64)
                 pay[s.state_col] = kernel.row_payloads(s, h)
-            codes, uniques = _pa_encode([garr])
-            if garr.null_count:
-                keep = codes >= 0
-                for c in cols:
-                    null_pay[c].append(pay[c][~keep])
-                    pay[c] = pay[c][keep]
-                codes = codes[keep]
-                if not codes.size:
-                    continue
+            codes, uniques = _pa_encode([keys])
             if coder.add(uniques, codes, None, pay, sum(p.nbytes for p in pay.values())):
                 _fold(coder, cols)
         _fold(coder, cols)
         n = len(coder)
-        n_null = sum(p.size for p in null_pay[next(iter(cols))])
-        if n == 0 and n_null == 0:
+        if n == 0:
             return
-        keys = coder.keys if n else pa.array([], type=key_type)
-        nr = coder.n_rows[:n]
-        if n_null:
-            # null group emitted last: absorb its payloads under code n
-            keys = pa.concat_arrays([keys, pa.array([None], type=keys.type)])
-            nr = np.concatenate([nr, [n_null]])
-            for c, acc in cols.items():
-                acc.absorb(np.full(n_null, n, dtype=np.int64), null_pay[c])
-            n += 1
+        keys, nr = coder.keys.flatten(), coder.n_rows[:n]
         bufs = {c: acc.emit_buf(n) for c, acc in cols.items()}
         start = 0
         while start < n:
@@ -555,7 +543,8 @@ def _vec_direct_builder_arrow(
             for _, offs in bufs.values():  # keep each chunk under int32 offsets
                 stop = min(stop, int(np.searchsorted(offs, offs[start] + _EMIT_BYTES)) - 1)
             stop = max(stop, start + 1)
-            arrays = [keys.slice(start, stop - start), pa.array(nr[start:stop], type=pa.int64())]
+            arrays = [k.slice(start, stop - start) for k in keys]
+            arrays.append(pa.array(nr[start:stop], type=pa.int64()))
             for c, (buf, offs) in bufs.items():
                 if offs[stop] - offs[start] > _INT32_MAX:
                     raise ValueError(
@@ -570,7 +559,7 @@ def _vec_direct_builder_arrow(
                         pa.binary(), stop - start, [None, pa.py_buffer(rel), pa.py_buffer(chunk)]
                     )
                 )
-            yield pa.RecordBatch.from_arrays(arrays, names=[gcol, _NROWS_COL, *bufs])
+            yield pa.RecordBatch.from_arrays(arrays, names=[*group_cols, _NROWS_COL, *bufs])
             start = stop
 
     return fn
@@ -664,6 +653,25 @@ def _pre_merge_states(
     return partials
 
 
+def _direct_key(df: DataFrame, c: str):
+    """Group column ``c`` in the direct route's JVM projection, keeping
+    its type. Arrow's ``dictionary_encode`` hashes floats bitwise, so
+    float keys are normalized to group as in the pandas routes: -0.0
+    becomes 0.0, and NaN becomes null (pandas reads a null float as NaN,
+    so those routes put null and NaN keys in one group, emitted as null).
+    Nested types have no Arrow dictionary kernel and raise here."""
+    t = df.schema[c].dataType
+    if isinstance(t, (ArrayType, MapType, StructType)):
+        raise ValueError(
+            f"grouped_sketch: group column {c!r} has nested type {t.simpleString()}, "
+            "which the direct route cannot dictionary-encode"
+        )
+    col = F.col(c)
+    if isinstance(t, (DoubleType, FloatType)):
+        return F.when(col == 0, F.lit(0).cast(t)).when(~F.isnan(col), col).alias(c)
+    return col
+
+
 def grouped_sketch(
     df: DataFrame,
     group_cols: list[str],
@@ -694,7 +702,9 @@ def grouped_sketch(
       repeats its group keys, so partials shrink the exchange
       (low-cardinality keys, clustered layouts).
     * ``False``: shuffle the raw (group, hash) projection once and build
-      FINAL states in a single post-shuffle pass. At group cardinality
+      FINAL states in a single post-shuffle ``mapInArrow`` pass, for any
+      number of group columns of any non-nested type (float keys are
+      normalized in the projection; nested keys raise). At group cardinality
       near the row count (rows scattered by a round-robin write) the
       partial route wraps, exchanges, and re-parses ~one state blob per
       INPUT row — measured 69s vs 31s on the 20M-conv bench shape.
@@ -716,35 +726,19 @@ def grouped_sketch(
             pre_partial = _preagg_dedup_ratio(prepared, group_cols, 200_000) <= 0.5
         out_schema = _grouped_schema(prepared, group_cols, specs, with_ord=False)
         if not pre_partial:
-            shuffled = prepared.repartition(*group_cols)
-            from pyspark.sql.types import DoubleType, FloatType
-
-            if len(group_cols) == 1 and not isinstance(
-                prepared.schema[group_cols[0]].dataType, (DoubleType, FloatType)
-            ):
-                return shuffled.mapInArrow(
-                    _vec_direct_builder_arrow(specs, group_cols, col_map, kernel),
-                    schema=out_schema,
-                )
-            return shuffled.mapInPandas(
-                _vec_row_builder(specs, group_cols, col_map, kernel, None),
-                schema=out_schema,
-            )
+            direct = df.select(*[_direct_key(df, c) for c in group_cols], *spec_cols)
+            builder = _vec_direct_builder_arrow(specs, group_cols, col_map, kernel)
+            return direct.repartition(*group_cols).mapInArrow(builder, schema=out_schema)
         partials = prepared.mapInPandas(
             _vec_row_builder(specs, group_cols, col_map, kernel, max_states_per_partition),
             schema=_grouped_schema(prepared, group_cols, specs, with_ord=True),
         )
         # HLL/KMV merges are order-insensitive: no sort before the fold
         merge = _rollup_builder(group_cols, [s.state_col for s in specs], None, with_ord=False)
-        return (
-            partials.repartition(*group_cols)
-            .drop(_ORD_COL)
-            .mapInPandas(merge, schema=out_schema)
-        )
+        shuffled = partials.repartition(*group_cols).drop(_ORD_COL)
+        return shuffled.mapInPandas(merge, schema=out_schema)
     partials = _pre_merge_states(df, group_cols, specs, salt_buckets, max_states_per_partition)
-    out_schema = StructType(
-        [f for f in partials.schema.fields if f.name != _ORD_COL]
-    )
+    out_schema = StructType([f for f in partials.schema.fields if f.name != _ORD_COL])
     return partials.groupBy(*group_cols).applyInPandas(
         _merge_groups(specs, group_cols, with_ord=False), schema=out_schema
     )

@@ -161,16 +161,28 @@ def _broadcast_lookup_rerank(
     order = np.argsort(ids, kind="stable")
     bc = pairs.sparkSession.sparkContext.broadcast((ids[order], mat[order]))
 
+    def gather(batch, col, ids_s):
+        """Row of each pair id in the sorted corpus ids; an id missing
+        from the corpus would silently gather a neighbor's vector."""
+        want = _id_i64(batch, col)
+        pos = np.searchsorted(ids_s, want)
+        found = pos < ids_s.size
+        found[found] = ids_s[pos[found]] == want[found]
+        if not found.all():
+            raise ValueError(
+                f"cosine_near_dup_pairs: pair column {col!r} holds id "
+                f"{int(want[~found][0])}, which is not in the corpus id column {id_col!r}"
+            )
+        return pos
+
     def fn(batches):
         ids_s, mat_s = bc.value
         for batch in batches:
             n = batch.num_rows
             if n == 0:
                 continue
-            ia = _id_i64(batch, "id_a")
-            ib = _id_i64(batch, "id_b")
-            a = mat_s[np.searchsorted(ids_s, ia)]
-            b = mat_s[np.searchsorted(ids_s, ib)]
+            a = mat_s[gather(batch, "id_a", ids_s)]
+            b = mat_s[gather(batch, "id_b", ids_s)]
             # identical ops/dtypes to _rerank_pairs
             dot = np.einsum("ij,ij->i", a, b, dtype=np.float64)
             norm = np.maximum(

@@ -815,3 +815,16 @@ def test_broadcast_lookup_rerank_bit_equal(spark, emb):
     assert (got["id_a"].to_numpy() == want["id_a"].to_numpy()).all()
     assert (got["id_b"].to_numpy() == want["id_b"].to_numpy()).all()
     assert (got["sim"].to_numpy() == want["sim"].to_numpy()).all()
+
+
+def test_broadcast_lookup_rerank_rejects_foreign_id(spark, emb):
+    """A pair id missing from the corpus fails loudly, naming the pair
+    column and the corpus id column, instead of gathering a neighbor's
+    vector (ids 0..N-1 are dense, so a gap id would land on its
+    successor)."""
+    from probably_jl_spark.operators.similarity import _broadcast_lookup_rerank
+
+    corpus = emb.filter("vec_id != 7")
+    pairs = spark.createDataFrame([(1, 2), (3, 7)], "id_a long, id_b long")
+    with pytest.raises(Exception, match=r"pair column 'id_b' holds id 7.*'vec_id'"):
+        _broadcast_lookup_rerank(pairs, corpus, "vec_id", "embedding").collect()

@@ -1,8 +1,9 @@
 """The shared deferred key coder of the vectorized grouped and rollup
 builders (operators/grouped.py::_KeyCoder), driven without Spark: codes
-match one factorize over all keys, flush points match a per-batch
-live-key count, the byte budget never changes a builder's output, and the
-Arrow emitter refuses a state past int32 offsets."""
+match one factorize over all keys, the Arrow encoder matches the pandas
+one, flush points match a per-batch live-key count, the byte budget
+never changes a builder's output, and the Arrow emitter refuses a state
+past int32 offsets."""
 
 import numpy as np
 import pandas as pd
@@ -13,6 +14,7 @@ from probably_jl_spark.operators import grouped
 from probably_jl_spark.operators.grouped import (
     _KeyCoder,
     _fold_builder,
+    _pa_encode,
     _pd_encode,
     _pd_keys,
     _vec_direct_builder_arrow,
@@ -25,18 +27,23 @@ def _batches(df: pd.DataFrame, size: int) -> list[pd.DataFrame]:
     return [df.iloc[i : i + size].reset_index(drop=True) for i in range(0, len(df), size)]
 
 
-def _coder_codes(batches, group_cols, fold_after) -> np.ndarray:
-    """Per-row global codes from the coder, consolidating after the batch
-    indexes in ``fold_after`` and at the end."""
-    coder = _KeyCoder(_pd_encode)
+def _coder_codes(batches, keys_of, fold_after, encode=_pd_encode):
+    """Per-row global codes and the final uniques from the coder,
+    consolidating after the batch indexes in ``fold_after`` and at the
+    end."""
+    coder = _KeyCoder(encode)
     out = []
     for i, pdf in enumerate(batches):
-        codes, uniques = _pd_encode([_pd_keys(pdf, group_cols)])
+        codes, uniques = encode([keys_of(pdf)])
         coder.add(uniques, codes, None, {}, 0)
         if i in fold_after:
             out.append(coder.consolidate()[0])
     out.append(coder.consolidate()[0])
-    return np.concatenate(out)
+    return np.concatenate(out), coder.keys
+
+
+def _pd_keys_of(group_cols):
+    return lambda pdf: _pd_keys(pdf, group_cols)
 
 
 @pytest.mark.parametrize("fold_after", [set(), {0}, {1, 2, 4}, set(range(20))])
@@ -48,14 +55,55 @@ def test_coder_codes_equal_one_factorize(fold_after):
     df = pd.DataFrame({"f": f, "s": rs.choice(["a", "b", "c"], n)})
     batches = _batches(df, 97)
 
-    got = _coder_codes(batches, ["f"], fold_after)
+    got, _ = _coder_codes(batches, _pd_keys_of(["f"]), fold_after)
     want, uniq = pd.factorize(df["f"], use_na_sentinel=False)
     assert (got == want).all()
     assert np.isnan(uniq).sum() == 1  # NaN keys form one group
 
-    got = _coder_codes(batches, ["f", "s"], fold_after)
+    got, _ = _coder_codes(batches, _pd_keys_of(["f", "s"]), fold_after)
     want, _ = pd.MultiIndex.from_frame(df[["f", "s"]]).factorize(use_na_sentinel=False)
     assert (got == want).all()
+
+
+def _key_rows(keys) -> list[tuple]:
+    """Coder uniques as tuples, with every missing value as None."""
+    if isinstance(keys, pa.StructArray):
+        rows = zip(*[c.to_pylist() for c in keys.flatten()])
+    else:
+        rows = (k if isinstance(k, tuple) else (k,) for k in keys)
+    return [tuple(None if pd.isna(x) else x for x in r) for r in rows]
+
+
+@pytest.mark.parametrize("group_cols", [["s"], ["s", "i"]])
+@pytest.mark.parametrize("fold_after", [set(), {0, 3, 9}])
+def test_pa_encode_matches_pd_encode(group_cols, fold_after):
+    """The Arrow encoder of the direct route gives the pandas encoder's
+    codes and first-seen uniques, null keys and null parts of multi-column
+    keys included, across coder consolidations. The pandas side sees
+    what Spark hands ``mapInPandas``: None strings and NaN for a null
+    integer."""
+    rs = np.random.default_rng(5)
+    n = 2000
+    s = rs.choice(np.array(["a", "b", "c", "d", None], dtype=object), n)
+    i = rs.integers(0, 7, n)
+    i_null = rs.random(n) < 0.1
+    pdf = pd.DataFrame({"s": s, "i": np.where(i_null, np.nan, i)})
+    arrow = pa.table({"s": pa.array(s, type=pa.string()), "i": pa.array(i, mask=i_null)})
+    starts = range(0, n, 97)
+    pd_batches = [pdf.iloc[k : k + 97].reset_index(drop=True) for k in starts]
+    pa_batches = [arrow.slice(k, 97) for k in starts]
+
+    def pa_keys(t):
+        return pa.StructArray.from_arrays(
+            [t.column(c).combine_chunks() for c in group_cols], group_cols
+        )
+
+    want, want_keys = _coder_codes(pd_batches, _pd_keys_of(group_cols), fold_after)
+    got, got_keys = _coder_codes(pa_batches, pa_keys, fold_after, encode=_pa_encode)
+    assert (got == want).all()
+    assert [f.name for f in got_keys.type] == group_cols
+    assert _key_rows(got_keys) == _key_rows(want_keys)
+    assert len(got_keys) == len(want_keys) >= 5
 
 
 def _flushes(builder, batches) -> list[tuple[list, list]]:

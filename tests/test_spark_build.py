@@ -787,44 +787,86 @@ def test_grouped_direct_route_byte_identical(spark, events):
 
 
 def test_grouped_arrow_route_null_and_float_keys(spark, events):
-    """r6 Arrow-native direct builder edges: a NULL group key forms its
-    own group with states identical to the pandas/partial route (the
-    Arrow route buckets nulls and emits them last — only row ORDER may
-    differ, which sorting normalizes), and float group keys must take
-    the pandas route (Arrow would factorize NaN/-0.0 bitwise)."""
+    """Key edges of the one Arrow direct builder: a NULL group key forms
+    its own group with states identical to the partial route (Arrow codes
+    it at first sight, as pandas does); float keys are normalized in the
+    direct route's projection, so NaN lands in one group, -0.0 and 0.0
+    in one group, and null and NaN in one null group, as the pandas
+    routes group them; multi-column keys with null parts fold per-column
+    codes. States, n_rows and keys match the partial route."""
     from probably_jl_spark.operators.grouped import grouped_sketch
+
+    specs = [SketchSpec("u", "hll", key_cols=("user_id",))]
+
+    def routes(df, group_cols):
+        out = []
+        for parts, pre_partial in ((5, True), (3, False)):
+            out.append(
+                grouped_sketch(df.repartition(parts), group_cols, specs, pre_partial=pre_partial)
+                .toPandas().sort_values(group_cols, na_position="last").reset_index(drop=True)
+            )
+        return out
+
+    def assert_same(a, b, group_cols):
+        assert len(a) == len(b)
+        assert a[group_cols].equals(b[group_cols])
+        assert (a["n_rows"] == b["n_rows"]).all()
+        assert all(x == y for x, y in zip(a["state_u"], b["state_u"]))
 
     ev = events.withColumn(
         "etype_n", F.when(F.col("event_type") == "click", None).otherwise(F.col("event_type"))
     )
-    specs = [SketchSpec("u", "hll", key_cols=("user_id",))]
-    a = (
-        grouped_sketch(ev.repartition(5), ["etype_n"], specs, pre_partial=True)
-        .toPandas().sort_values("etype_n", na_position="last").reset_index(drop=True)
-    )
-    b = (
-        grouped_sketch(ev.repartition(3), ["etype_n"], specs, pre_partial=False)
-        .toPandas().sort_values("etype_n", na_position="last").reset_index(drop=True)
-    )
+    a, b = routes(ev, ["etype_n"])
     assert a["etype_n"].isna().sum() == 1 and b["etype_n"].isna().sum() == 1
-    assert (a["n_rows"] == b["n_rows"]).all()
-    assert all(x == y for x, y in zip(a["state_u"], b["state_u"]))
+    assert_same(a, b, ["etype_n"])
 
     # float key with NaN: both routes must land the NaNs in ONE group
     evf = events.withColumn(
         "fkey", F.when(F.col("event_type") == "click", float("nan")).otherwise(F.lit(1.0))
     )
-    fa = (
-        grouped_sketch(evf.repartition(4), ["fkey"], specs, pre_partial=False)
-        .toPandas().sort_values("fkey", na_position="last").reset_index(drop=True)
-    )
-    fb = (
-        grouped_sketch(evf.repartition(2), ["fkey"], specs, pre_partial=True)
-        .toPandas().sort_values("fkey", na_position="last").reset_index(drop=True)
-    )
+    fa, fb = routes(evf, ["fkey"])
     assert len(fa) == len(fb) == 2
-    assert (fa["n_rows"] == fb["n_rows"]).all()
-    assert all(x == y for x, y in zip(fa["state_u"], fb["state_u"]))
+    assert_same(fa, fb, ["fkey"])
+
+    # -0.0 and 0.0 form one group; null and NaN form one null group
+    u = F.col("user_id") % 4
+    evz = ev.withColumn(
+        "zkey",
+        F.when(u == 0, F.lit(None).cast("double"))
+        .when(u == 1, float("nan"))
+        .when(u == 2, F.lit(-0.0))
+        .otherwise(F.lit(0.0)),
+    )
+    za, zb = routes(evz, ["zkey"])
+    assert len(za) == len(zb) == 2
+    assert_same(za, zb, ["zkey"])
+    # a FloatType key normalizes the same way and keeps its type
+    zfa, zfb = routes(evz.withColumn("zkey", F.col("zkey").cast("float")), ["zkey"])
+    assert zfb["zkey"].dtype == np.float32
+    assert_same(zfa, zfb, ["zkey"])
+
+    # multi-column keys with null parts
+    ma, mb = routes(evz, ["etype_n", "zkey"])
+    assert ma["etype_n"].isna().any() and ma["zkey"].isna().any()
+    assert_same(ma, mb, ["etype_n", "zkey"])
+
+
+def test_grouped_direct_route_rejects_nested_keys(spark, events):
+    """Arrow has no dictionary kernel for nested types: a struct, array or
+    map group column on the direct route fails at plan time, naming the
+    operator and the column."""
+    from probably_jl_spark.operators.grouped import grouped_sketch
+
+    specs = [SketchSpec("u", "hll", key_cols=("user_id",))]
+    nested = events.select(
+        "user_id",
+        F.struct("event_type").alias("s"),
+        F.array("event_type").alias("a"),
+        F.create_map("event_type", "user_id").alias("m"),
+    )
+    for c in ("s", "a", "m"):
+        with pytest.raises(ValueError, match=rf"grouped_sketch: group column '{c}'"):
+            grouped_sketch(nested, [c], specs, pre_partial=False)
 
 
 def test_tree_merge_driver_fold_equals_tree(spark, events):
@@ -864,23 +906,41 @@ def test_tree_merge_heavy_states_keep_tree():
     assert 256 * _est_partial_bytes(light) <= _DRIVER_MERGE_MAX_BYTES
 
 
+def test_est_partial_bytes_covers_large_kmv():
+    """The byte estimate sizes each kind from its parameters: a k=65536
+    KMV is estimated at no less than its filled wire (524,304 B), so 256
+    such partials take the tree instead of the driver fold."""
+    from probably_jl_spark.operators.build import (
+        _DRIVER_MERGE_MAX_BYTES,
+        _est_partial_bytes,
+    )
+
+    spec = SketchSpec("k", "kmv", key_cols=("u",), params={"k": 65536})
+    full = spec.new()
+    full.update_hashes(np.random.default_rng(0).integers(0, 2**64, 200_000, dtype=np.uint64))
+    assert _est_partial_bytes([spec]) >= len(full.to_bytes()) == 524_304
+    assert 256 * _est_partial_bytes([spec]) > _DRIVER_MERGE_MAX_BYTES
+
+
 def test_tree_merge_empty_partials(spark, events):
-    """Zero partials fold to empty sketches and zero rows on the driver
-    instead of decoding a missing state."""
+    """Zero partials fold to empty sketches and zero rows, on the driver
+    and on the forced tree path, instead of decoding a missing state."""
     specs = [
         SketchSpec("u", "hll", key_cols=("user_id",)),
         SketchSpec("td", "tdigest", value_col="value"),
     ]
     empty = build_partials(events, specs, lineage=False).filter(F.lit(False))
-    out = tree_merge(empty, specs)
-    assert out["__n_rows"] == 0
-    for s in specs:
-        assert out[s.name].to_bytes() == s.new().to_bytes()
+    for depth in (None, 2):  # driver fold, forced treeAggregate
+        out = tree_merge(empty, specs, depth=depth)
+        assert out["__n_rows"] == 0
+        for s in specs:
+            assert out[s.name].to_bytes() == s.new().to_bytes()
 
 
 def test_grouped_route_plan_nodes(spark, events):
     """Each grouped_sketch route keeps the executed-plan shape the
-    benchmark's route check reads: direct = MapInArrow; partial =
+    benchmark's route check reads: direct = MapInArrow and no MapInPandas
+    for every key shape (one string, multi-column, float); partial =
     MapInPandas with no MapInArrow and no Sort (its merge is
     order-insensitive); generic = FlatMapGroupsInPandas."""
     import re
@@ -892,8 +952,11 @@ def test_grouped_route_plan_nodes(spark, events):
         df.collect()
         return df._jdf.queryExecution().executedPlan().toString()
 
-    direct = plan(grouped_sketch(events, ["event_type"], hll, pre_partial=False))
-    assert "MapInArrow" in direct and "FlatMapGroupsInPandas" not in direct
+    evf = events.withColumn("fkey", (F.col("user_id") % 3).cast("double"))
+    for group_cols in (["event_type"], ["user_id", "event_type"], ["fkey"]):
+        direct = plan(grouped_sketch(evf, group_cols, hll, pre_partial=False))
+        assert "MapInArrow" in direct, group_cols
+        assert "MapInPandas" not in direct and "FlatMapGroupsInPandas" not in direct
     partial = plan(grouped_sketch(events, ["event_type"], hll, pre_partial=True))
     assert "MapInPandas" in partial
     assert "MapInArrow" not in partial and "FlatMapGroupsInPandas" not in partial
