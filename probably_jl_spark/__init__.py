@@ -15,6 +15,12 @@ from .sketches.kmv import KMV
 from .sketches.mg import MisraGries
 from .sketches.tdigest import TDigest
 
+from ._worker import install as _install_worker_gate
+
+# Unpickling any library UDF imports this package, so this call reaches
+# every PySpark worker that runs library code; on the driver it is a no-op.
+_install_worker_gate()
+
 __version__ = "0.1.0"
 
 __all__ = [

@@ -67,7 +67,11 @@ def sketch_build_conf(scale: str = "cluster", cores: int = 32) -> dict[str, str]
             # above the floor (min-based efficiency ~0.80-0.83 measured)
             # while taking most of the per-task-overhead win. The
             # cluster profile below stays at 128m, where hours-long jobs
-            # drown the fixed cost.
+            # drown the fixed cost. The ~1.7s was measured while every
+            # Python task re-read Spark's zip archives (0.1-0.25s of CPU
+            # each, now gated in _worker.py); the scaling leg's Amdahl
+            # fit (ROADMAP D1) should re-measure it before this value is
+            # revisited.
             "spark.sql.files.maxPartitionBytes": "64m",
             "spark.driver.memory": "16g",
         }

@@ -22,7 +22,19 @@ def _rank_error(sketch_quantile, data_sorted, q):
     return min(abs(q - lo), abs(q - hi))
 
 
-@pytest.mark.parametrize("dist", ["uniform", "lognormal", "zipfy"])
+# Inputs that are hard for t-digest (ROADMAP D4): a heavy tail, values
+# spread over 12 decades, and the same values arriving sorted.
+HARD = ["pareto", "exp_spaced", "exp_spaced_sorted"]
+
+
+def _hard_input(dist, rs, n):
+    if dist == "pareto":
+        return rs.pareto(1.1, n) + 1.0  # continuous Pareto, alpha=1.1, x_m=1
+    data = 10.0 ** rs.uniform(0, 12, n)
+    return np.sort(data) if dist == "exp_spaced_sorted" else data
+
+
+@pytest.mark.parametrize("dist", ["uniform", "lognormal", "zipfy", *HARD])
 def test_tdigest_rank_error(dist):
     rs = np.random.default_rng(7)
     n = 200_000
@@ -30,8 +42,10 @@ def test_tdigest_rank_error(dist):
         data = rs.random(n)
     elif dist == "lognormal":
         data = rs.lognormal(3.0, 1.2, n)
-    else:
+    elif dist == "zipfy":
         data = np.floor(rs.pareto(1.2, n) * 10)
+    else:
+        data = _hard_input(dist, rs, n)
     td = TDigest(200)
     for chunk in np.array_split(data, 20):
         td.update_values(chunk)
@@ -93,11 +107,14 @@ def test_tdigest_merge_delta_mismatch():
 # ---------------------------------------------------------------------- KLL
 
 
-@pytest.mark.parametrize("dist", ["uniform", "lognormal"])
+@pytest.mark.parametrize("dist", ["uniform", "lognormal", *HARD])
 def test_kll_rank_error(dist):
     rs = np.random.default_rng(17)
     n = 200_000
-    data = rs.random(n) if dist == "uniform" else rs.lognormal(3, 1.2, n)
+    if dist in HARD:
+        data = _hard_input(dist, rs, n)
+    else:
+        data = rs.random(n) if dist == "uniform" else rs.lognormal(3, 1.2, n)
     kll = KLL(200)
     for chunk in np.array_split(data, 20):
         kll.update_values(chunk)

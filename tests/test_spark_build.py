@@ -963,3 +963,47 @@ def test_grouped_route_plan_nodes(spark, events):
     assert not re.search(r"\bSort\b", partial)
     generic = plan(grouped_sketch(events, ["event_type"], mixed))
     assert "FlatMapGroupsInPandas" in generic
+
+
+def test_worker_zip_gate_installed_in_tasks(spark):
+    """Inside a Python task, importing the package gates the zip-directory
+    refresh: a repeated ``importlib.invalidate_caches()`` re-reads no
+    archive. The driver keeps the stdlib method."""
+    import sys
+    import zipimport
+
+    def probe(batches):
+        import importlib
+        import zipimport
+
+        import pandas as pd
+
+        import probably_jl_spark  # noqa: F401  (installs the gate)
+
+        gated = getattr(zipimport.zipimporter.invalidate_caches, "_stat_gated", False)
+        importlib.invalidate_caches()
+        reads = []
+        read_directory = zipimport._read_directory
+
+        def counting(archive):
+            reads.append(archive)
+            return read_directory(archive)
+
+        zipimport._read_directory = counting
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = read_directory
+        for _ in batches:
+            pass
+        yield pd.DataFrame({"gated": [gated], "second_reads": [len(reads)]})
+
+    out = (
+        spark.range(4, numPartitions=2)
+        .mapInPandas(probe, "gated boolean, second_reads long")
+        .toPandas()
+    )
+    assert len(out) == 2
+    assert out["gated"].tolist() == [sys.version_info < (3, 13)] * 2
+    assert out["second_reads"].tolist() == [0, 0]
+    assert zipimport.zipimporter.invalidate_caches.__module__ == "zipimport"
