@@ -140,7 +140,7 @@ def _build_partition(specs: list[SketchSpec], lineage: bool, col_map: dict):
     """Returns the mapInPandas function: consumes Arrow batches, keeps one
     sketch per spec for the whole partition, emits a single state row."""
 
-    def fn(batches):
+    def sketch_partials(batches):
         from pyspark import TaskContext
 
         t0 = time.perf_counter()
@@ -167,7 +167,7 @@ def _build_partition(specs: list[SketchSpec], lineage: bool, col_map: dict):
             row[s.state_col] = sketches[s.name].to_bytes()
         yield pd.DataFrame([row])
 
-    return fn
+    return sketch_partials
 
 
 def build_partials(df: DataFrame, specs: list[SketchSpec], lineage: bool = True) -> DataFrame:

@@ -5,13 +5,14 @@ Per-group sketches (e.g. distinct conv_ids per tool, turn-length digest
 per role) never materialize a group's rows. Every sketch is mergeable, so
 each route does two jobs only: assign group codes, then fold states.
 
-* Generic route (any spec mix): a ``mapInPandas`` pass keeps a
-  ``{group-key -> sketch}`` dict per input partition and emits one small
-  *state* row per (partition, key); only those states shuffle, and a
-  per-key ``applyInPandas`` merges them in ascending partition order.
-* Vectorized routes (all-HLL or all-KMV spec lists): no per-group Python.
-  One deferred key coder (``_KeyCoder``) assigns first-seen group codes
-  and the kind's kernel folds (code, payload) arrays. The partial route
+* Generic route (any spec mix): a ``mapInPandas`` stage 1 keeps one
+  sketch per key per input partition (``_SketchCol``, updated per batch
+  and key as a ``{key -> sketch}`` dict would be, so it stays an
+  independent reference for the kernels) and emits one small *state*
+  row per (partition, key); only those states shuffle, and a per-key
+  ``applyInPandas`` merges them in ascending partition order.
+* Vectorized routes (all-HLL or all-KMV spec lists): no per-group Python;
+  the kind's kernel folds (code, payload) arrays. The partial route
   builds map-side partials, hash-repartitions them and merges them with
   rollup's state fold (``operators/rollup.py::_rollup_builder``, the only
   vectorized state merge), all in ``mapInPandas``. The direct route
@@ -19,11 +20,13 @@ each route does two jobs only: assign group codes, then fold states.
   ``mapInArrow`` builder for every key shape: Arrow ``dictionary_encode``
   codes each key column and the codes fold pairwise across columns.
 
-The coder stashes each batch's own factorized uniques and codes, and
-consolidates them with ONE factorize over known keys + stashed uniques
-when the pending bytes (codes, payloads, state blobs) pass
-``_FOLD_BYTES``, or when live plus pending keys could pass the builder's
-flush cap — so flush points match a per-batch live-key count exactly.
+One deferred key coder (``_KeyCoder``) assigns first-seen group codes on
+every route, null and NaN keys as one group. It stashes each batch's own
+factorized uniques and codes, and consolidates them with ONE factorize
+over known keys + stashed uniques when the pending bytes (codes,
+payloads, state blobs) pass ``_FOLD_BYTES``, or when live plus pending
+keys could pass the builder's flush cap — so flush points match a
+per-batch live-key count exactly.
 
 Skew/fan-in controls:
 
@@ -57,6 +60,13 @@ _ORD_COL = "__ord"  # min partition id feeding a state row: merge sort key
 _NROWS_COL = "n_rows"
 
 
+def _named(fn, name: str):
+    """``fn`` named for its role (``grouped_stage1``, ``generic_merge``,
+    ...): Spark prints a Python UDF's name in its plan node and UI."""
+    fn.__name__ = name
+    return fn
+
+
 def _grouped_schema(
     df: DataFrame, group_cols: list[str], specs: list[SketchSpec], with_ord: bool = False
 ) -> StructType:
@@ -67,67 +77,6 @@ def _grouped_schema(
     fields.append(StructField(_NROWS_COL, LongType()))
     fields += [StructField(s.state_col, BinaryType()) for s in specs]
     return StructType(fields)
-
-
-def _partial_builder(specs: list[SketchSpec], group_cols: list[str], col_map: dict, cap: int):
-    """mapInPandas fn: streaming per-partition {key -> sketch} partials,
-    flushed when the dict exceeds `cap` keys (bounded memory)."""
-
-    def rows_frame(states: dict, ord_key: int) -> pd.DataFrame:
-        keys = list(states.keys())
-        data = {c: [k[i] for k in keys] for i, c in enumerate(group_cols)}
-        data[_ORD_COL] = [ord_key] * len(keys)
-        data[_NROWS_COL] = [states[k][0] for k in keys]
-        for s in specs:
-            data[s.state_col] = [states[k][1][s.name].to_bytes() for k in keys]
-        return pd.DataFrame(data)
-
-    def fn(batches):
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else -1
-        flush = 0  # ord = pid<<20 | flush: mid-partition flushes keep a
-        # total deterministic merge order even for the same (key, pid)
-        states: dict[tuple, list] = {}
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            arrays = batch_arrays(pdf, specs, col_map)
-            groups = pdf.groupby(list(group_cols), dropna=False, sort=False).indices
-            for key, idx in groups.items():
-                kt = key if isinstance(key, tuple) else (key,)
-                # normalize float-NaN key components to None: pandas hands
-                # back a fresh NaN object per batch and (nan,) tuples never
-                # compare equal, so without this every batch would open a
-                # new dict entry for the NaN group and the per-key merge
-                # order would ride on shuffle row order (ADVICE r2).
-                # np.floating covers FloatType columns: np.float32 is NOT a
-                # Python-float subclass (code-review r3)
-                kt = tuple(
-                    None if (isinstance(x, (float, np.floating)) and x != x) else x
-                    for x in kt
-                )
-                ent = states.get(kt)
-                if ent is None:
-                    ent = states[kt] = [0, {s.name: s.new() for s in specs}]
-                ent[0] += len(idx)
-                for s in specs:
-                    h, v, c = arrays[s.name]
-                    s.update(
-                        ent[1][s.name],
-                        None if h is None else h[idx],
-                        None if v is None else v[idx],
-                        None if c is None else c[idx],
-                    )
-            if len(states) > cap:
-                yield rows_frame(states, (pid << 20) | flush)
-                flush += 1
-                states = {}
-        if states:
-            yield rows_frame(states, (pid << 20) | flush)
-
-    return fn
 
 
 def _absorb_max(acc: np.ndarray, packed: np.ndarray) -> np.ndarray:
@@ -414,6 +363,37 @@ class _KernelCol:
         return self.kernel.emit_buf(self.acc, self.spec, n)
 
 
+class _SketchCol:
+    """Raw-row accumulator of one spec of any kind: one sketch per group
+    code. Payloads are a batch's ``(h, v, c)`` arrays, replayed in batch
+    order: one stable argsort of the batch's codes, then one
+    ``spec.update`` per (batch, group) on that group's rows in row order
+    — the update calls a per-batch ``{key -> sketch}`` dict makes, so
+    order-sensitive kinds (t-digest, KLL, MG, cuckoo) keep their bytes."""
+
+    def __init__(self, spec: SketchSpec):
+        self.spec = spec
+        self.reset()
+
+    def reset(self) -> None:
+        self.sketches: list = []
+
+    def absorb(self, g: np.ndarray, payloads: list) -> None:
+        spec, sketches = self.spec, self.sketches
+        sketches += [spec.new() for _ in range(int(g.max()) + 1 - len(sketches))]
+        start = 0
+        for arrays in payloads:
+            n = len(arrays[0] if arrays[0] is not None else arrays[1])
+            gb, start = g[start : start + n], start + n
+            # numpy's stable sort is a radix sort on ints of <= 16 bits
+            order = np.argsort(gb.astype(np.min_scalar_type(int(gb.max()))), kind="stable")
+            for idx in np.split(order, np.flatnonzero(np.diff(gb[order])) + 1):
+                spec.update(sketches[gb[idx[0]]], *(None if a is None else a[idx] for a in arrays))
+
+    def emit_blobs(self, n: int) -> list:
+        return [sk.to_bytes() for sk in self.sketches[:n]]
+
+
 def _fold(coder: _KeyCoder, cols: dict) -> None:
     g, pays = coder.consolidate()
     if g.size:
@@ -422,9 +402,10 @@ def _fold(coder: _KeyCoder, cols: dict) -> None:
 
 
 def _fold_builder(group_cols: list[str], cap: int | None, with_ord: bool, new_cols, stash):
-    """mapInPandas body of every pandas-side vectorized build: raw rows
-    (the grouped partial route's stage 1) and state rows (both rollup
-    stages, which include the grouped partial route's merge).
+    """mapInPandas body of every pandas-side build: raw rows (stage 1 of
+    the grouped partial and generic routes, `_row_builder`) and state
+    rows (both rollup stages, which include the grouped partial route's
+    merge).
     ``stash(pdf)`` -> (per-row counts or None, {out col: payload},
     payload bytes); ``new_cols()`` -> {out col: accumulator with
     ``absorb(g, payloads)``, ``emit_blobs(n)`` and ``reset()``}. Flushes
@@ -475,23 +456,29 @@ def _fold_builder(group_cols: list[str], cap: int | None, with_ord: bool, new_co
     return fn
 
 
-def _vec_row_builder(
-    specs: list[SketchSpec], group_cols: list[str], col_map: dict, kernel, cap: int
+def _row_builder(
+    specs: list[SketchSpec], group_cols: list[str], col_map: dict, cap: int, kernel=None
 ):
-    """The partial route's stage 1 (kernels: `_HllKernel`, `_KmvKernel`):
-    no per-group Python in the batch loop. Partials are tagged with their
-    merge order and flush on the same batches as the generic dict
-    builder, byte-identical to it (test_grouped_hll_fast_path_byte_identical
-    and its KMV twin)."""
+    """Stage 1 of the partial and generic routes: flush-capped partials
+    tagged with their merge order. With a ``kernel`` (`_HllKernel`,
+    `_KmvKernel`) each column is a `_KernelCol`, with no per-group Python
+    in the batch loop; without one each is a `_SketchCol`, one sketch per
+    key. Both flush on the same batches and, for HLL/KMV, emit the same
+    bytes (test_grouped_hll_fast_path_byte_identical and its KMV twin)."""
 
     def stash(pdf):
         arrays = batch_arrays(pdf, specs, col_map)
+        if kernel is None:  # a column shared by specs counts once per spec
+            pay = {s.state_col: arrays[s.name] for s in specs}
+            return None, pay, sum(a.nbytes for t in pay.values() for a in t if a is not None)
         pay = {s.state_col: kernel.row_payloads(s, arrays[s.name][0]) for s in specs}
         return None, pay, sum(p.nbytes for p in pay.values())
 
-    return _fold_builder(
-        group_cols, cap, True, lambda: {s.state_col: _KernelCol(kernel, s) for s in specs}, stash
-    )
+    def new_cols():
+        new = _SketchCol if kernel is None else lambda s: _KernelCol(kernel, s)
+        return {s.state_col: new(s) for s in specs}
+
+    return _fold_builder(group_cols, cap, True, new_cols, stash)
 
 
 # pa.BinaryArray offsets are int32: cap the state bytes per emitted batch
@@ -512,7 +499,7 @@ def _vec_direct_builder_arrow(
     (buf, offs) pair into a BinaryArray. States are byte-identical to the
     partial route (gated by the direct-route tests)."""
 
-    def fn(batches):
+    def grouped_direct(batches):
         import pyarrow as pa
 
         coder = _KeyCoder(_pa_encode)
@@ -562,18 +549,20 @@ def _vec_direct_builder_arrow(
             yield pa.RecordBatch.from_arrays(arrays, names=[*group_cols, _NROWS_COL, *bufs])
             start = stop
 
-    return fn
+    return grouped_direct
 
 
 def _preagg_dedup_ratio(prepared: DataFrame, group_cols: list[str], sample_rows: int) -> float:
     """Distinct-group fraction of a bounded row sample — the decision
     input for the vectorized route: map-side partials shrink the state
     exchange by roughly this factor's inverse, so a ratio near 1 means
-    pre-aggregation only adds work. ``limit`` reads just enough leading
-    partitions to fill the sample (one tiny job, no full scan), which is
-    exactly the within-partition locality the partial builder would see."""
+    pre-aggregation only adds work. ``coalesce(1)`` before ``limit``
+    makes it one task with no exchange: it reads partitions in order and
+    stops after ``sample_rows`` rows (no full scan), so the sample keeps
+    the within-partition locality the partial builder would see."""
     row = (
         prepared.select(*group_cols)
+        .coalesce(1)
         .limit(sample_rows)
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -621,8 +610,10 @@ def _pre_merge_states(
     salt_buckets: int | None,
     max_states_per_partition: int,
 ) -> DataFrame:
-    """Stage 1 (+ optional salted level-1 merge): the state rows feeding
-    the final per-key merge. Exposed for fan-in tests."""
+    """The generic route's stage 1 (`_row_builder`, one sketch per key)
+    plus the optional salted level-1 merge: the state rows feeding the
+    final per-key merge. Exposed for fan-in tests and as the per-key
+    reference of the HLL/KMV fast-path tests."""
     spec_cols, col_map = plan_columns(specs)
     prepared = df.select(*[F.col(c) for c in group_cols], *spec_cols)
     if salt_buckets is None:
@@ -635,8 +626,9 @@ def _pre_merge_states(
         except Exception:
             salt_buckets = 1
 
+    stage1 = _row_builder(specs, group_cols, col_map, max_states_per_partition)
     partials = prepared.mapInPandas(
-        _partial_builder(specs, group_cols, col_map, max_states_per_partition),
+        _named(stage1, "generic_stage1"),
         schema=_grouped_schema(prepared, group_cols, specs, with_ord=True),
     )
     if salt_buckets > 1:
@@ -647,7 +639,10 @@ def _pre_merge_states(
         mid_schema = _grouped_schema(level1, mid_cols, specs, with_ord=True)
         partials = (
             level1.groupBy(*mid_cols)
-            .applyInPandas(_merge_groups(specs, mid_cols, with_ord=True), schema=mid_schema)
+            .applyInPandas(
+                _named(_merge_groups(specs, mid_cols, with_ord=True), "generic_salt_merge"),
+                schema=mid_schema,
+            )
             .drop(_SALT_COL)
         )
     return partials
@@ -684,7 +679,8 @@ def grouped_sketch(
     ``group_cols + [n_rows] + state_<name> binary`` columns.
 
     Rows never shuffle on the generic route: partition-local partial
-    states are built in one streaming pass, then only states move.
+    states are built in one streaming pass over the shared key coder,
+    one sketch per key, then only states move.
     ``salt_buckets=S`` adds a pre-merge level on (key, partition mod S)
     to bound per-key fan-in on very wide scans; the default (None)
     derives S from the scan's partition count so fan-in stays ~256 at any
@@ -710,7 +706,8 @@ def grouped_sketch(
       INPUT row — measured 69s vs 31s on the 20M-conv bench shape.
     * ``None`` (default): decide from a bounded distinct-ratio sample of
       the scan (``_preagg_dedup_ratio``; > 0.5 distinct per sampled row
-      =>> direct). One tiny ``limit`` job; never a full scan.
+      =>> direct). One single-task ``limit`` job with no exchange; never a
+      full scan.
 
     Both shapes emit byte-identical states — HLL/KMV states are pure set
     functions of the hashes seen (gated by
@@ -729,16 +726,18 @@ def grouped_sketch(
             direct = df.select(*[_direct_key(df, c) for c in group_cols], *spec_cols)
             builder = _vec_direct_builder_arrow(specs, group_cols, col_map, kernel)
             return direct.repartition(*group_cols).mapInArrow(builder, schema=out_schema)
+        stage1 = _row_builder(specs, group_cols, col_map, max_states_per_partition, kernel)
         partials = prepared.mapInPandas(
-            _vec_row_builder(specs, group_cols, col_map, kernel, max_states_per_partition),
+            _named(stage1, "grouped_stage1"),
             schema=_grouped_schema(prepared, group_cols, specs, with_ord=True),
         )
         # HLL/KMV merges are order-insensitive: no sort before the fold
         merge = _rollup_builder(group_cols, [s.state_col for s in specs], None, with_ord=False)
         shuffled = partials.repartition(*group_cols).drop(_ORD_COL)
-        return shuffled.mapInPandas(merge, schema=out_schema)
+        return shuffled.mapInPandas(_named(merge, "grouped_merge"), schema=out_schema)
     partials = _pre_merge_states(df, group_cols, specs, salt_buckets, max_states_per_partition)
     out_schema = StructType([f for f in partials.schema.fields if f.name != _ORD_COL])
     return partials.groupBy(*group_cols).applyInPandas(
-        _merge_groups(specs, group_cols, with_ord=False), schema=out_schema
+        _named(_merge_groups(specs, group_cols, with_ord=False), "generic_merge"),
+        schema=out_schema,
     )

@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 
 from ..sketches import codec
-from .grouped import _NROWS_COL, _ORD_COL, _VEC_KERNELS, _fold_builder
+from .grouped import _NROWS_COL, _ORD_COL, _VEC_KERNELS, _fold_builder, _named
 from .specs import SketchSpec, merge_blobs
 
 
@@ -205,16 +205,14 @@ def rollup_states(
     if _NROWS_COL not in df.columns:
         df = df.withColumn(_NROWS_COL, F.lit(0).cast(LongType()))
     keep = all_group + [_NROWS_COL] + state_cols
-    partials = df.select(*keep).mapInPandas(
-        _rollup_builder(all_group, state_cols, max_states_per_partition, with_ord=True),
-        schema=part_schema,
-    )
+    stage1 = _rollup_builder(all_group, state_cols, max_states_per_partition, with_ord=True)
+    partials = df.select(*keep).mapInPandas(_named(stage1, "rollup_stage1"), schema=part_schema)
     out_schema = StructType([f for f in part_schema.fields if f.name != _ORD_COL])
     out = (
         partials.repartition(*all_group)
         .sortWithinPartitions(*all_group, _ORD_COL)
         .mapInPandas(
-            _rollup_builder(all_group, state_cols, None, with_ord=False),
+            _named(_rollup_builder(all_group, state_cols, None, with_ord=False), "rollup_merge"),
             schema=out_schema,
         )
     )

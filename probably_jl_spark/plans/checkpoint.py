@@ -39,10 +39,9 @@ import uuid
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 
 from ..operators.build import BuildResult
-from ..operators.grouped import grouped_sketch
+from ..operators.grouped import _ORD_COL, _grouped_schema, _merge_groups, _named, grouped_sketch
 from ..operators.specs import SketchSpec, merge_blobs, sketch_from_bytes
 
 BUCKET_COL = "__bucket"
@@ -117,27 +116,18 @@ class CheckpointedSketchBuild:
 
     def _merge_all(self, deduped: DataFrame) -> tuple[dict, int]:
         """Deterministic two-level merge: per-group executor merges in
-        ascending bucket order, then a driver fold in group order."""
-        schema = StructType(
-            [StructField(_GRP_COL, LongType()), StructField("n_rows", LongType())]
-            + [StructField(s.state_col, BinaryType()) for s in self.specs]
+        ascending bucket order (the grouped build's ordered per-key merge,
+        with the bucket id as its order key), then a driver fold in group
+        order."""
+        by_group = deduped.select(
+            F.pmod(F.col(BUCKET_COL), F.lit(self.merge_groups)).alias(_GRP_COL),
+            F.col(BUCKET_COL).alias(_ORD_COL),
+            "n_rows",
+            *[s.state_col for s in self.specs],
         )
-        specs = self.specs
-
-        def merge_group(keys: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values(BUCKET_COL)
-            row = {_GRP_COL: keys[0], "n_rows": int(pdf["n_rows"].sum())}
-            for s in specs:
-                acc = None
-                for blob in pdf[s.state_col]:
-                    acc = merge_blobs(acc, blob)
-                row[s.state_col] = acc
-            return pd.DataFrame([row])
-
-        grouped = (
-            deduped.withColumn(_GRP_COL, F.pmod(F.col(BUCKET_COL), F.lit(self.merge_groups)))
-            .groupBy(_GRP_COL)
-            .applyInPandas(merge_group, schema=schema)
+        grouped = by_group.groupBy(_GRP_COL).applyInPandas(
+            _named(_merge_groups(self.specs, [_GRP_COL], with_ord=False), "checkpoint_merge"),
+            schema=_grouped_schema(by_group, [_GRP_COL], self.specs),
         )
         rows = sorted(grouped.collect(), key=lambda r: r[_GRP_COL])
         sketches = {}

@@ -123,7 +123,7 @@ def hll_grouped_parts_by_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """High-cardinality grouped build — one group per l_orderkey (~15k at
     sf0.01, scales with SF): distinct parts per order. Exercises the
     all-HLL vectorized routes (deferred-coded packed build,
-    operators/grouped.py::_vec_row_builder; the partial route merges with
+    operators/grouped.py::_row_builder; the partial route merges with
     rollup's streaming state fold, operators/rollup.py::_rollup_builder)
     where output rows ~ input rows / 4. Gate: per-group estimates within
     max(2, 3sigma*n) of exact — at tiny per-group n the only error source
@@ -156,7 +156,7 @@ def hll_grouped_parts_by_order(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def kmv_grouped_parts_by_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """High-cardinality grouped KMV (vectorized (group, hash) k-min route,
-    operators/grouped.py::_vec_row_builder + _KmvKernel): distinct parts per
+    operators/grouped.py::_row_builder + _KmvKernel): distinct parts per
     l_orderkey. Per-order distinct counts sit far below k=1024, where a
     KMV sketch holds EVERY distinct hash — so the oracle demands exact
     equality of the estimates, not a bound (64-bit hash collisions are

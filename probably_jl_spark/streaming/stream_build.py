@@ -345,7 +345,7 @@ def stateful_grouped_stream_df(
     )
     state_schema = ", ".join(["n_rows long"] + [f"{s.state_col} binary" for s in specs])
 
-    def fn(key, pdfs, state):
+    def stream_group_state(key, pdfs, state):
         if state.exists:
             stored = state.get
             n_rows = stored[0]
@@ -369,5 +369,5 @@ def stateful_grouped_stream_df(
         )
 
     return prepared.groupBy(*group_cols).applyInPandasWithState(
-        fn, out_schema, state_schema, "update", timeout
+        stream_group_state, out_schema, state_schema, "update", timeout
     )

@@ -1,9 +1,10 @@
-"""The shared deferred key coder of the vectorized grouped and rollup
-builders (operators/grouped.py::_KeyCoder), driven without Spark: codes
-match one factorize over all keys, the Arrow encoder matches the pandas
-one, flush points match a per-batch live-key count, the byte budget
-never changes a builder's output, and the Arrow emitter refuses a state
-past int32 offsets."""
+"""The shared deferred key coder of the grouped and rollup builders
+(operators/grouped.py::_KeyCoder), driven without Spark: codes match one
+factorize over all keys, the Arrow encoder matches the pandas one, flush
+points match a per-batch live-key count, the byte budget never changes a
+builder's output, the generic stage 1 matches a per-batch, per-key
+sketch loop byte for byte, and the Arrow emitter refuses a state past
+int32 offsets."""
 
 import numpy as np
 import pandas as pd
@@ -12,11 +13,13 @@ import pytest
 
 from probably_jl_spark.operators import grouped
 from probably_jl_spark.operators.grouped import (
+    _ORD_COL,
     _KeyCoder,
     _fold_builder,
     _pa_encode,
     _pd_encode,
     _pd_keys,
+    _row_builder,
     _vec_direct_builder_arrow,
 )
 from probably_jl_spark.operators.rollup import _rollup_builder
@@ -177,6 +180,104 @@ def test_merge_builder_output_ignores_byte_budget(monkeypatch):
 
     assert len(one) == len(every) == 1
     pd.testing.assert_frame_equal(one[0], every[0])
+
+
+_ALL_KINDS = [
+    SketchSpec("hll", "hll", key_cols=("a",), params={"p": 8}),
+    SketchSpec("cms", "cms", key_cols=("a",), count_col="n", params={"width": 64, "depth": 3}),
+    SketchSpec("bloom", "bloom", key_cols=("a",), params={"m": 1 << 10, "k": 3}),
+    SketchSpec("kmv", "kmv", key_cols=("b",), params={"k": 16}),
+    SketchSpec("mg", "mg", key_cols=("b",), params={"k": 4}),
+    SketchSpec("cuckoo", "cuckoo", key_cols=("b",), params={"len": 64}),
+    SketchSpec("td", "tdigest", value_col="x", params={"delta": 20.0}),
+    SketchSpec("kll", "kll", value_col="x", params={"k": 8}),
+]
+_ALL_COLS = {
+    "hll": {"h": "__h0"},
+    "cms": {"h": "__h0", "c": "__c0"},
+    "bloom": {"h": "__h0"},
+    "kmv": {"h": "__h1"},
+    "mg": {"h": "__h1"},
+    "cuckoo": {"h": "__h1"},
+    "td": {"v": "__v0"},
+    "kll": {"v": "__v0"},
+}
+
+
+def _raw_batches() -> list[pd.DataFrame]:
+    """Raw rows as Spark hands them to ``mapInPandas``: float32 keys with
+    NaN, string keys with None, hash, value and count columns."""
+    rs = np.random.default_rng(17)
+    n = 1500
+    f = rs.integers(0, 6, n).astype(np.float32)
+    f[rs.random(n) < 0.15] = np.nan
+    s = rs.choice(np.array(["p", "q", "r", None], dtype=object), n)
+    df = pd.DataFrame({
+        "f": f,
+        "s": s,
+        "__h0": rs.integers(-(2**63), 2**63 - 1, n, dtype=np.int64),
+        "__h1": rs.integers(0, 40, n).astype(np.int64) * 7919,
+        "__v0": rs.lognormal(0.0, 2.0, n),
+        "__c0": rs.integers(0, 5, n).astype(np.int64),
+    })
+    cuts = [0, 400, 650, 1200, n]
+    return [df.iloc[i:j].reset_index(drop=True) for i, j in zip(cuts, cuts[1:])]
+
+
+def _reference_stage1(specs, group_cols, col_map, cap, batches) -> dict:
+    """{(ord, key): (n_rows, blobs)} from a per-batch loop that keeps a
+    {key -> sketches} dict, one ``spec.update`` per (batch, key) on the
+    key's rows in row order, missing key parts as None, flushed when
+    the dict passes ``cap`` keys."""
+    from probably_jl_spark.operators.build import batch_arrays
+
+    out, states, flush = {}, {}, 0
+
+    def emit():
+        for key, (n, sks) in states.items():
+            out[((-1 << 20) | flush, key)] = (n, [sks[s.name].to_bytes() for s in specs])
+
+    for pdf in batches:
+        arrays = batch_arrays(pdf, specs, col_map)
+        rows: dict = {}
+        for i, key in enumerate(zip(*[pdf[c] for c in group_cols])):
+            rows.setdefault(tuple(None if pd.isna(x) else x for x in key), []).append(i)
+        for key, idx in rows.items():
+            ent = states.setdefault(key, [0, {s.name: s.new() for s in specs}])
+            ent[0] += len(idx)
+            for s in specs:
+                s.update(ent[1][s.name], *(None if a is None else a[idx] for a in arrays[s.name]))
+        if len(states) > cap:
+            emit()
+            flush, states = flush + 1, {}
+    emit()
+    return out
+
+
+@pytest.mark.parametrize("group_cols", [["f"], ["s"], ["f", "s"]])
+@pytest.mark.parametrize("cap", [1 << 16, 3])
+def test_generic_stage1_matches_per_key_reference(group_cols, cap):
+    """The generic route's stage 1 (the shared coder over one sketch per
+    key) emits, per (ord, key), the row count and state bytes of a
+    per-batch {key -> sketch} loop, for every sketch kind, NaN and null
+    keys, one and two key columns, and a cap that flushes mid-partition.
+    Row order inside a flush may differ; stage 2 orders by ord."""
+    batches = _raw_batches()
+    want = _reference_stage1(_ALL_KINDS, group_cols, _ALL_COLS, cap, batches)
+    got = {}
+    for out in _row_builder(_ALL_KINDS, group_cols, _ALL_COLS, cap)(iter(batches)):
+        for _, r in out.iterrows():
+            key = tuple(None if pd.isna(r[c]) else r[c] for c in group_cols)
+            assert (r[_ORD_COL], key) not in got
+            got[(r[_ORD_COL], key)] = (r["n_rows"], [r[s.state_col] for s in _ALL_KINDS])
+    assert got.keys() == want.keys()
+    for k, (n, blobs) in want.items():
+        assert got[k][0] == n, k
+        for s, a, b in zip(_ALL_KINDS, got[k][1], blobs):
+            assert a == b, (k, s.name)
+    if cap == 3:
+        assert len({o for o, _ in want}) > 1  # the cap did flush
+    assert any(None in k for _, k in want)
 
 
 class _HugeStateKernel:

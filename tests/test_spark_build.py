@@ -438,12 +438,13 @@ def test_grouped_nan_key_single_state(spark):
     """ADVICE r02: pandas hands back a fresh float-NaN object per Arrow
     batch, so without normalization the NaN group fragments into one dict
     entry per batch (same _ORD_COL -> merge order rides on shuffle row
-    order). The partial builder must emit exactly ONE state row per
-    (partition, NaN-group), however many batches feed it."""
+    order). The generic stage-1 builder, whose key coder groups NaN keys
+    by value, must emit exactly ONE state row per (partition, NaN-group),
+    however many batches feed it."""
     import pandas as pd
 
     from probably_jl_spark.operators.build import plan_columns
-    from probably_jl_spark.operators.grouped import _partial_builder
+    from probably_jl_spark.operators.grouped import _row_builder
 
     specs = [SketchSpec("v", "tdigest", value_col="value")]
     _, col_map = plan_columns(specs)
@@ -454,7 +455,7 @@ def test_grouped_nan_key_single_state(spark):
         pd.DataFrame({"g": np.array([np.nan, 1.0], dtype=np.float32), "__v0": [3.0, 4.0]}),
         pd.DataFrame({"g": np.array([np.nan], dtype=np.float32), "__v0": [5.0]}),
     ]
-    out = pd.concat(list(_partial_builder(specs, ["g"], col_map, cap=1 << 16)(iter(batches))))
+    out = pd.concat(list(_row_builder(specs, ["g"], col_map, cap=1 << 16)(iter(batches))))
     # one row for the NaN group, one for key 1.0 — not one per batch
     assert len(out) == 2, out
     nan_rows = out[out["g"].isna()]
@@ -533,9 +534,9 @@ def test_grouped_auto_salt_bounds_fan_in(spark, events):
 def test_grouped_hll_fast_path_byte_identical(spark, events):
     """All-HLL spec lists dispatch to the vectorized packed-entries
     builder + partition-wide register-max merge. Gate: partials AND the
-    final grouped output are byte-identical to the generic dict builder /
-    per-key applyInPandas route, across flush caps, NaN float keys, and
-    multi-column group keys."""
+    final grouped output are byte-identical to the generic route (one
+    sketch per key in stage 1, per-key applyInPandas merge), across flush
+    caps, NaN float keys, and multi-column group keys."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
 
@@ -547,9 +548,9 @@ def test_grouped_hll_fast_path_byte_identical(spark, events):
     )
 
     def generic_route(df, group_cols, specs, cap=1 << 16):
-        # _pre_merge_states always uses the generic dict builder (the
-        # all-HLL dispatch lives ONLY in grouped_sketch), so this is a
-        # true independent baseline for the fast path
+        # _pre_merge_states always builds one sketch per key (the all-HLL
+        # dispatch lives ONLY in grouped_sketch), so this is a true
+        # independent baseline for the fast path
         pre = _pre_merge_states(df, group_cols, specs, None, cap)
         out_schema = StructType([f for f in pre.schema.fields if f.name != _ORD_COL])
         return pre.groupBy(*group_cols).applyInPandas(
@@ -626,8 +627,8 @@ def test_grouped_hll_fast_path_dense_partials(spark, events):
 
 def test_grouped_kmv_fast_path_byte_identical(spark, events):
     """All-KMV spec lists take the vectorized (group, hash) k-min route;
-    gate: byte-identical to the generic dict builder / per-key
-    applyInPandas route, across flush caps and multi-spec lists, and
+    gate: byte-identical to the generic route (one sketch per key in
+    stage 1, per-key applyInPandas merge), across flush caps and multi-spec lists, and
     exact per-group distincts below capacity."""
     from pyspark.sql.types import StructType
 
@@ -942,8 +943,13 @@ def test_grouped_route_plan_nodes(spark, events):
     benchmark's route check reads: direct = MapInArrow and no MapInPandas
     for every key shape (one string, multi-column, float); partial =
     MapInPandas with no MapInArrow and no Sort (its merge is
-    order-insensitive); generic = FlatMapGroupsInPandas."""
+    order-insensitive); generic = FlatMapGroupsInPandas. Every builder
+    UDF prints its role as its name, and no name contains a node kind
+    the route check matches."""
     import re
+
+    from probably_jl_spark.operators.build import build_partials
+    from probably_jl_spark.operators.rollup import rollup_states
 
     hll = [SketchSpec("u", "hll", key_cols=("user_id",))]
     mixed = hll + [SketchSpec("td", "tdigest", value_col="value")]
@@ -952,17 +958,52 @@ def test_grouped_route_plan_nodes(spark, events):
         df.collect()
         return df._jdf.queryExecution().executedPlan().toString()
 
+    def names(p):
+        return set(re.findall(r"\b(?:MapInArrow|MapInPandas|FlatMapGroupsInPandas)\b.*?(\w+)\(", p))
+
     evf = events.withColumn("fkey", (F.col("user_id") % 3).cast("double"))
     for group_cols in (["event_type"], ["user_id", "event_type"], ["fkey"]):
         direct = plan(grouped_sketch(evf, group_cols, hll, pre_partial=False))
         assert "MapInArrow" in direct, group_cols
         assert "MapInPandas" not in direct and "FlatMapGroupsInPandas" not in direct
+        assert names(direct) == {"grouped_direct"}, direct
     partial = plan(grouped_sketch(events, ["event_type"], hll, pre_partial=True))
     assert "MapInPandas" in partial
     assert "MapInArrow" not in partial and "FlatMapGroupsInPandas" not in partial
     assert not re.search(r"\bSort\b", partial)
-    generic = plan(grouped_sketch(events, ["event_type"], mixed))
+    assert names(partial) == {"grouped_stage1", "grouped_merge"}, partial
+    generic_df = grouped_sketch(events, ["event_type"], mixed)
+    generic = plan(generic_df)
     assert "FlatMapGroupsInPandas" in generic
+    assert names(generic) == {"generic_stage1", "generic_merge"}, generic
+    salted = plan(grouped_sketch(events.repartition(4), ["event_type"], mixed, salt_buckets=2))
+    assert names(salted) == {"generic_stage1", "generic_salt_merge", "generic_merge"}, salted
+    rolled = plan(rollup_states(generic_df, []))
+    assert names(rolled) - names(generic) == {"rollup_stage1", "rollup_merge"}, rolled
+    fused = plan(build_partials(events, hll, lineage=False))
+    assert names(fused) == {"sketch_partials"}, fused
+
+
+def test_dispatch_sample_is_one_task_without_exchange(spark, monkeypatch):
+    """The distinct-ratio sample that picks the vectorized route reads
+    its rows in one task (``Coalesce 1``) and shuffles nothing."""
+    from probably_jl_spark.operators.grouped import _preagg_dedup_ratio
+
+    scan = spark.range(0, 50_000, 1, 4).select((F.col("id") % 10).alias("k"))
+    plans = []
+    cls = type(scan)
+    collect = cls.collect
+
+    def spy(self):
+        rows = collect(self)
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return rows
+
+    monkeypatch.setattr(cls, "collect", spy)
+    assert _preagg_dedup_ratio(scan, ["k"], 20_000) == 10 / 20_000
+    (p,) = plans
+    assert "Coalesce 1" in p, p
+    assert "Exchange" not in p, p
 
 
 def test_worker_zip_gate_installed_in_tasks(spark):
