@@ -1,14 +1,18 @@
 #!/usr/bin/env python
-"""Optimization-round measurement harness (guide §1): isolates each
-bench.py query with sub-stage timings + noop sinks and captures
-.explain("formatted") for plan evidence. Does NOT replace bench.py (the
-frozen driver contract) — numbers from here are cited in
-OPTIMIZATION_r06.md, plans land in plans/r06/.
+"""Measurement harness for the bench.py queries that perfbench does not
+run: text dedup and cleaning, the embedding similarity operators and the
+lineitem fused build. Each target times its query with sub-stage
+timings + noop sinks and can capture .explain("formatted") for plan
+evidence. Does NOT replace bench.py (the frozen driver contract). The
+grouped, rollup, fused-transcript and membership-probe queries are
+covered by perfbench's traced runs (scan, Arrow transfer and exchange
+layers per operator): ``python perfbench/run.py --workload <name>
+--seed 1 --seconds 15 --trace 1``.
 
 Usage: python bench_extra.py <target> [<target> ...]
-Targets: grouped_conv grouped_role rollup simhash clean clean_map
-         cosine ivf fused probe lineitem all
-Env: PJS_PLANDIR=plans/r06 to also write explain files.
+Targets: simhash clean clean_map cosine ivf lineitem all
+Env: PJS_PLANS=1 to also write explain files, into PJS_PLANDIR
+     (default plans/r06).
 """
 
 from __future__ import annotations
@@ -93,63 +97,6 @@ def docs_df(spark):
     return tr.filter(
         f"turn_idx = 0 AND pmod(xxhash64(conv_id), {doc_mod}) = 0"
     ).select(F.xxhash64("conv_id").alias("doc_id"), "text")
-
-
-def t_grouped_conv(spark, plans=False):
-    from probably_jl_spark.operators.grouped import grouped_sketch
-    from probably_jl_spark.operators.specs import SketchSpec
-
-    from probably_jl_spark.operators.build import plan_columns
-    from pyspark.sql import functions as F
-
-    tr = tr_df(spark)
-    specs = [SketchSpec("tools", "hll", key_cols=("tool",))]
-    spec_cols, _ = plan_columns(specs)
-    prepared = tr.select(F.col("conv_id"), *spec_cols)
-    shuffled = prepared.repartition("conv_id")
-    with timed("grouped_conv.exchange_noop", spark):
-        noop(shuffled)
-    with timed("grouped_conv.exchange_transfer_probe", spark):
-        _transfer_probe(shuffled).count()
-    out = grouped_sketch(tr, ["conv_id"], specs)
-    if plans:
-        write_plan(out, "grouped_hll_by_conv_after.txt")
-    with timed("grouped_hll_by_conv.count", spark):
-        n = out.count()
-    print(f"    groups={n}", file=sys.stderr)
-
-
-def t_grouped_role(spark, plans=False):
-    from probably_jl_spark.operators.grouped import grouped_sketch
-    from probably_jl_spark.operators.specs import SketchSpec
-
-    tr = tr_df(spark)
-    out = grouped_sketch(
-        tr,
-        ["role"],
-        [
-            SketchSpec("convs", "hll", key_cols=("conv_id",)),
-            SketchSpec("len", "kll", value_col="text_len"),
-        ],
-        salt_buckets=CPUS,
-    )
-    if plans:
-        write_plan(out, "grouped_salted_by_role_after.txt")
-    with timed("grouped_salted_by_role.collect", spark):
-        out.collect()
-
-
-def t_rollup(spark, plans=False):
-    from probably_jl_spark.operators.rollup import rollup_states
-
-    states = spark.read.parquet(os.path.join(CACHE, f"conv_states_{N_CONVS}"))
-    states.count()
-    out = rollup_states(states, [])
-    if plans:
-        write_plan(out, "rollup_conv_states_after.txt")
-    for i in range(2):
-        with timed(f"rollup.collect.{i}", spark):
-            out.collect()
 
 
 def t_simhash(spark, plans=False):
@@ -274,61 +221,6 @@ def t_ivf(spark, plans=False):
     emb.unpersist()
 
 
-def _transfer_probe(df):
-    """Trivial mapInPandas: counts rows per batch — times scan + Arrow
-    boundary + pandas conversion with zero kernel work."""
-    import pandas as pd
-
-    def fn(batches):
-        n = 0
-        for pdf in batches:
-            n += len(pdf)
-        yield pd.DataFrame({"n": [n]})
-
-    return df.mapInPandas(fn, schema="n long")
-
-
-def t_fused(spark, plans=False):
-    from probably_jl_spark.operators.build import build_partials, prepare, sketch_table
-
-    sys.path.insert(0, REPO)
-    import bench as _bench
-
-    tr = tr_df(spark)
-    specs = _bench.transcript_specs()
-    prepared, _ = prepare(tr, specs, lineage=False)
-    with timed("fused.scan_hash_noop", spark):
-        noop(prepared)
-    with timed("fused.transfer_probe", spark):
-        _transfer_probe(prepared).count()
-    with timed("fused.partials_noop", spark):
-        noop(build_partials(tr, specs, lineage=False))
-    if plans:
-        partials = build_partials(tr, specs, lineage=False)
-        write_plan(partials, "fused_transcripts_partials_after.txt")
-    for i in range(2):
-        with timed(f"fused_transcripts.{i}", spark):
-            r = sketch_table(tr, specs)
-    print(f"    n={r.n_rows}", file=sys.stderr)
-
-
-def t_probe(spark, plans=False):
-    from pyspark.sql import functions as F
-
-    from probably_jl_spark.functions import batch_contains
-    from probably_jl_spark.operators.build import sketch_table
-    import bench as _bench
-
-    tr = tr_df(spark)
-    res = sketch_table(tr, _bench.transcript_specs())
-    probes = spark.range(0, 1_000_000).select(
-        F.format_string("conv-%08d", F.col("id")).alias("conv_id")
-    )
-    for i in range(2):
-        with timed(f"membership_probe_1m.{i}", spark):
-            batch_contains(probes, ["conv_id"], res.sketches["conv_member"]).filter("member").count()
-
-
 def t_lineitem(spark, plans=False):
     from probably_jl_spark.operators.build import sketch_table
     from probably_jl_spark.operators.specs import SketchSpec
@@ -351,16 +243,11 @@ def t_lineitem(spark, plans=False):
 
 
 TARGETS = {
-    "grouped_conv": t_grouped_conv,
-    "grouped_role": t_grouped_role,
-    "rollup": t_rollup,
     "simhash": t_simhash,
     "clean": t_clean,
     "clean_map": t_clean_map,
     "cosine": t_cosine,
     "ivf": t_ivf,
-    "fused": t_fused,
-    "probe": t_probe,
     "lineitem": t_lineitem,
 }
 

@@ -173,6 +173,8 @@ def _build_partition(specs: list[SketchSpec], lineage: bool, col_map: dict):
 def build_partials(df: DataFrame, specs: list[SketchSpec], lineage: bool = True) -> DataFrame:
     """One fused vectorized pass: every spec updated from the same Arrow
     batches; one partial-state row per input partition."""
+    if not specs:
+        raise ValueError("build_partials: specs is empty; pass at least one SketchSpec")
     prepared, col_map = prepare(df, specs, lineage=lineage)
     return prepared.mapInPandas(
         _build_partition(specs, lineage, col_map), schema=partials_schema(specs)
@@ -270,57 +272,23 @@ class BuildResult:
     metrics: dict
 
 
-def build_preagg_cms(df: DataFrame, spec: SketchSpec):
-    """CMS over a low-cardinality key via JVM pre-aggregation: Catalyst's
-    partial/final hash aggregate reduces the rows map-side, so only
-    #distinct (hash, count) pairs cross the Arrow boundary instead of every
-    row (SURVEY.md §1.2 "Multiplicities"). The resulting state is
-    byte-identical to the row path — saturating adds are monotone, so
-    per-row and per-total clipping agree (law-tested)."""
-    agg = df.groupBy(F.xxhash64(*spec.key_cols).alias("__h")).agg(
-        (F.sum(spec.count_col) if spec.count_col else F.count(F.lit(1))).alias("__c")
-    )
-    col_map = {spec.name: {"h": "__h", "c": "__c"}}
-    # the spec's own count_col is already folded into __c
-    view = SketchSpec(spec.name, "cms", key_cols=spec.key_cols, count_col="__c", params=spec.params)
-    partials = agg.mapInPandas(
-        _build_partition([view], False, col_map), schema=partials_schema([view])
-    )
-    merged = tree_merge(partials, [view])
-    return merged[spec.name], merged["__n_rows"]
-
-
 def sketch_table(
     df: DataFrame,
     specs: list[SketchSpec],
     lineage: bool = False,
-    preagg: tuple[str, ...] = (),
 ) -> BuildResult:
     """End-to-end global sketch build: fused scan → partials → tree merge.
 
-    ``preagg`` names CMS specs whose keys are low-cardinality: those build
-    from a JVM groupBy(hash).count() instead of riding the fused Arrow
-    stream — byte-identical states, far fewer bytes across the JVM→Python
-    boundary, at the cost of one extra scan each. Measured guidance: wins
-    for CMS-only builds or very wide scans; loses when the fused pass
-    already scans the table (an extra 19M-row scan costs more than two
-    8-byte Arrow columns)."""
+    Pre-aggregated ``(key, count)`` input (SURVEY.md §1.2
+    "Multiplicities") needs no separate path: a CMS spec with
+    ``count_col`` adds each row's count, so
+    ``sketch_table(df.groupBy(k).count(), [SketchSpec(..., count_col="count")])``
+    gives the per-row build's CMS bytes (saturating adds are monotone)
+    with only the distinct keys crossing the Arrow boundary; ``n_rows``
+    then counts the aggregated rows."""
     t0 = time.perf_counter()
-    pre = [s for s in specs if s.name in preagg]
-    bad = [s.name for s in pre if s.kind != "cms"]
-    if bad:
-        raise ValueError(f"preagg only supports cms specs, got {bad}")
-    fused = [s for s in specs if s.name not in preagg]
-    merged: dict = {}
-    n = None
-    if fused:
-        partials = build_partials(df, fused, lineage=lineage)
-        merged = tree_merge(partials, fused)
-        n = merged.pop("__n_rows")
-    for s in pre:
-        merged[s.name], _ = build_preagg_cms(df, s)
-    if n is None:
-        n = df.count()
+    merged = tree_merge(build_partials(df, specs, lineage=lineage), specs)
+    n = merged.pop("__n_rows")
     wall = time.perf_counter() - t0
     metrics = {
         "n_rows": n,

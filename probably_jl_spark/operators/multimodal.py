@@ -218,7 +218,6 @@ def real_media_decoder(kind: str, payload: bytes) -> dict:
 def extract_media_features(
     df: DataFrame,
     decoder: Callable[[str, bytes], dict] | None = deterministic_fake_decoder,
-    batch_size_hint: int = 1024,
 ) -> DataFrame:
     """mapInPandas feature extraction over media rows. ``decoder=None``
     raises NotImplementedError (real decode unavailable here); pass

@@ -24,9 +24,10 @@ from pyspark.sql.types import LongType, StructField, StructType
 
 _log = logging.getLogger("probably_jl_spark.similarity")
 
-# auto `broadcast_vectors` ceiling for the candidate-pair vector attach:
-# the corpus vector table broadcasts when its estimated bytes fit below
-# this (each executor AND the driver hold one copy — size accordingly)
+# ceiling for the broadcast candidate-pair vector attach in
+# cosine_near_dup_pairs: the corpus vector table broadcasts when its
+# estimated bytes fit below this (each executor AND the driver hold one
+# copy — size accordingly)
 _BROADCAST_VECTORS_MAX_BYTES = 256 * 1024 * 1024
 
 
@@ -387,16 +388,10 @@ def ann_topk_lsh(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_probes: int = 3,
-    broadcast_vectors: bool = False,
 ) -> DataFrame:
     """Approximate top-k: multi-table LSH bucket join between corpus and
     queries, exact cosine rerank inside matched buckets only. Recall < 1
     by construction; verified against cosine_topk in tests/queries.
-
-    ``broadcast_vectors=True`` broadcasts the corpus vector table for
-    the candidate attach (see ``cosine_near_dup_pairs`` — the candidate
-    stream then never shuffles); only for corpora whose vectors fit
-    executor memory.
 
     ``n_probes=P`` probes P extra flipped-low-margin-bit buckets per
     table on the QUERY side only: at 100 TB the corpus-side key rows are
@@ -408,7 +403,9 @@ def ann_topk_lsh(
     Shuffle discipline: the bucket join and the candidate dedup move only
     (id, table, bucket) keys; vectors are attached exactly once per
     *deduped* candidate pair — query vectors via broadcast (the query set
-    is small by contract), corpus vectors via one id join."""
+    is small by contract), corpus vectors via one id join (which AQE's
+    runtime broadcast threshold, ``conf.py``, turns into a broadcast-hash
+    join when the corpus side is small)."""
     corpus_keys = multitable_buckets(emb_df, dim, n_tables, n_planes, seed, id_col, vec_col)
     query_keys = multitable_buckets(
         query_df, dim, n_tables, n_planes, seed, id_col, vec_col, probes=n_probes
@@ -425,8 +422,6 @@ def ann_topk_lsh(
     )
     qvecs = query_df.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"))
     nvecs = emb_df.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col))
-    if broadcast_vectors:
-        nvecs = F.broadcast(nvecs)
     scored = _rerank_pairs(
         cands.join(F.broadcast(qvecs), "query_id").join(nvecs, "neighbor_id"),
         "qvec",
@@ -595,25 +590,24 @@ def cosine_near_dup_pairs(
     target_recall: float = 0.98,
     corpus_size: int | None = None,
     materialize: str = "local",
-    broadcast_vectors: bool | None = None,
 ) -> DataFrame:
     """Embedding near-duplicate pairs (cosine >= threshold): candidates
     are the UNION over ``n_tables`` independent sign-LSH tables of
     ``n_planes`` hyperplanes each, then one exact cosine rerank — the
     embedding-space analogue of banded MinHash dedup.
 
-    ``broadcast_vectors`` controls the candidate-pair vector attach —
-    the DOMINANT cost of this operator once candidates number in the
-    millions (r5 profile at 505k vectors / 14M candidates: the two
-    shuffle joins moving the (pair, va, vb) intermediate were 109 of
-    130 s; broadcast attach ran the same stage in <15 s). When the
-    corpus vector table fits executor/driver memory
-    (roughly corpus_size x (4*dim + 32) bytes <= 256 MB), both id joins
-    become broadcast-hash joins and the pair stream never shuffles.
-    ``None`` (default) decides automatically from ``corpus_size`` (known
-    or HLL-estimated; stays False when unknown); at 10^9+ vectors the
-    corpus cannot broadcast and the shuffle-join plan is the correct
-    one — pass False to force it.
+    The candidate-pair vector attach is the DOMINANT cost of this
+    operator once candidates number in the millions (r5 profile at 505k
+    vectors / 14M candidates: the two shuffle joins moving the (pair,
+    va, vb) intermediate were 109 of 130 s; broadcast attach ran the
+    same stage in <15 s). It is chosen from ``corpus_size`` (passed or
+    HLL-estimated) and the id type: when the corpus vector table fits
+    executor/driver memory (roughly corpus_size x (4*dim + 32) bytes
+    <= 256 MB) the corpus broadcasts — as one numpy lookup table for
+    integral ids, as two broadcast-hash joins otherwise — and the pair
+    stream never shuffles. With the size unknown (``n_planes`` pinned,
+    no ``corpus_size``) or over the ceiling (at 10^9+ vectors the corpus
+    cannot broadcast) the attach is two shuffle joins.
 
     Sizing is AUTOMATIC by default (VERDICT r03 "What's wrong #1": the
     old frozen 12x8 made candidate volume ~ L*N^2/2^(b+1) quadratic in
@@ -761,11 +755,10 @@ def cosine_near_dup_pairs(
     if star is not None:
         pairs = pairs.unionByName(star)
     pairs = pairs.distinct()  # dedup across tables before vectors attach
-    if broadcast_vectors is None:
-        vec_bytes = None if corpus_size is None else corpus_size * (4 * dim + 32)
-        broadcast_vectors = (
-            vec_bytes is not None and vec_bytes <= _BROADCAST_VECTORS_MAX_BYTES
-        )
+    broadcast_vectors = (
+        corpus_size is not None
+        and corpus_size * (4 * dim + 32) <= _BROADCAST_VECTORS_MAX_BYTES
+    )
     from pyspark.sql.types import IntegerType, LongType
 
     if broadcast_vectors and isinstance(
@@ -812,7 +805,6 @@ def dedup_embeddings(
     target_recall: float = 0.98,
     corpus_size: int | None = None,
     materialize: str = "local",
-    broadcast_vectors: bool | None = None,
 ) -> DataFrame:
     """End-to-end embedding dedup — the similarity-space twin of the
     MinHash document pipeline: multi-table LSH near-dup pairs
@@ -839,7 +831,6 @@ def dedup_embeddings(
     pairs = cosine_near_dup_pairs(
         emb_df, threshold, dim, n_planes, seed, id_col, vec_col,
         max_bucket_size, n_tables, target_recall, corpus_size, materialize,
-        broadcast_vectors,
     )
     return dedup_assign(
         emb_df, pairs.select("id_a", "id_b"), id_col=id_col, materialize=materialize
@@ -1097,7 +1088,6 @@ def ann_topk_ivf(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_list_size: int | None = None,
-    broadcast_vectors: bool = False,
     fused_max_queries: int = 256,
 ) -> DataFrame:
     """IVF approximate top-k — the clustered-data scale path next to the
@@ -1156,10 +1146,6 @@ def ann_topk_ivf(
     )
     qvecs = query_df.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"))
     nvecs = emb_df.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col))
-    if broadcast_vectors:
-        # corpus-fits-memory fast path: the candidate attach becomes a
-        # broadcast-hash join, see cosine_near_dup_pairs
-        nvecs = F.broadcast(nvecs)
     scored = _rerank_pairs(
         cands.join(F.broadcast(qvecs), "query_id").join(nvecs, "neighbor_id"),
         "qvec",

@@ -76,11 +76,10 @@ def hll_distinct_custkey(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def hll_grouped_users_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-group (salted) HLL: distinct users per event_type."""
+    """Per-group HLL: distinct users per event_type."""
     ev = _t(spark, sf_dir, "events")
     states = grouped_sketch(
-        ev, ["event_type"], [SketchSpec("u", "hll", key_cols=("user_id",))],
-        salt_buckets=8,
+        ev, ["event_type"], [SketchSpec("u", "hll", key_cols=("user_id",))]
     ).toPandas()
     exact = {
         r["event_type"]: r["n"]

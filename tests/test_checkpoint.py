@@ -145,7 +145,7 @@ def test_many_bucket_merge_stays_off_driver(spark, ckpt_dir):
     group states, never 256 bucket rows."""
     ev = spark.read.parquet(f"{SF}/events.parquet")
     build = CheckpointedSketchBuild(
-        spark, SPECS[:1], ckpt_dir, n_buckets=256, bucket_cols=("user_id",), merge_groups=64
+        spark, SPECS[:1], ckpt_dir, n_buckets=256, bucket_cols=("user_id",)
     )
     res = build.run(ev)
     assert res.n_rows == 1000

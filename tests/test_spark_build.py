@@ -217,27 +217,29 @@ def test_latency_window(spark, events):
     assert len(pdf) > 0
 
 
-def test_preagg_cms_byte_identical(spark, events):
-    """CMS built from a JVM groupBy(hash).count() pre-aggregation must be
-    byte-identical to the per-row Arrow path (saturating adds are
-    monotone)."""
+def test_count_col_cms_byte_identical(spark, events):
+    """Pre-aggregated (key, count) rows (SURVEY.md §1.2 "Multiplicities"):
+    a CMS with ``count_col`` over ``groupBy(key).count()`` must be
+    byte-identical to the per-row build (saturating adds are monotone)."""
     spec = SketchSpec("t", "cms", key_cols=("event_type",), params={"width": 1024, "depth": 4})
     row_path = sketch_table(events, [spec])
-    pre_path = sketch_table(events, [spec], preagg=("t",))
-    assert row_path.sketches["t"].to_bytes() == pre_path.sketches["t"].to_bytes()
-    assert pre_path.n_rows == 1000
-    # mixed fused + preagg
-    mixed = sketch_table(
-        events,
-        [SketchSpec("u", "hll", key_cols=("user_id",)), spec],
-        preagg=("t",),
+    assert row_path.n_rows == 1000
+    counts = events.groupBy("event_type").count()
+    weighted = SketchSpec(
+        "t", "cms", key_cols=("event_type",), count_col="count", params=spec.params
     )
-    assert mixed.sketches["t"].to_bytes() == row_path.sketches["t"].to_bytes()
-    assert mixed.sketches["u"].cardinality() > 0
-    import pytest as _pytest
+    pre_path = sketch_table(counts, [weighted])
+    assert pre_path.sketches["t"].to_bytes() == row_path.sketches["t"].to_bytes()
+    assert pre_path.n_rows == counts.count()
 
-    with _pytest.raises(ValueError, match="preagg only supports cms"):
-        sketch_table(events, [SketchSpec("u", "hll", key_cols=("user_id",))], preagg=("u",))
+
+def test_empty_spec_list_raises(spark, events):
+    """No specs is a caller error at plan time, on both entry points,
+    not a PythonException from the executor."""
+    with pytest.raises(ValueError, match="build_partials: specs is empty"):
+        build_partials(events, [])
+    with pytest.raises(ValueError, match="build_partials: specs is empty"):
+        sketch_table(events, [])
 
 
 def test_grouped_flush_cap_is_lossless(spark, events):
