@@ -272,11 +272,7 @@ class BuildResult:
     metrics: dict
 
 
-def sketch_table(
-    df: DataFrame,
-    specs: list[SketchSpec],
-    lineage: bool = False,
-) -> BuildResult:
+def sketch_table(df: DataFrame, specs: list[SketchSpec]) -> BuildResult:
     """End-to-end global sketch build: fused scan → partials → tree merge.
 
     Pre-aggregated ``(key, count)`` input (SURVEY.md §1.2
@@ -287,7 +283,8 @@ def sketch_table(
     with only the distinct keys crossing the Arrow boundary; ``n_rows``
     then counts the aggregated rows."""
     t0 = time.perf_counter()
-    merged = tree_merge(build_partials(df, specs, lineage=lineage), specs)
+    # no input_file_name lineage: tree_merge reads only the states and n_rows
+    merged = tree_merge(build_partials(df, specs, lineage=False), specs)
     n = merged.pop("__n_rows")
     wall = time.perf_counter() - t0
     metrics = {

@@ -151,8 +151,6 @@ def lsh_candidate_pairs(
     ``operators.materialize.materialize``) because the over-list agg,
     both split branches and both self-join sides read them and Catalyst
     does not reuse exchanges across branches."""
-    from .materialize import materialize as _mat
-
     if bands < 1 or rows_per_band < 1:
         raise ValueError(
             f"lsh_candidate_pairs: bands ({bands}) and rows_per_band "
@@ -168,6 +166,27 @@ def lsh_candidate_pairs(
         ]
     )
     banded = sig_df.select(F.col(id_col), F.posexplode(bandcols).alias("band", "bucket"))
+    return _bucket_pairs(banded, id_col, max_bucket_size, materialize)
+
+
+def _bucket_pairs(
+    banded: DataFrame,
+    id_col: str,
+    max_bucket_size: int | None,
+    materialize: str,
+    carry: str | None = None,
+) -> DataFrame:
+    """Distinct (id_a, id_b) pairs, id_a < id_b, of rows sharing a
+    (band, bucket): the banded self-join of both LSH dedup paths. With a
+    finite ``max_bucket_size`` the banded rows are materialized once and
+    each over-cap bucket emits a min-id star instead (see
+    ``lsh_candidate_pairs``). A ``carry`` column rides along as
+    ``sim_a``/``sim_b`` (its value on the id_a / id_b row)."""
+    from .materialize import materialize as _mat
+
+    # the carried column on the id_a / id_b side, in the star and the self-join
+    star_carry = ["sim_a", F.col(carry).alias("sim_b")] if carry else []
+    join_carry = [F.col(f"l.{carry}").alias("sim_a"), F.col(f"r.{carry}").alias("sim_b")] if carry else []
     star = None
     if max_bucket_size is not None:
         from .skew import split_over_cap
@@ -177,20 +196,28 @@ def lsh_candidate_pairs(
         # one representative (min id) per over-cap bucket — again a tiny
         # aggregate (<= one row per over-cap bucket), broadcast back to
         # form the linear star; id_a < id_b holds because rep = min
-        reps = over_rows.groupBy("band", "bucket").agg(F.min(id_col).alias("id_a"))
+        rep = [F.min(id_col).alias("id_a")]
+        rep += [F.min_by(carry, F.col(id_col)).alias("sim_a")] if carry else []
+        reps = over_rows.groupBy("band", "bucket").agg(*rep)
         star = (
             over_rows.join(F.broadcast(reps), ["band", "bucket"])
             .filter(F.col(id_col) != F.col("id_a"))
-            .select("id_a", F.col(id_col).alias("id_b"))
+            .select("id_a", F.col(id_col).alias("id_b"), *star_carry)
         )
-    left = banded.alias("l")
-    right = banded.alias("r")
-    pairs = left.join(
-        right,
-        (F.col("l.band") == F.col("r.band"))
-        & (F.col("l.bucket") == F.col("r.bucket"))
-        & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-    ).select(F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b"))
+    pairs = (
+        banded.alias("l")
+        .join(
+            banded.alias("r"),
+            (F.col("l.band") == F.col("r.band"))
+            & (F.col("l.bucket") == F.col("r.bucket"))
+            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
+        )
+        .select(
+            F.col(f"l.{id_col}").alias("id_a"),
+            F.col(f"r.{id_col}").alias("id_b"),
+            *join_carry,
+        )
+    )
     if star is not None:
         pairs = pairs.unionByName(star)
     return pairs.distinct()
@@ -414,48 +441,13 @@ def simhash_near_dups(
     a true pair whose ONLY shared chunk fell in that bucket is lost.
     Set a cap when the corpus is boilerplate-skewed and that recall trade
     is acceptable."""
-    from .materialize import materialize as _mat
-
     sh = simhash(df, id_col, text_col)
     bandcols = F.array(
         *[F.shiftright(F.col("simhash"), 16 * b).bitwiseAND(F.lit(0xFFFF)) for b in range(4)]
     )
-    banded = sh.select(F.col(id_col), F.col("simhash"), F.posexplode(bandcols).alias("band", "chunk"))
-    star = None
-    if max_bucket_size is not None:
-        from .skew import split_over_cap
-
-        banded = _mat(banded, materialize)
-        banded, over_rows = split_over_cap(banded, ["band", "chunk"], max_bucket_size)
-        reps = over_rows.groupBy("band", "chunk").agg(
-            F.min(id_col).alias("id_a"), F.min_by("simhash", F.col(id_col)).alias("sim_a")
-        )
-        star = (
-            over_rows.join(F.broadcast(reps), ["band", "chunk"])
-            .filter(F.col(id_col) != F.col("id_a"))
-            .select(
-                "id_a",
-                F.col(id_col).alias("id_b"),
-                "sim_a",
-                F.col("simhash").alias("sim_b"),
-            )
-        )
-    l, r = banded.alias("l"), banded.alias("r")
-    cands = l.join(
-        r,
-        (F.col("l.band") == F.col("r.band"))
-        & (F.col("l.chunk") == F.col("r.chunk"))
-        & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-    ).select(
-        F.col(f"l.{id_col}").alias("id_a"),
-        F.col(f"r.{id_col}").alias("id_b"),
-        F.col("l.simhash").alias("sim_a"),
-        F.col("r.simhash").alias("sim_b"),
-    )
-    if star is not None:
-        cands = cands.unionByName(star)
+    banded = sh.select(F.col(id_col), F.col("simhash"), F.posexplode(bandcols).alias("band", "bucket"))
     return (
-        cands.distinct()
+        _bucket_pairs(banded, id_col, max_bucket_size, materialize, carry="simhash")
         .withColumn("hamming", F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b"))))
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")

@@ -80,6 +80,16 @@ def _id_i64(batch, colname: str):
     return arr.to_numpy(zero_copy_only=False)
 
 
+def _pair_cosine(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Row-wise cosine of two (rows, dim) float32 matrices: float64 einsum
+    dot over the float32 norm product. The one pair kernel, so every
+    rerank path gives bit-identical sims; no input is mutated (the
+    matrices can be read-only views of Arrow buffers)."""
+    dot = np.einsum("ij,ij->i", a, b, dtype=np.float64)
+    norm = np.maximum(np.linalg.norm(a, axis=1) * np.linalg.norm(b, axis=1), 1e-12)
+    return dot / norm.astype(np.float64)
+
+
 def _rerank_pairs(
     df: DataFrame,
     a_col: str,
@@ -105,26 +115,10 @@ def _rerank_pairs(
 
     def fn(batches):
         for batch in batches:
-            n = batch.num_rows
-            if n == 0:
+            if batch.num_rows == 0:
                 continue
-            names = batch.schema.names
-
-            def mat(colname):
-                arr = batch.column(names.index(colname))
-                # flatten() honors list offsets/slices; the flat float
-                # buffer reshapes to (rows, dim) without per-row Python
-                flat = arr.flatten().to_numpy(zero_copy_only=False)
-                return np.ascontiguousarray(flat, dtype=np.float32).reshape(n, -1)
-
-            a = mat(a_col)
-            b = mat(b_col)
-            dot = np.einsum("ij,ij->i", a, b, dtype=np.float64)
-            norm = np.maximum(
-                np.linalg.norm(a, axis=1) * np.linalg.norm(b, axis=1), 1e-12
-            ).astype(np.float64)
-            sim = dot / norm
-            arrays = [batch.column(names.index(c)) for c in keep_cols]
+            sim = _pair_cosine(_batch_mat(batch, a_col), _batch_mat(batch, b_col))
+            arrays = [batch.column(batch.schema.names.index(c)) for c in keep_cols]
             arrays.append(pa.array(sim, type=pa.float64()))
             yield pa.RecordBatch.from_arrays(arrays, keep_cols + [sim_col])
 
@@ -179,21 +173,15 @@ def _broadcast_lookup_rerank(
     def fn(batches):
         ids_s, mat_s = bc.value
         for batch in batches:
-            n = batch.num_rows
-            if n == 0:
+            if batch.num_rows == 0:
                 continue
             a = mat_s[gather(batch, "id_a", ids_s)]
-            b = mat_s[gather(batch, "id_b", ids_s)]
-            # identical ops/dtypes to _rerank_pairs
-            dot = np.einsum("ij,ij->i", a, b, dtype=np.float64)
-            norm = np.maximum(
-                np.linalg.norm(a, axis=1) * np.linalg.norm(b, axis=1), 1e-12
-            ).astype(np.float64)
+            sim = _pair_cosine(a, mat_s[gather(batch, "id_b", ids_s)])
             yield pa.RecordBatch.from_arrays(
                 [
                     batch.column(batch.schema.names.index("id_a")),
                     batch.column(batch.schema.names.index("id_b")),
-                    pa.array(dot / norm, type=pa.float64()),
+                    pa.array(sim, type=pa.float64()),
                 ],
                 ["id_a", "id_b", sim_col],
             )
@@ -203,6 +191,13 @@ def _broadcast_lookup_rerank(
         f"id_b {pairs.schema['id_b'].dataType.simpleString()}, {sim_col} double"
     )
     return pairs.mapInArrow(fn, schema)
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """The ``k`` best (query_id, neighbor_id, sim) rows per query, ranked
+    by sim descending, ties by neighbor_id ascending (deterministic)."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
 def cosine_topk(
@@ -252,12 +247,7 @@ def cosine_topk(
     local = emb_df.mapInArrow(part, schema="query_id long, neighbor_id long, sim double")
     if exclude_self:
         local = local.filter(F.col("query_id") != F.col("neighbor_id"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "sim", "rank")
-    )
+    return _top_k(local, k)
 
 
 def _planes(dim: int, n_planes: int, seed: int) -> np.ndarray:
@@ -377,6 +367,23 @@ def multitable_buckets(
     return emb_df.mapInArrow(part, schema=f"{id_col} long, table int, bucket long")
 
 
+def _rerank_topk(
+    cands: DataFrame, query_df: DataFrame, emb_df: DataFrame, k: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """Exact-cosine top-k over deduped (query_id, neighbor_id) candidates:
+    query vectors attach by broadcast (the query set is small by
+    contract), corpus vectors by one id join, then ``_rerank_pairs``."""
+    qvecs = query_df.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"))
+    nvecs = emb_df.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col))
+    scored = _rerank_pairs(
+        cands.join(F.broadcast(qvecs), "query_id").join(nvecs, "neighbor_id"),
+        "qvec",
+        vec_col,
+        ["query_id", "neighbor_id"],
+    )
+    return _top_k(scored, k)
+
+
 def ann_topk_lsh(
     emb_df: DataFrame,
     query_df: DataFrame,
@@ -420,19 +427,7 @@ def ann_topk_lsh(
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    qvecs = query_df.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"))
-    nvecs = emb_df.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col))
-    scored = _rerank_pairs(
-        cands.join(F.broadcast(qvecs), "query_id").join(nvecs, "neighbor_id"),
-        "qvec",
-        vec_col,
-        ["query_id", "neighbor_id"],
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _rerank_topk(cands, query_df, emb_df, k, id_col, vec_col)
 
 
 def estimate_corpus_size(emb_df: DataFrame, id_col: str = "vec_id") -> int:
@@ -1071,9 +1066,7 @@ def _ann_ivf_fused(
                 ["query_id", "neighbor_id", "sim"],
             )
 
-    scored = emb_df.mapInArrow(part, schema="query_id long, neighbor_id long, sim double")
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _top_k(emb_df.mapInArrow(part, schema="query_id long, neighbor_id long, sim double"), k)
 
 
 def ann_topk_ivf(
@@ -1144,16 +1137,4 @@ def ann_topk_ivf(
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    qvecs = query_df.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"))
-    nvecs = emb_df.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col))
-    scored = _rerank_pairs(
-        cands.join(F.broadcast(qvecs), "query_id").join(nvecs, "neighbor_id"),
-        "qvec",
-        vec_col,
-        ["query_id", "neighbor_id"],
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _rerank_topk(cands, query_df, emb_df, k, id_col, vec_col)

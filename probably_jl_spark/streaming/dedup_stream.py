@@ -14,22 +14,20 @@ composes them:
   every previously-seen content hash; rows whose hash is already present
   are dropped, new rows are delivered to the caller's sink and their
   hashes inserted into the filter;
-* the filter + keep counters persist through ``SketchStateStore``
-  (Hadoop FS API, versioned snapshots), and the stored
-  ``last_batch_id`` makes replayed batches no-ops — keep decisions are
-  exactly-once across kill/restart as long as the sink is also
-  idempotent per batch id (Spark's own foreachBatch contract).
+* the filter + keep counters persist through ``SketchStateStore``, and
+  each micro-batch commits through stream_build's one commit path
+  (``_run_batch``): the stored ``last_batch_id`` and checkpoint epoch
+  make replayed batches no-ops (``_is_replay`` states the rule) — keep
+  decisions are exactly-once across kill/restart as long as the sink is
+  also idempotent per batch id (Spark's own foreachBatch contract).
 
-Checkpoint resets (code-review r4): Spark's batch ids are scoped to the
-query CHECKPOINT, so after a checkpoint loss/reset the re-delivered data
-arrives renumbered from 0. The state records which checkpoint its batch
-ids belong to; on a mismatch the batch-id guard resets instead of
-silently discarding renumbered NEW data, and dedup correctness falls
-back to the Bloom filter itself (content-based: previously-ingested
-texts are "seen" and drop, genuinely-new ones keep). Within one
-checkpoint lineage keep decisions are exactly-once; across a checkpoint
-reset they are at-least-once for any batch that sank rows but crashed
-before the state committed.
+Checkpoint resets: after a checkpoint loss/reset the re-delivered data
+arrives renumbered from 0 in a new epoch and is processed, not skipped;
+dedup correctness then falls back to the Bloom filter itself
+(content-based: previously-ingested texts are "seen" and drop,
+genuinely-new ones keep). Across a reset keep decisions are
+at-least-once for any batch that sank rows but crashed before the state
+committed.
 
 Semantics note (the documented trade): a Bloom "seen" answer can be a
 false positive, so a genuinely-new document is dropped with probability
@@ -47,12 +45,15 @@ Scale shape: the probe broadcasts the filter and runs vectorized inside
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from ..sketches.bloom import BloomFilter
-from .stream_build import SketchStateStore, checkpoint_identity
+from .stream_build import SketchStateStore, _run_batch, _start_stream
 
 
 def seen_before_stream(
@@ -75,20 +76,11 @@ def seen_before_stream(
 
     Inspect progress any time via ``seen_stats(state_dir, spark)``.
     """
-    store = SketchStateStore(state_dir)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        process_seen_batch(
-            batch_df, batch_id, store, checkpoint_dir, sink,
-            id_col=id_col, text_col=text_col, bloom_m=bloom_m, bloom_k=bloom_k,
-        )
-
-    writer = sdf.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
+    body = functools.partial(
+        process_seen_batch, sink=sink, id_col=id_col, text_col=text_col,
+        bloom_m=bloom_m, bloom_k=bloom_k,
     )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
+    return _start_stream(sdf, state_dir, checkpoint_dir, trigger, body)
 
 
 def process_seen_batch(
@@ -107,26 +99,14 @@ def process_seen_batch(
     oracle query ``seen_before_stream_docs`` feeds two static DataFrames
     through it and compares kept rows to a DuckDB first-occurrence
     truth; test_streaming covers the writeStream wiring)."""
-    from pyspark.sql.types import StructType
+    _run_batch(
+        store, batch_df, batch_id, checkpoint_dir,
+        functools.partial(_seen_step, batch_df, batch_id, sink, id_col, text_col, bloom_m, bloom_k),
+    )
 
-    store._spark = batch_df.sparkSession
-    states, last, lin = store.load_full()
-    blobs = states.get((), {})
-    # batch ids are scoped to the query checkpoint's numbering EPOCH: on
-    # a checkpoint reset the stored ids are from a different numbering,
-    # so the guard must reset too (replayed OLD texts still drop — the
-    # Bloom filter is content-based), else renumbered NEW data is
-    # silently discarded (code-review r4). The epoch is the query id
-    # from <checkpoint>/metadata, NOT the dir path — a wiped dir keeps
-    # its path (code-review r5); checkpoint_identity handles both.
-    lineage = checkpoint_identity(batch_df.sparkSession, checkpoint_dir)
-    stored = blobs.get("lineage", lin)
-    # legacy snapshots stored the checkpoint DIR PATH as the lineage
-    # (pre-queryId format): accept it too, else the first restart
-    # after upgrading re-invokes the sink for one replayed batch
-    # (ADVICE r5)
-    if stored in (lineage, checkpoint_dir) and batch_id <= last:
-        return  # same lineage, replayed batch: decisions already made
+
+def _seen_step(batch_df, batch_id, sink, id_col, text_col, bloom_m, bloom_k, states) -> None:
+    blobs = states.setdefault((), {})
     bf = (
         BloomFilter.from_bytes(blobs["seen"])
         if "seen" in blobs
@@ -156,8 +136,6 @@ def process_seen_batch(
         # seen text, and two new texts sharing a min id would
         # conflate. The pair pins each kept row to the exact
         # (text, representative) decision made above.
-        from pyspark.sql.types import LongType, StructField
-
         keep_schema = StructType(
             [StructField("__h", LongType()), batch_df.schema[id_col]]
         )
@@ -188,9 +166,6 @@ def process_seen_batch(
     blobs["seen"] = bf.to_bytes()
     blobs["n_kept"] = blobs.get("n_kept", 0) + len(picked)
     blobs["n_rows"] = blobs.get("n_rows", 0) + n_batch_rows
-    blobs.pop("lineage", None)  # superseded by the store-level epoch field
-    states[()] = blobs
-    store.save(states, batch_id, lineage=lineage)
 
 
 
@@ -300,20 +275,11 @@ def near_seen_before_stream(
         raise ValueError(
             f"max_hamming must be in 0..3 (4-band exact-match probe), got {max_hamming}"
         )
-    store = SketchStateStore(state_dir)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        process_near_seen_batch(
-            batch_df, batch_id, store, checkpoint_dir, sink,
-            id_col=id_col, text_col=text_col, max_hamming=max_hamming,
-        )
-
-    writer = sdf.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
+    body = functools.partial(
+        process_near_seen_batch, sink=sink, id_col=id_col, text_col=text_col,
+        max_hamming=max_hamming,
     )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
+    return _start_stream(sdf, state_dir, checkpoint_dir, trigger, body)
 
 
 def process_near_seen_batch(
@@ -328,20 +294,16 @@ def process_near_seen_batch(
 ) -> None:
     """foreachBatch body of ``near_seen_before_stream`` (module-level for
     direct replay, like ``process_seen_batch``)."""
+    _run_batch(
+        store, batch_df, batch_id, checkpoint_dir,
+        functools.partial(_near_seen_step, batch_df, batch_id, sink, id_col, text_col, max_hamming),
+    )
+
+
+def _near_seen_step(batch_df, batch_id, sink, id_col, text_col, max_hamming, states) -> None:
     from ..operators.dedup import simhash
 
-    store._spark = batch_df.sparkSession
-    states, last, lin = store.load_full()
-    blobs = states.get((), {})
-    # epoch-keyed replay guard (see process_seen_batch — same rule)
-    lineage = checkpoint_identity(batch_df.sparkSession, checkpoint_dir)
-    stored = blobs.get("lineage", lin)
-    # legacy snapshots stored the checkpoint DIR PATH as the lineage
-    # (pre-queryId format): accept it too, else the first restart
-    # after upgrading re-invokes the sink for one replayed batch
-    # (ADVICE r5)
-    if stored in (lineage, checkpoint_dir) and batch_id <= last:
-        return  # same lineage, replayed batch: decisions already made
+    blobs = states.setdefault((), {})
     state = (
         np.frombuffer(blobs["seen_hashes"], dtype=np.uint64)
         if "seen_hashes" in blobs
@@ -397,8 +359,6 @@ def process_near_seen_batch(
                 chunk_idx[b].setdefault(int((h_i >> np.uint64(16 * b)) & np.uint64(0xFFFF)), []).append(pos)
         # surviving rows: ids are unique per batch (simhash contract), so
         # the id semi-join is exact here
-        from pyspark.sql.types import StructType
-
         keep_schema = StructType([batch_df.schema[id_col]])
         new_rows = batch_df.join(
             F.broadcast(
@@ -414,36 +374,30 @@ def process_near_seen_batch(
     blobs["seen_hashes"] = state.tobytes()
     blobs["n_kept"] = blobs.get("n_kept", 0) + len(kept_h)
     blobs["n_rows"] = blobs.get("n_rows", 0) + n_batch_rows
-    blobs.pop("lineage", None)  # superseded by the store-level epoch field
-    states[()] = blobs
-    store.save(states, batch_id, lineage=lineage)
+
+
+def _stats(state_dir: str, spark) -> tuple[dict, dict]:
+    """(the global group's blobs, the counters both stats report)."""
+    states, last = SketchStateStore(state_dir, spark).load()
+    blobs = states.get((), {})
+    return blobs, {
+        "last_batch_id": last,
+        "n_rows": blobs.get("n_rows", 0),
+        "n_kept": blobs.get("n_kept", 0),
+    }
 
 
 def near_seen_stats(state_dir: str, spark=None) -> dict:
     """{'n_rows', 'n_kept', 'state_hashes'} from the persisted fuzzy
     state (state_hashes = kept rows = 8 bytes each in the broadcast)."""
-    store = SketchStateStore(state_dir, spark)
-    states, last = store.load()
-    blobs = states.get((), {})
-    return {
-        "last_batch_id": last,
-        "n_rows": blobs.get("n_rows", 0),
-        "n_kept": blobs.get("n_kept", 0),
-        "state_hashes": len(blobs.get("seen_hashes", b"")) // 8,
-    }
+    blobs, out = _stats(state_dir, spark)
+    return {**out, "state_hashes": len(blobs.get("seen_hashes", b"")) // 8}
 
 
 def seen_stats(state_dir: str, spark=None) -> dict:
     """{'n_rows', 'n_kept', 'seen_cardinality_est'} from the persisted
     state (cardinality via the Bloom estimator, bloom.py)."""
-    store = SketchStateStore(state_dir, spark)
-    states, last = store.load()
-    blobs = states.get((), {})
-    out = {
-        "last_batch_id": last,
-        "n_rows": blobs.get("n_rows", 0),
-        "n_kept": blobs.get("n_kept", 0),
-    }
+    blobs, out = _stats(state_dir, spark)
     if "seen" in blobs:
         out["seen_cardinality_est"] = BloomFilter.from_bytes(blobs["seen"]).cardinality()
     return out

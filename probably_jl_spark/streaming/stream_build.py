@@ -1,23 +1,29 @@
-"""Structured-Streaming sketch build.
+"""Structured-Streaming sketch build, and the one micro-batch commit path
+of every streaming operator.
 
 Sketches are CRDT-ish mergeable states, so streaming ingestion is
 foreachBatch + merge: every micro-batch runs the same fused vectorized
 partition-local build as the batch path (operators/build.py), and the
-resulting per-batch states merge into a persisted running state. Restart
-safety comes from Spark's checkpointed batchId: a replayed batch with an
-already-applied id is skipped (idempotent sink), so states are
-exactly-once even though the merge itself is at-least-once-safe for HLL /
-Bloom (idempotent) and guarded by the id for CMS / quantiles (which are
-not idempotent under re-merge).
+per-batch states merge into a persisted running state
+(``SketchStateStore``).
 
-``windowed_sketch_stream`` keys the same machinery by an event-time
-window (tumbling), giving per-window sketch states — late data merges
-into its window's state whenever it arrives, watermark-free (sketch
-merge is order-independent, unlike exact windowed aggregation).
+All four operators (``sketch_stream``, ``windowed_sketch_stream`` and
+dedup_stream.py's two pre-filters) start through ``_start_stream`` and
+commit each micro-batch through ``_run_batch``; an operator is only its
+step. Restart safety comes from Spark's checkpointed batch id: a
+replayed batch (``_is_replay``) is skipped, so states are exactly-once
+even though only HLL / Bloom merges are idempotent (CMS, quantiles and
+the dedup keep decisions are not).
+
+``windowed_sketch_stream`` keys the same machinery by a tumbling
+event-time window (``F.window``), giving per-window sketch states — late
+data merges into its window's state whenever it arrives, watermark-free
+(sketch merge is order-independent, unlike exact windowed aggregation).
 """
 
 from __future__ import annotations
 
+import functools
 import pickle
 
 from pyspark.sql import DataFrame, SparkSession
@@ -117,19 +123,11 @@ class SketchStateStore:
             return {}, -1, None
         _, path = snaps[-1]
         key = (str(path), fs.getFileStatus(path).getLen())
-        if self._cache is not None and self._cache[0] == key:
-            states, last, lin = self._cache[1]
-            return self._copy_states(states), last, lin
-        snapshot = self._read_snapshot(jvm, fs, path)
-        self._cache = (
-            key,
-            (snapshot["states"], snapshot["last_batch_id"], snapshot.get("lineage")),
-        )
-        return (
-            self._copy_states(snapshot["states"]),
-            snapshot["last_batch_id"],
-            snapshot.get("lineage"),
-        )
+        if self._cache is None or self._cache[0] != key:
+            snap = self._read_snapshot(jvm, fs, path)
+            self._cache = (key, (snap["states"], snap["last_batch_id"], snap.get("lineage")))
+        states, last, lin = self._cache[1]
+        return self._copy_states(states), last, lin
 
     def save(self, states: dict, batch_id: int, lineage: str | None = None) -> None:
         jvm, fs, dirp = self._fs()
@@ -224,6 +222,102 @@ def checkpoint_identity(spark, checkpoint_dir: str) -> str:
         return checkpoint_dir
 
 
+def _is_replay(
+    batch_id: int, last: int, lineage: str | None, legacy: str | None, identity: str, checkpoint_dir: str
+) -> bool:
+    """The replay rule: replay iff ``batch_id <= last`` and the snapshot's
+    batch-id numbering epoch is the current one (``identity``, see
+    ``checkpoint_identity``) — after a checkpoint reset ids renumber from
+    0 and are new data. Where a legacy per-group ``"lineage"`` field
+    exists (``legacy``: dedup snapshots that stored the checkpoint DIR
+    PATH), it must equal ``identity`` or ``checkpoint_dir``. Otherwise the
+    store-level ``lineage`` must be None (a snapshot from before any
+    lineage: the id is the only evidence) or equal ``identity``.
+
+    So, for every operator: a snapshot with neither field IS a replay
+    (skipping keeps a dedup sink from firing twice and ``n_rows`` from
+    double counting, as it keeps CMS from double merging); a store-level
+    lineage equal to the bare path while ``identity`` carries a query id
+    is NOT a replay (the bare path is written only when no
+    ``<checkpoint>/metadata`` exists, i.e. a batch driven outside a
+    query, so a query id means a query has since started a new epoch
+    there, and skipping would drop its renumbered batches up to
+    ``last``)."""
+    if batch_id > last:
+        return False
+    if legacy is not None:
+        return legacy in (identity, checkpoint_dir)
+    return lineage is None or lineage == identity
+
+
+def _run_batch(
+    store: SketchStateStore, batch_df: DataFrame, batch_id: int, checkpoint_dir: str, step
+) -> None:
+    """Commit one micro-batch exactly once: read the snapshot and the
+    epoch once, return on a replay, else let ``step(states)`` merge the
+    batch into the running states and save states, ``batch_id`` and the
+    epoch as one snapshot (a failing step commits nothing)."""
+    # foreachBatch runs on a py4j callback thread where getActiveSession
+    # may be unset — bind the batch's session
+    store._spark = batch_df.sparkSession
+    states, last, lineage = store.load_full()
+    identity = checkpoint_identity(batch_df.sparkSession, checkpoint_dir)
+    # read once, then dropped: the store-level epoch supersedes it
+    legacy = states.get((), {}).pop("lineage", None)
+    if _is_replay(batch_id, last, lineage, legacy, identity, checkpoint_dir):
+        return
+    step(states)
+    store.save(states, batch_id, lineage=identity)
+
+
+def _start_stream(sdf: DataFrame, state_dir: str, checkpoint_dir: str, trigger, body):
+    """Start ``sdf`` with ``body(batch_df, batch_id, store, checkpoint_dir)``
+    as its foreachBatch function; returns the StreamingQuery."""
+    store = SketchStateStore(state_dir)
+    writer = sdf.writeStream.foreachBatch(
+        lambda batch_df, batch_id: body(batch_df, batch_id, store, checkpoint_dir)
+    ).option("checkpointLocation", checkpoint_dir)
+    if trigger:
+        writer = writer.trigger(**trigger)
+    return writer.start()
+
+
+def _merge_state(states: dict, key: tuple, specs: list[SketchSpec], row) -> None:
+    """Merge one state row (a state blob per spec + ``n_rows``) into ``states[key]``."""
+    blobs = states.setdefault(key, {})
+    for s in specs:
+        blobs[s.state_col] = merge_blobs(blobs.get(s.state_col), row[s.state_col])
+    blobs["n_rows"] = blobs.get("n_rows", 0) + row["n_rows"]
+
+
+def _sketch_batch(batch_df, batch_id, store, checkpoint_dir, specs) -> None:
+    """foreachBatch body of ``sketch_stream``."""
+
+    def step(states):
+        res = sketch_table(batch_df, specs)
+        row = {s.state_col: res.sketches[s.name].to_bytes() for s in specs}
+        _merge_state(states, (), specs, {**row, "n_rows": res.n_rows})
+
+    _run_batch(store, batch_df, batch_id, checkpoint_dir, step)
+
+
+def _window_batch(batch_df, batch_id, store, checkpoint_dir, specs, ts_col, window) -> None:
+    """foreachBatch body of ``windowed_sketch_stream``."""
+
+    def step(states):
+        # F.window for every length: windows align to the epoch, so
+        # "1 hour" and "60 minutes" agree under any session time zone
+        win = batch_df.withColumn("__win", F.window(ts_col, window)["start"])
+        # salt_buckets and pre_partial pinned: micro-batches are narrow and
+        # window keys few, so the defaults' partition-count probe and
+        # cardinality-sample job would only add per-batch latency
+        rows = grouped_sketch(win, ["__win"], specs, salt_buckets=1, pre_partial=True).collect()
+        for r in rows:
+            _merge_state(states, (str(r["__win"]),), specs, r)
+
+    _run_batch(store, batch_df, batch_id, checkpoint_dir, step)
+
+
 def sketch_stream(
     sdf: DataFrame,
     specs: list[SketchSpec],
@@ -233,33 +327,8 @@ def sketch_stream(
 ):
     """Global streaming sketch build: returns the started StreamingQuery.
     Final/running states via SketchStateStore(state_dir).sketches(specs)."""
-    store = SketchStateStore(state_dir)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        # foreachBatch runs on a py4j callback thread where
-        # getActiveSession may be unset — bind the batch's session
-        store._spark = batch_df.sparkSession
-        states, last, lin = store.load_full()
-        lineage = checkpoint_identity(batch_df.sparkSession, checkpoint_dir)
-        # the replay skip only applies within the same numbering epoch:
-        # after a checkpoint reset (wiped dir, new query id) batch ids
-        # renumber from 0 and must NOT be treated as replays. Snapshots
-        # from before the lineage field (lin None) keep the old
-        # skip-on-id behavior.
-        if batch_id <= last and (lin is None or lin == lineage):
-            return  # replayed batch: idempotent skip
-        res = sketch_table(batch_df, specs)
-        blobs = states.get((), {})
-        for s in specs:
-            blobs[s.state_col] = merge_blobs(blobs.get(s.state_col), res.sketches[s.name].to_bytes())
-        blobs["n_rows"] = blobs.get("n_rows", 0) + res.n_rows
-        states[()] = blobs
-        store.save(states, batch_id, lineage=lineage)
-
-    writer = sdf.writeStream.foreachBatch(process).option("checkpointLocation", checkpoint_dir)
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
+    body = functools.partial(_sketch_batch, specs=specs)
+    return _start_stream(sdf, state_dir, checkpoint_dir, trigger, body)
 
 
 def windowed_sketch_stream(
@@ -274,40 +343,8 @@ def windowed_sketch_stream(
     """Per-event-time-window sketch states (tumbling windows). Late rows
     merge into their window's state on arrival — no watermark needed
     because sketch merge is order-independent."""
-    store = SketchStateStore(state_dir)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        store._spark = batch_df.sparkSession  # py4j callback thread
-        states, last, lin = store.load_full()
-        lineage = checkpoint_identity(batch_df.sparkSession, checkpoint_dir)
-        if batch_id <= last and (lin is None or lin == lineage):
-            return  # replay within the same numbering epoch only
-        win = batch_df.withColumn(
-            "__win", F.date_trunc("hour", F.col(ts_col)) if window == "1 hour" else F.window(ts_col, window)["start"]
-        )
-        # salt_buckets pinned to 1: micro-batches are narrow, so salting
-        # buys nothing and the auto default's partition-count probe is a
-        # pointless extra plan conversion per batch. (The probe itself is
-        # safe on foreachBatch callback threads — see grouped.py; an
-        # earlier hang here was the py4j per-byte read, not .rdd.)
-        # pre_partial pinned: window keys are few per micro-batch, and the
-        # default's cardinality-sample job would add per-batch latency
-        rows = grouped_sketch(
-            win, ["__win"], specs, salt_buckets=1, pre_partial=True
-        ).collect()
-        for r in rows:
-            key = (str(r["__win"]),)
-            blobs = states.get(key, {})
-            for s in specs:
-                blobs[s.state_col] = merge_blobs(blobs.get(s.state_col), r[s.state_col])
-            blobs["n_rows"] = blobs.get("n_rows", 0) + r["n_rows"]
-            states[key] = blobs
-        store.save(states, batch_id, lineage=lineage)
-
-    writer = sdf.writeStream.foreachBatch(process).option("checkpointLocation", checkpoint_dir)
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
+    body = functools.partial(_window_batch, specs=specs, ts_col=ts_col, window=window)
+    return _start_stream(sdf, state_dir, checkpoint_dir, trigger, body)
 
 
 def stateful_grouped_stream_df(
@@ -332,7 +369,6 @@ def stateful_grouped_stream_df(
     import pandas as pd
 
     from ..operators.build import batch_arrays, plan_columns
-    from ..operators.specs import sketch_from_bytes
 
     spec_cols, col_map = plan_columns(specs)
     prepared = sdf.select(*[F.col(c) for c in group_cols], *spec_cols)

@@ -479,6 +479,83 @@ def test_seen_before_accepts_legacy_path_lineage(spark, dirs):
     assert len(calls) == 1, "sink re-invoked for a legacy-lineage replay"
 
 
+def test_replay_rule_matrix():
+    """The one replay rule (stream_build._is_replay), Spark-free: each
+    snapshot epoch with batch_id <= last and > last. Inside a query the
+    identity is '<dir>#<query id>'; the bare path is what a snapshot
+    stores when no checkpoint metadata existed."""
+    from probably_jl_spark.streaming.stream_build import _is_replay
+
+    ckpt = "/ckpt"
+    ident = "/ckpt#q1"
+    cases = [
+        # (name, store-level lineage, legacy per-group lineage, replay iff <= last)
+        ("current epoch", ident, None, True),
+        ("reset epoch", "/ckpt#q0", None, False),
+        ("store-level None", None, None, True),
+        ("store-level path", ckpt, None, False),
+        ("legacy path", None, ckpt, True),
+        ("legacy identity", None, ident, True),
+        ("legacy other path", None, "/other", False),
+        ("legacy beats store-level", ident, "/other", False),
+    ]
+    for name, lineage, legacy, want in cases:
+        for batch_id, last in ((3, 5), (5, 5)):
+            got = _is_replay(batch_id, last, lineage, legacy, ident, ckpt)
+            assert got is want, (name, batch_id, last)
+        assert _is_replay(6, 5, lineage, legacy, ident, ckpt) is False, name
+    # no metadata (a batch driven outside a query): the identity IS the path
+    assert _is_replay(0, 0, ckpt, None, ckpt, ckpt) is True
+
+
+def test_replay_on_pre_lineage_snapshot_keeps_cms(spark, dirs):
+    """A replayed batch against a snapshot with no lineage at all (store
+    level None, no per-group field) is skipped by sketch_stream's step:
+    its CMS bytes are unchanged. The next batch id still merges."""
+    from probably_jl_spark.streaming.stream_build import _sketch_batch
+
+    ev = spark.read.parquet(f"{SF}/events.parquet")
+    store = SketchStateStore(dirs["state"], spark)
+    _sketch_batch(ev, 0, store, dirs["ckpt"], SPECS)
+    states, last, lineage = store.load_full()
+    assert (last, lineage) == (0, dirs["ckpt"])
+    store.save(states, last, lineage=None)  # rewrite as a pre-lineage snapshot
+    cms = states[()]["state_types"]
+
+    _sketch_batch(ev, 0, store, dirs["ckpt"], SPECS)  # replayed batch id
+    replayed, last, _ = store.load_full()
+    assert last == 0
+    assert replayed[()]["state_types"] == cms
+    assert replayed[()]["n_rows"] == 1000
+
+    _sketch_batch(ev, 1, store, dirs["ckpt"], SPECS)
+    merged, last, _ = store.load_full()
+    assert last == 1 and merged[()]["n_rows"] == 2000
+    assert merged[()]["state_types"] != cms
+
+
+def test_window_one_hour_equals_sixty_minutes_off_utc(spark, tmp_path):
+    """Under a half-hour-offset session zone, windowed_sketch_stream's
+    step puts rows in the same windows for "1 hour" and "60 minutes":
+    same window keys and byte-identical states."""
+    from probably_jl_spark.streaming.stream_build import _window_batch
+
+    ev = spark.read.parquet(f"{SF}/events.parquet")
+    old_tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "Asia/Kolkata")
+    try:
+        out = {}
+        for window in ("1 hour", "60 minutes"):
+            store = SketchStateStore(str(tmp_path / window.replace(" ", "_")), spark)
+            _window_batch(ev, 0, store, str(tmp_path / "ckpt"), SPECS, "ts", window)
+            out[window], _ = store.load()
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old_tz)
+    assert len(out["1 hour"]) >= 2
+    assert sum(b["n_rows"] for b in out["1 hour"].values()) == 1000
+    assert out["1 hour"] == out["60 minutes"]
+
+
 def test_rollup_null_state_blob_raises_with_column(spark):
     """A null state cell must surface a contextful error naming the
     column, not a bare executor TypeError (ADVICE r5)."""
