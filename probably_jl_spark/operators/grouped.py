@@ -52,7 +52,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, BinaryType, DoubleType, FloatType, LongType, MapType
 from pyspark.sql.types import StructField, StructType
 
-from .build import batch_arrays, plan_columns
+from .build import batch_arrays, plan_exprs, sql_ident
 from .specs import SketchSpec, merge_blobs
 
 _SALT_COL = "__salt"
@@ -552,7 +552,7 @@ def _vec_direct_builder_arrow(
     return grouped_direct
 
 
-def _preagg_dedup_ratio(prepared: DataFrame, group_cols: list[str], sample_rows: int) -> float:
+def _preagg_dedup_ratio(df: DataFrame, group_cols: list[str], sample_rows: int) -> float:
     """Distinct-group fraction of a bounded row sample — the decision
     input for the vectorized route: map-side partials shrink the state
     exchange by roughly this factor's inverse, so a ratio near 1 means
@@ -561,7 +561,7 @@ def _preagg_dedup_ratio(prepared: DataFrame, group_cols: list[str], sample_rows:
     stops after ``sample_rows`` rows (no full scan), so the sample keeps
     the within-partition locality the partial builder would see."""
     row = (
-        prepared.select(*group_cols)
+        df.select(*group_cols)
         .coalesce(1)
         .limit(sample_rows)
         .agg(
@@ -614,8 +614,8 @@ def _pre_merge_states(
     plus the optional salted level-1 merge: the state rows feeding the
     final per-key merge. Exposed for fan-in tests and as the per-key
     reference of the HLL/KMV fast-path tests."""
-    spec_cols, col_map = plan_columns(specs)
-    prepared = df.select(*[F.col(c) for c in group_cols], *spec_cols)
+    exprs, col_map = plan_exprs(specs)
+    prepared = df.selectExpr(*[sql_ident(c) for c in group_cols], *exprs)
     if salt_buckets is None:
         try:
             # plan -> RDD conversion is metadata-only for batch plans
@@ -629,7 +629,7 @@ def _pre_merge_states(
     stage1 = _row_builder(specs, group_cols, col_map, max_states_per_partition)
     partials = prepared.mapInPandas(
         _named(stage1, "generic_stage1"),
-        schema=_grouped_schema(prepared, group_cols, specs, with_ord=True),
+        schema=_grouped_schema(df, group_cols, specs, with_ord=True),
     )
     if salt_buckets > 1:
         level1 = partials.withColumn(
@@ -648,11 +648,12 @@ def _pre_merge_states(
     return partials
 
 
-def _direct_key(df: DataFrame, c: str):
-    """Group column ``c`` in the direct route's JVM projection, keeping
-    its type. Arrow's ``dictionary_encode`` hashes floats bitwise, so
-    float keys are normalized to group as in the pandas routes: -0.0
-    becomes 0.0, and NaN becomes null (pandas reads a null float as NaN,
+def _direct_key(df: DataFrame, c: str) -> str:
+    """Group column ``c`` in the direct route's JVM projection, as a SQL
+    expression for ``selectExpr``, keeping its type. Arrow's
+    ``dictionary_encode`` hashes floats bitwise, so float keys are
+    normalized to group as in the pandas routes: -0.0 becomes 0.0, and
+    NaN becomes null (pandas reads a null float as NaN,
     so those routes put null and NaN keys in one group, emitted as null).
     Nested types have no Arrow dictionary kernel and raise here."""
     t = df.schema[c].dataType
@@ -661,9 +662,11 @@ def _direct_key(df: DataFrame, c: str):
             f"grouped_sketch: group column {c!r} has nested type {t.simpleString()}, "
             "which the direct route cannot dictionary-encode"
         )
-    col = F.col(c)
+    col = sql_ident(c)
     if isinstance(t, (DoubleType, FloatType)):
-        return F.when(col == 0, F.lit(0).cast(t)).when(~F.isnan(col), col).alias(c)
+        zero = f"CAST(0 AS {t.simpleString()})"
+        alias = "`" + c.replace("`", "``") + "`"
+        return f"CASE WHEN {col} = 0 THEN {zero} WHEN NOT isnan({col}) THEN {col} END AS {alias}"
     return col
 
 
@@ -717,19 +720,19 @@ def grouped_sketch(
         from .rollup import _rollup_builder
 
         kernel = _VEC_KERNELS[next(iter(kinds))](specs)
-        spec_cols, col_map = plan_columns(specs)
-        prepared = df.select(*[F.col(c) for c in group_cols], *spec_cols)
+        exprs, col_map = plan_exprs(specs)
         if pre_partial is None:
-            pre_partial = _preagg_dedup_ratio(prepared, group_cols, 200_000) <= 0.5
-        out_schema = _grouped_schema(prepared, group_cols, specs, with_ord=False)
+            pre_partial = _preagg_dedup_ratio(df, group_cols, 200_000) <= 0.5
+        out_schema = _grouped_schema(df, group_cols, specs, with_ord=False)
         if not pre_partial:
-            direct = df.select(*[_direct_key(df, c) for c in group_cols], *spec_cols)
+            direct = df.selectExpr(*[_direct_key(df, c) for c in group_cols], *exprs)
             builder = _vec_direct_builder_arrow(specs, group_cols, col_map, kernel)
             return direct.repartition(*group_cols).mapInArrow(builder, schema=out_schema)
         stage1 = _row_builder(specs, group_cols, col_map, max_states_per_partition, kernel)
+        prepared = df.selectExpr(*[sql_ident(c) for c in group_cols], *exprs)
         partials = prepared.mapInPandas(
             _named(stage1, "grouped_stage1"),
-            schema=_grouped_schema(prepared, group_cols, specs, with_ord=True),
+            schema=_grouped_schema(df, group_cols, specs, with_ord=True),
         )
         # HLL/KMV merges are order-insensitive: no sort before the fold
         merge = _rollup_builder(group_cols, [s.state_col for s in specs], None, with_ord=False)

@@ -25,9 +25,11 @@ from __future__ import annotations
 
 import functools
 import pickle
+from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampNTZType
 
 from ..operators.build import sketch_table
 from ..operators.grouped import grouped_sketch
@@ -301,19 +303,53 @@ def _sketch_batch(batch_df, batch_id, store, checkpoint_dir, specs) -> None:
     _run_batch(store, batch_df, batch_id, checkpoint_dir, step)
 
 
+_EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
+
+
+def _window_key(start: datetime) -> tuple:
+    """State key of a window starting at ``start``: its ISO-8601 string,
+    in UTC for an aware start (a TIMESTAMP column, e.g.
+    ``('2024-01-01T10:00:00+00:00',)``) and as is for a naive one (a
+    TIMESTAMP_NTZ wall-clock time, ``('2024-01-01T10:00:00',)``)."""
+    if start.tzinfo is not None:
+        start = start.astimezone(timezone.utc)
+    return (start.isoformat(),)
+
+
+def _rekey_legacy_windows(states: dict, specs: list[SketchSpec], ntz: bool) -> None:
+    """Re-key, in place, window states saved under the old key: ``str``
+    of the naive window start as ``collect()`` rendered it
+    (``'2024-01-01 15:30:00'``, no ``T``). For a TIMESTAMP_NTZ column
+    that was the zone-free wall-clock time; for a TIMESTAMP column it was
+    the writing driver's local time, which is read here in THIS
+    process's local zone (``TZ``): right when the store was written
+    under the same zone. After the first commit no legacy key is left."""
+    for key in [k for k in states if len(k) == 1 and isinstance(k[0], str) and "T" not in k[0]]:
+        blobs = states.pop(key)
+        start = datetime.fromisoformat(key[0])
+        _merge_state(states, _window_key(start if ntz else start.astimezone()), specs, blobs)
+
+
 def _window_batch(batch_df, batch_id, store, checkpoint_dir, specs, ts_col, window) -> None:
     """foreachBatch body of ``windowed_sketch_stream``."""
 
     def step(states):
+        ntz = isinstance(batch_df.schema[ts_col].dataType, TimestampNTZType)
+        _rekey_legacy_windows(states, specs, ntz)
         # F.window for every length: windows align to the epoch, so
-        # "1 hour" and "60 minutes" agree under any session time zone
-        win = batch_df.withColumn("__win", F.window(ts_col, window)["start"])
+        # "1 hour" and "60 minutes" agree under any session time zone.
+        # A TIMESTAMP start leaves the JVM as epoch microseconds: collected
+        # as a timestamp it would be a naive datetime in the driver's zone
+        start = F.window(ts_col, window)["start"]
+        win = batch_df.withColumn("__win", start if ntz else F.unix_micros(start))
         # salt_buckets and pre_partial pinned: micro-batches are narrow and
         # window keys few, so the defaults' partition-count probe and
         # cardinality-sample job would only add per-batch latency
         rows = grouped_sketch(win, ["__win"], specs, salt_buckets=1, pre_partial=True).collect()
         for r in rows:
-            _merge_state(states, (str(r["__win"]),), specs, r)
+            w = r["__win"]
+            key = _window_key(w if ntz else _EPOCH + timedelta(microseconds=w))
+            _merge_state(states, key, specs, r)
 
     _run_batch(store, batch_df, batch_id, checkpoint_dir, step)
 
@@ -342,7 +378,11 @@ def windowed_sketch_stream(
 ):
     """Per-event-time-window sketch states (tumbling windows). Late rows
     merge into their window's state on arrival — no watermark needed
-    because sketch merge is order-independent."""
+    because sketch merge is order-independent. Each window's state is
+    keyed by its start as an ISO-8601 string (`_window_key`: UTC for a
+    TIMESTAMP ``ts_col``, the wall-clock time for TIMESTAMP_NTZ), the
+    same under any driver ``TZ``; keys from older stores are re-keyed on
+    the first commit (`_rekey_legacy_windows`)."""
     body = functools.partial(_window_batch, specs=specs, ts_col=ts_col, window=window)
     return _start_stream(sdf, state_dir, checkpoint_dir, trigger, body)
 
@@ -368,10 +408,10 @@ def stateful_grouped_stream_df(
     """
     import pandas as pd
 
-    from ..operators.build import batch_arrays, plan_columns
+    from ..operators.build import batch_arrays, plan_exprs, sql_ident
 
-    spec_cols, col_map = plan_columns(specs)
-    prepared = sdf.select(*[F.col(c) for c in group_cols], *spec_cols)
+    exprs, col_map = plan_exprs(specs)
+    prepared = sdf.selectExpr(*[sql_ident(c) for c in group_cols], *exprs)
 
     group_types = {f.name: f.dataType.simpleString() for f in sdf.schema.fields}
     out_schema = ", ".join(

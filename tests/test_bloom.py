@@ -103,3 +103,31 @@ def test_constrain():
         constrain_bloom(fpr=0.01)
     with pytest.raises(ValueError):
         constrain_bloom(fpr=0.01, memory=100, capacity=100)
+
+
+@pytest.mark.parametrize(
+    "m,k,n",
+    [
+        (1 << 18, 7, 48_000),  # dense scatter (the global build's filter)
+        (1 << 26, 7, 65_536),  # sparse scatter
+        (1_000_003, 7, 48_000),  # dense, m not a power of two nor a multiple of 64
+        ((1 << 26) + 3, 5, 1_000),  # sparse, m not a power of two
+    ],
+)
+def test_update_sets_same_bits_as_scatter_or_reference(m, k, n):
+    """update_hashes sets exactly the bits of the per-probe
+    ``np.bitwise_or.at`` scatter it replaced, on both sides of the
+    dense/sparse cut: the bit positions are what stored states hold."""
+    from probably_jl_spark.sketches.hashing import SALT_BLOOM, mix64
+
+    h = np.random.default_rng(m).integers(0, 2**64, n, dtype=np.uint64)
+    h[:100] = h[100:200]  # repeated items set the same bits again
+    ref = np.zeros((m + 63) // 64, dtype=np.uint64)
+    for t in range(k):
+        idx = mix64(h, SALT_BLOOM + t) % np.uint64(m)
+        word = (idx >> np.uint64(6)).astype(np.int64)
+        np.bitwise_or.at(ref, word, np.uint64(1) << (idx & np.uint64(63)))
+    f = BloomFilter(m, k)
+    f.update_hashes(h[: n // 2])
+    f.update_hashes(h[n // 2 :])
+    assert np.array_equal(f.words, ref)

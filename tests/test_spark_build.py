@@ -984,6 +984,7 @@ def test_grouped_route_plan_nodes(spark, events):
     assert names(rolled) - names(generic) == {"rollup_stage1", "rollup_merge"}, rolled
     fused = plan(build_partials(events, hll, lineage=False))
     assert names(fused) == {"sketch_partials"}, fused
+    assert "MapInArrow" in fused and "MapInPandas" not in fused
 
 
 def test_dispatch_sample_is_one_task_without_exchange(spark, monkeypatch):
@@ -1050,3 +1051,58 @@ def test_worker_zip_gate_installed_in_tasks(spark):
     assert out["gated"].tolist() == [sys.version_info < (3, 13)] * 2
     assert out["second_reads"].tolist() == [0, 0]
     assert zipimport.zipimporter.invalidate_caches.__module__ == "zipimport"
+
+
+def test_projection_quotes_names_like_f_col(spark):
+    """The SQL-string projection resolves a dotted nested field, a space
+    and a backtick in column names as ``F.col`` does: every hash equals
+    ``F.xxhash64(*cols)``, values cast alike, and the Columns of
+    ``plan_columns`` select the same values."""
+    from probably_jl_spark.operators.build import plan_columns, prepare
+
+    df = spark.createDataFrame(
+        [(("p", 1), "a b", "q`r", "d", 1.5), (("s", 2), None, "t", "e", None)],
+        "s struct<x: string, y: int>, `my col` string, `a``b` string, `x.y` string, "
+        "`my val` double",
+    )
+    keys = [("s.x", "my col", "`a``b`"), ("`x.y`",), ("s.y",)]
+    specs = [SketchSpec(f"h{i}", "hll", key_cols=k) for i, k in enumerate(keys)]
+    specs.append(SketchSpec("q", "kll", value_col="my val"))
+    want = df.select(
+        *[F.xxhash64(*k).alias(f"__h{i}") for i, k in enumerate(keys)],
+        F.col("my val").cast("double").alias("__v0"),
+    ).collect()
+    prepared, _ = prepare(df, specs, lineage=False)
+    assert prepared.collect() == want
+    assert df.select(*plan_columns(specs)[0]).collect() == want
+    res = sketch_table(df, specs)
+    for i, k in enumerate(keys):
+        local = specs[i].new()
+        local.update_hashes(np.array([r[i] for r in want], dtype=np.int64).view(np.uint64))
+        assert res.sketches[f"h{i}"].to_bytes() == local.to_bytes(), k
+
+
+def test_sketch_table_reports_phase_split(spark, events):
+    """``BuildResult.metrics`` carries the phase split next to its old
+    keys: the phases fit inside ``wall_sec``, ``state_bytes`` is the
+    merged states' size, and ``merge_path`` follows tree_merge's gate
+    (driver fold for light states, the tree once the partials' byte
+    bound passes 64MB)."""
+    from probably_jl_spark.operators.build import _DRIVER_MERGE_MAX_BYTES, _est_partial_bytes
+
+    light = [SketchSpec("u", "hll", key_cols=("user_id",))]
+    heavy = [SketchSpec("k", "kmv", key_cols=("user_id",), params={"k": 1 << 22})]
+    assert 3 * _est_partial_bytes(heavy) > _DRIVER_MERGE_MAX_BYTES
+    for specs, path in ((light, "driver_fold"), (heavy, "tree")):
+        res = sketch_table(events.repartition(3), specs)
+        m = res.metrics
+        assert set(m) == {
+            "n_rows", "wall_sec", "rows_per_sec", "specs", "plan_s", "job_s",
+            "merge_s", "n_partials", "merge_path", "state_bytes",
+        }
+        assert m["n_rows"] == res.n_rows == 1000
+        assert m["specs"] == {s.name: s.kind for s in specs}
+        assert min(m["plan_s"], m["job_s"], m["merge_s"]) >= 0
+        assert m["plan_s"] + m["job_s"] + m["merge_s"] <= m["wall_sec"]
+        assert m["n_partials"] == 3 and m["merge_path"] == path
+        assert m["state_bytes"] == sum(len(sk.to_bytes()) for sk in res.sketches.values())

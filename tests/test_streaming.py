@@ -586,3 +586,55 @@ def test_tdigest_infinite_weight_rejected():
     td = TDigest(100)
     with _pytest.raises(ValueError, match="finite"):
         td.update_values(np.array([1.0, 2.0]), weights=np.array([1.0, np.inf]))
+
+
+def test_window_keys_ignore_driver_tz(spark, tmp_path, monkeypatch):
+    """A window's state key does not depend on the driver process's
+    ``TZ``: the same window committed under UTC and under Asia/Kolkata
+    lands under one ISO-8601 key with one merged state, for a TIMESTAMP
+    column (key in UTC) and a TIMESTAMP_NTZ column (wall-clock key). A
+    TIMESTAMP key saved by the old ``str(naive datetime)`` rule is
+    re-keyed on the next commit, read in the current ``TZ``."""
+    import time
+
+    from pyspark.sql import functions as F
+
+    from probably_jl_spark.streaming.stream_build import _window_batch
+
+    start_us = 1_704_103_200_000_000  # 2024-01-01 10:00:00 UTC
+    rows = spark.range(4).select(
+        F.timestamp_micros(F.lit(start_us) + F.col("id") * 60_000_000).alias("ts"),
+        F.expr("TIMESTAMP_NTZ '2024-01-01 10:00:00' + make_dt_interval(0, 0, id)").alias("ntz"),
+        F.col("id").alias("user_id"),
+        F.lit("click").alias("event_type"),
+    )
+    utc_key, ntz_key = ("2024-01-01T10:00:00+00:00",), ("2024-01-01T10:00:00",)
+
+    def commit(name, batch_id, tz, ts_col="ts"):
+        monkeypatch.setenv("TZ", tz)
+        time.tzset()
+        store = SketchStateStore(str(tmp_path / name), spark)
+        _window_batch(rows, batch_id, store, str(tmp_path / "ckpt"), SPECS, ts_col, "1 hour")
+        return store.load()[0]
+
+    try:
+        once = commit("ltz", 0, "UTC")
+        twice = commit("ltz", 1, "Asia/Kolkata")
+        ntz_once = commit("ntz", 0, "UTC", "ntz")
+        ntz_twice = commit("ntz", 1, "Asia/Kolkata", "ntz")
+        SketchStateStore(str(tmp_path / "legacy"), spark).save(
+            {("2024-01-01 15:30:00",): once[utc_key]}, 0, lineage=None
+        )
+        rekeyed = commit("legacy", 1, "Asia/Kolkata")
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    assert list(once) == list(twice) == [utc_key]
+    assert list(ntz_once) == list(ntz_twice) == [ntz_key]
+    for first, second in (
+        (once[utc_key], twice[utc_key]),
+        (ntz_once[ntz_key], ntz_twice[ntz_key]),
+    ):
+        assert first["n_rows"] == 4 and second["n_rows"] == 8
+        assert first["state_users"] == second["state_users"]  # HLL merge is idempotent
+    assert rekeyed == twice
