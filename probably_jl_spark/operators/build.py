@@ -112,7 +112,10 @@ def plan_exprs(specs: list[SketchSpec]) -> tuple[list[str], dict]:
         if s.count_col:
             if s.count_col not in cnt_cols:
                 cnt_cols[s.count_col] = name = f"__c{len(cnt_cols)}"
-                exprs.append(f"CAST({sql_ident(s.count_col)} AS BIGINT) AS {name}")
+                # a null count crosses as 0: a null makes PySpark's
+                # Arrow->pandas conversion widen the column to float64, where
+                # 2^63 - 1 rounds to 2^63 and wraps negative in int64
+                exprs.append(f"COALESCE(CAST({sql_ident(s.count_col)} AS BIGINT), 0) AS {name}")
             m["c"] = cnt_cols[s.count_col]
         col_map[s.name] = m
     return exprs, col_map

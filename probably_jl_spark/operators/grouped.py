@@ -6,11 +6,11 @@ per role) never materialize a group's rows. Every sketch is mergeable, so
 each route does two jobs only: assign group codes, then fold states.
 
 * Generic route (any spec mix): a ``mapInPandas`` stage 1 keeps one
-  sketch per key per input partition (``_SketchCol``, updated per batch
-  and key as a ``{key -> sketch}`` dict would be, so it stays an
-  independent reference for the kernels) and emits one small *state*
-  row per (partition, key); only those states shuffle, and a per-key
-  ``applyInPandas`` merges them in ascending partition order.
+  sketch per key per input partition (``_SketchKernel``: one
+  ``spec.update`` per key per coder consolidation, on the key's rows in
+  batch and row order) and emits one small *state* row per (partition,
+  key); only those states shuffle, and a per-key ``applyInPandas``
+  merges them in ascending partition order.
 * Vectorized routes (all-HLL or all-KMV spec lists): no per-group Python;
   the kind's kernel folds (code, payload) arrays. The partial route
   builds map-side partials, hash-repartitions them and merges them with
@@ -120,22 +120,22 @@ class _HllKernel:
     def init_acc():
         return np.empty(0, dtype=np.int64)
 
-    def row_payloads(self, spec, h: np.ndarray) -> np.ndarray:
-        """Group-independent per-row payload (register_idx << 6 | rho):
-        computed per batch, combined with the deferred group codes at
-        consolidation."""
+    def row_payloads(self, spec, arrays: tuple) -> np.ndarray:
+        """Group-independent per-row payload (register_idx << 6 | rho)
+        of a batch's ``(h, v, c)`` arrays: computed per batch, combined
+        with the deferred group codes at consolidation."""
         from ..sketches.hashing import trailing_zeros64
 
-        p = self.ps[spec.name]
+        p, h = self.ps[spec.name], arrays[0]
         guard = np.uint64(1 << (64 - p))
         rho = trailing_zeros64(h | guard).astype(np.int64) + np.int64(1)
         idx = (h >> np.uint64(64 - p)).astype(np.int64)
         return (idx << np.int64(6)) | rho
 
-    def absorb_payloads(self, acc, spec, g: np.ndarray, pay: np.ndarray):
+    def absorb_payloads(self, acc, spec, g: np.ndarray, pays: list):
         from ..sketches.hll import _dedup_max_rho
 
-        packed = (g << np.int64(24)) | pay
+        packed = (g << np.int64(24)) | np.concatenate(pays)
         packed.sort()
         return _absorb_max(acc, _dedup_max_rho(packed))
 
@@ -181,11 +181,11 @@ class _KmvKernel:
     def init_acc():
         return (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.uint64))
 
-    def row_payloads(self, spec, h: np.ndarray) -> np.ndarray:
-        return h
+    def row_payloads(self, spec, arrays: tuple) -> np.ndarray:
+        return arrays[0]
 
-    def absorb_payloads(self, acc, spec, g: np.ndarray, pay: np.ndarray):
-        return _kmv_combine(acc[0], acc[1], g, pay, self.ks[spec.name])
+    def absorb_payloads(self, acc, spec, g: np.ndarray, pays: list):
+        return _kmv_combine(acc[0], acc[1], g, np.concatenate(pays), self.ks[spec.name])
 
     def absorb_states(self, acc, spec, g: np.ndarray, blobs):
         from ..sketches.kmv import mins_many_from_bytes
@@ -233,6 +233,40 @@ def _kmv_combine(
     rank = np.arange(gg.size) - np.searchsorted(gg, gg)
     sel = rank < k
     return gg[sel], hh[sel]
+
+
+class _SketchKernel:
+    """Hooks of the generic route, for any spec kind: the accumulator is
+    one sketch per group code and a row's payload is its ``(h, v, c)``
+    arrays. A consolidation's payloads are concatenated in batch order,
+    one stable sort of the codes groups them, and each group gets ONE
+    ``spec.update`` on its rows in row order. Every kind's state depends
+    on its update sequence alone, not on how it is sliced into calls
+    (kll.py's ``_B`` note), so this equals one update per (batch, key)
+    byte for byte (test_generic_stage1_matches_per_key_reference)."""
+
+    @staticmethod
+    def init_acc():
+        return []
+
+    @staticmethod
+    def row_payloads(spec, arrays: tuple) -> tuple:
+        return arrays
+
+    @staticmethod
+    def absorb_payloads(acc, spec, g: np.ndarray, pays: list):
+        arrays = [None if a[0] is None else np.concatenate(a) for a in zip(*pays)]
+        top = int(g.max())
+        acc += [spec.new() for _ in range(top + 1 - len(acc))]
+        # numpy's stable sort is a radix sort on ints of <= 16 bits
+        order = np.argsort(g.astype(np.min_scalar_type(top)), kind="stable")
+        for idx in np.split(order, np.flatnonzero(np.diff(g[order])) + 1):
+            spec.update(acc[g[idx[0]]], *(None if a is None else a[idx] for a in arrays))
+        return acc
+
+    @staticmethod
+    def emit_blobs(acc, spec, n: int) -> list:
+        return [sk.to_bytes() for sk in acc[:n]]
 
 
 _VEC_KERNELS = {"hll": _HllKernel, "kmv": _KmvKernel}
@@ -344,7 +378,7 @@ class _KeyCoder:
 
 
 class _KernelCol:
-    """Raw-row accumulator of one spec: the kind kernel's packed fold."""
+    """Raw-row accumulator of one spec: its kind kernel's fold."""
 
     def __init__(self, kernel, spec: SketchSpec):
         self.kernel, self.spec = kernel, spec
@@ -354,7 +388,7 @@ class _KernelCol:
         self.acc = self.kernel.init_acc()
 
     def absorb(self, g: np.ndarray, payloads: list) -> None:
-        self.acc = self.kernel.absorb_payloads(self.acc, self.spec, g, np.concatenate(payloads))
+        self.acc = self.kernel.absorb_payloads(self.acc, self.spec, g, payloads)
 
     def emit_blobs(self, n: int) -> list:
         return self.kernel.emit_blobs(self.acc, self.spec, n)
@@ -363,35 +397,15 @@ class _KernelCol:
         return self.kernel.emit_buf(self.acc, self.spec, n)
 
 
-class _SketchCol:
-    """Raw-row accumulator of one spec of any kind: one sketch per group
-    code. Payloads are a batch's ``(h, v, c)`` arrays, replayed in batch
-    order: one stable argsort of the batch's codes, then one
-    ``spec.update`` per (batch, group) on that group's rows in row order
-    — the update calls a per-batch ``{key -> sketch}`` dict makes, so
-    order-sensitive kinds (t-digest, KLL, MG, cuckoo) keep their bytes."""
-
-    def __init__(self, spec: SketchSpec):
-        self.spec = spec
-        self.reset()
-
-    def reset(self) -> None:
-        self.sketches: list = []
-
-    def absorb(self, g: np.ndarray, payloads: list) -> None:
-        spec, sketches = self.spec, self.sketches
-        sketches += [spec.new() for _ in range(int(g.max()) + 1 - len(sketches))]
-        start = 0
-        for arrays in payloads:
-            n = len(arrays[0] if arrays[0] is not None else arrays[1])
-            gb, start = g[start : start + n], start + n
-            # numpy's stable sort is a radix sort on ints of <= 16 bits
-            order = np.argsort(gb.astype(np.min_scalar_type(int(gb.max()))), kind="stable")
-            for idx in np.split(order, np.flatnonzero(np.diff(gb[order])) + 1):
-                spec.update(sketches[gb[idx[0]]], *(None if a is None else a[idx] for a in arrays))
-
-    def emit_blobs(self, n: int) -> list:
-        return [sk.to_bytes() for sk in self.sketches[:n]]
+def _row_payloads(batch, specs: list[SketchSpec], col_map: dict, kernel) -> tuple[dict, int]:
+    """({state col: payload}, payload bytes) of a pandas or Arrow batch of
+    raw rows: each spec's ``(h, v, c)`` arrays from `batch_arrays`, through
+    the kernel's ``row_payloads``. The bytes are those of the arrays, a
+    column shared by specs counted once per spec; every kernel's payload
+    is that size."""
+    arrays = batch_arrays(batch, specs, col_map)
+    pay = {s.state_col: kernel.row_payloads(s, arrays[s.name]) for s in specs}
+    return pay, sum(a.nbytes for t in arrays.values() for a in t if a is not None)
 
 
 def _fold(coder: _KeyCoder, cols: dict) -> None:
@@ -403,12 +417,13 @@ def _fold(coder: _KeyCoder, cols: dict) -> None:
 
 def _fold_builder(group_cols: list[str], cap: int | None, with_ord: bool, new_cols, stash):
     """mapInPandas body of every pandas-side build: raw rows (stage 1 of
-    the grouped partial and generic routes, `_row_builder`) and state
-    rows (both rollup stages, which include the grouped partial route's
-    merge).
+    the grouped partial and generic routes, `_row_builder`, whose
+    accumulators are all `_KernelCol`) and state rows (both rollup stages,
+    which include the grouped partial route's merge).
     ``stash(pdf)`` -> (per-row counts or None, {out col: payload},
     payload bytes); ``new_cols()`` -> {out col: accumulator with
-    ``absorb(g, payloads)``, ``emit_blobs(n)`` and ``reset()``}. Flushes
+    ``absorb(g, payloads)`` (a consolidation's payloads in batch order),
+    ``emit_blobs(n)`` and ``reset()``}. Flushes
     when the live keys pass ``cap``; ``with_ord`` tags the output with
     the merge order key ``pid << 20 | flush``, so mid-partition flushes
     keep a total deterministic merge order even for one (key, pid)."""
@@ -456,27 +471,19 @@ def _fold_builder(group_cols: list[str], cap: int | None, with_ord: bool, new_co
     return fn
 
 
-def _row_builder(
-    specs: list[SketchSpec], group_cols: list[str], col_map: dict, cap: int, kernel=None
-):
+def _row_builder(specs: list[SketchSpec], group_cols: list[str], col_map: dict, cap: int, kernel):
     """Stage 1 of the partial and generic routes: flush-capped partials
-    tagged with their merge order. With a ``kernel`` (`_HllKernel`,
-    `_KmvKernel`) each column is a `_KernelCol`, with no per-group Python
-    in the batch loop; without one each is a `_SketchCol`, one sketch per
-    key. Both flush on the same batches and, for HLL/KMV, emit the same
-    bytes (test_grouped_hll_fast_path_byte_identical and its KMV twin)."""
+    tagged with their merge order, each column a `_KernelCol` over
+    ``kernel`` (`_HllKernel` or `_KmvKernel` on the partial route,
+    `_SketchKernel` on the generic one). Every kernel flushes on the same
+    batches, and the HLL/KMV kernels emit the generic route's bytes
+    (test_grouped_hll_fast_path_byte_identical and its KMV twin)."""
 
     def stash(pdf):
-        arrays = batch_arrays(pdf, specs, col_map)
-        if kernel is None:  # a column shared by specs counts once per spec
-            pay = {s.state_col: arrays[s.name] for s in specs}
-            return None, pay, sum(a.nbytes for t in pay.values() for a in t if a is not None)
-        pay = {s.state_col: kernel.row_payloads(s, arrays[s.name][0]) for s in specs}
-        return None, pay, sum(p.nbytes for p in pay.values())
+        return (None, *_row_payloads(pdf, specs, col_map, kernel))
 
     def new_cols():
-        new = _SketchCol if kernel is None else lambda s: _KernelCol(kernel, s)
-        return {s.state_col: new(s) for s in specs}
+        return {s.state_col: _KernelCol(kernel, s) for s in specs}
 
     return _fold_builder(group_cols, cap, True, new_cols, stash)
 
@@ -508,15 +515,8 @@ def _vec_direct_builder_arrow(
             if rb.num_rows == 0:
                 continue
             keys = pa.StructArray.from_arrays([rb.column(c) for c in group_cols], group_cols)
-            pay = {}
-            for s in specs:
-                harr = rb.column(col_map[s.name]["h"])
-                if harr.null_count:
-                    harr = harr.fill_null(0)
-                h = harr.to_numpy(zero_copy_only=False).view(np.uint64)
-                pay[s.state_col] = kernel.row_payloads(s, h)
             codes, uniques = _pa_encode([keys])
-            if coder.add(uniques, codes, None, pay, sum(p.nbytes for p in pay.values())):
+            if coder.add(uniques, codes, None, *_row_payloads(rb, specs, col_map, kernel)):
                 _fold(coder, cols)
         _fold(coder, cols)
         n = len(coder)
@@ -610,10 +610,10 @@ def _pre_merge_states(
     salt_buckets: int | None,
     max_states_per_partition: int,
 ) -> DataFrame:
-    """The generic route's stage 1 (`_row_builder`, one sketch per key)
-    plus the optional salted level-1 merge: the state rows feeding the
-    final per-key merge. Exposed for fan-in tests and as the per-key
-    reference of the HLL/KMV fast-path tests."""
+    """The generic route's stage 1 (`_row_builder` over `_SketchKernel`,
+    one sketch per key) plus the optional salted level-1 merge: the state
+    rows feeding the final per-key merge. Exposed for fan-in tests and as
+    the per-key reference of the HLL/KMV fast-path tests."""
     exprs, col_map = plan_exprs(specs)
     prepared = df.selectExpr(*[sql_ident(c) for c in group_cols], *exprs)
     if salt_buckets is None:
@@ -626,7 +626,7 @@ def _pre_merge_states(
         except Exception:
             salt_buckets = 1
 
-    stage1 = _row_builder(specs, group_cols, col_map, max_states_per_partition)
+    stage1 = _row_builder(specs, group_cols, col_map, max_states_per_partition, _SketchKernel())
     partials = prepared.mapInPandas(
         _named(stage1, "generic_stage1"),
         schema=_grouped_schema(df, group_cols, specs, with_ord=True),

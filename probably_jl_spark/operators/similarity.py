@@ -36,6 +36,10 @@ _BROADCAST_VECTORS_MAX_BYTES = 256 * 1024 * 1024
 # (VERDICT r5 "Next round" #5)
 _MAX_QUERY_ROWS = 1_000_000
 
+# ann_topk_ivf takes its fused one-pass route up to this many queries
+# and the list join beyond
+_FUSED_MAX_QUERIES = 256
+
 
 def _collect_query_rows(query_df: DataFrame, id_col: str, vec_col: str):
     rows = query_df.select(id_col, vec_col).limit(_MAX_QUERY_ROWS + 1).collect()
@@ -1081,7 +1085,6 @@ def ann_topk_ivf(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_list_size: int | None = None,
-    fused_max_queries: int = 256,
 ) -> DataFrame:
     """IVF approximate top-k — the clustered-data scale path next to the
     LSH tables (sign-LSH is data-independent; IVF adapts its partitions
@@ -1109,19 +1112,16 @@ def ann_topk_ivf(
     # candidate SET and every sim are identical to the join path (see
     # _ann_ivf_fused). Beyond the cap the per-batch Q x B rerank stops
     # paying and the keys-only join (+ optional hot-list sharding) is
-    # the right plan; fused_max_queries=0 forces the join path.
-    if fused_max_queries > 0:
-        qrows = query_df.select(id_col, vec_col).limit(fused_max_queries + 1).collect()
-        if len(qrows) <= fused_max_queries:
-            qids = np.array([r[id_col] for r in qrows], dtype=np.int64)
-            qmat = (
-                np.array([r[vec_col] for r in qrows], dtype=np.float32)
-                if qrows
-                else np.zeros((0, dim), dtype=np.float32)
-            )
-            return _ann_ivf_fused(
-                emb_df, qids, qmat, cents, k, nprobe, id_col, vec_col
-            )
+    # the right plan.
+    qrows = query_df.select(id_col, vec_col).limit(_FUSED_MAX_QUERIES + 1).collect()
+    if len(qrows) <= _FUSED_MAX_QUERIES:
+        qids = np.array([r[id_col] for r in qrows], dtype=np.int64)
+        qmat = (
+            np.array([r[vec_col] for r in qrows], dtype=np.float32)
+            if qrows
+            else np.zeros((0, dim), dtype=np.float32)
+        )
+        return _ann_ivf_fused(emb_df, qids, qmat, cents, k, nprobe, id_col, vec_col)
     corpus = ivf_assign(emb_df, cents, id_col, vec_col, nprobe=1)
     probes = ivf_assign(query_df, cents, id_col, vec_col, nprobe=nprobe)
     corpus_keys = corpus.select(F.col(id_col).alias("neighbor_id"), "list_id")

@@ -50,18 +50,6 @@ class SketchSpec:
             raise ValueError(f"{self.kind} spec {self.name!r} needs value_col")
 
     @property
-    def hash_col(self) -> str:
-        return f"__h_{self.name}"
-
-    @property
-    def val_col(self) -> str:
-        return f"__v_{self.name}"
-
-    @property
-    def cnt_col(self) -> str:
-        return f"__c_{self.name}"
-
-    @property
     def state_col(self) -> str:
         return f"state_{self.name}"
 

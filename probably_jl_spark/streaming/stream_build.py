@@ -29,10 +29,10 @@ from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import TimestampNTZType
+from pyspark.sql.types import BinaryType, LongType, StructField, StructType, TimestampNTZType
 
 from ..operators.build import sketch_table
-from ..operators.grouped import grouped_sketch
+from ..operators.grouped import _grouped_schema, grouped_sketch
 from ..operators.specs import SketchSpec, merge_blobs, sketch_from_bytes
 
 
@@ -412,14 +412,12 @@ def stateful_grouped_stream_df(
 
     exprs, col_map = plan_exprs(specs)
     prepared = sdf.selectExpr(*[sql_ident(c) for c in group_cols], *exprs)
-
-    group_types = {f.name: f.dataType.simpleString() for f in sdf.schema.fields}
-    out_schema = ", ".join(
-        [f"{c} {group_types[c]}" for c in group_cols]
-        + ["n_rows long"]
-        + [f"{s.state_col} binary" for s in specs]
+    # StructTypes, not DDL strings: a group column named ``my col`` does
+    # not parse unquoted
+    out_schema = _grouped_schema(sdf, group_cols, specs)
+    state_schema = StructType(
+        [StructField("n_rows", LongType())] + [StructField(s.state_col, BinaryType()) for s in specs]
     )
-    state_schema = ", ".join(["n_rows long"] + [f"{s.state_col} binary" for s in specs])
 
     def stream_group_state(key, pdfs, state):
         if state.exists:

@@ -745,18 +745,21 @@ def test_minhash_band_geometry_validated(spark):
         lsh_candidate_pairs(df.selectExpr("doc_id", "array(1L) as sig"), rows_per_band=0)
 
 
-def test_ann_ivf_fused_equals_join(spark, emb):
+def test_ann_ivf_fused_equals_join(spark, emb, monkeypatch):
     """The r6 fused small-query IVF route (one corpus pass, broadcast
     probe lists, partition-local rerank) must return EXACTLY the join
     path's rows — same candidates, bit-equal sims, same ranks."""
+    from probably_jl_spark.operators import similarity
     from probably_jl_spark.operators.similarity import ann_topk_ivf
 
     queries = emb.filter("vec_id < 10")
     fused = ann_topk_ivf(
         emb, queries, dim=64, k=5, n_centroids=16, nprobe=8
     ).toPandas()
+    # a cap below the 10 queries forces the join path
+    monkeypatch.setattr(similarity, "_FUSED_MAX_QUERIES", 0)
     join = ann_topk_ivf(
-        emb, queries, dim=64, k=5, n_centroids=16, nprobe=8, fused_max_queries=0
+        emb, queries, dim=64, k=5, n_centroids=16, nprobe=8
     ).toPandas()
     f = fused.sort_values(["query_id", "rank"]).reset_index(drop=True)
     j = join.sort_values(["query_id", "rank"]).reset_index(drop=True)

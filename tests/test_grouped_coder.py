@@ -20,6 +20,7 @@ from probably_jl_spark.operators.grouped import (
     _pd_encode,
     _pd_keys,
     _row_builder,
+    _SketchKernel,
     _vec_direct_builder_arrow,
 )
 from probably_jl_spark.operators.rollup import _rollup_builder
@@ -224,6 +225,25 @@ def _raw_batches() -> list[pd.DataFrame]:
     return [df.iloc[i:j].reset_index(drop=True) for i, j in zip(cuts, cuts[1:])]
 
 
+def _wide_batches() -> list[pd.DataFrame]:
+    """`_raw_batches`' payload columns under ~2k distinct integer keys
+    ``i`` (a null long reaches pandas as NaN), most keys in several of
+    the 4 batches."""
+    rs = np.random.default_rng(23)
+    n = 6000
+    i = rs.integers(0, 2048, n).astype(np.float64)
+    i[rs.random(n) < 0.01] = np.nan
+    df = pd.DataFrame({
+        "i": i,
+        "__h0": rs.integers(-(2**63), 2**63 - 1, n, dtype=np.int64),
+        "__h1": rs.integers(0, 40, n).astype(np.int64) * 7919,
+        "__v0": rs.lognormal(0.0, 2.0, n),
+        "__c0": rs.integers(0, 5, n).astype(np.int64),
+    })
+    cuts = [0, 1600, 2900, 4700, n]
+    return [df.iloc[i:j].reset_index(drop=True) for i, j in zip(cuts, cuts[1:])]
+
+
 def _reference_stage1(specs, group_cols, col_map, cap, batches) -> dict:
     """{(ord, key): (n_rows, blobs)} from a per-batch loop that keeps a
     {key -> sketches} dict, one ``spec.update`` per (batch, key) on the
@@ -254,18 +274,21 @@ def _reference_stage1(specs, group_cols, col_map, cap, batches) -> dict:
     return out
 
 
-@pytest.mark.parametrize("group_cols", [["f"], ["s"], ["f", "s"]])
+@pytest.mark.parametrize("group_cols", [["f"], ["s"], ["f", "s"], ["i"]])
 @pytest.mark.parametrize("cap", [1 << 16, 3])
 def test_generic_stage1_matches_per_key_reference(group_cols, cap):
     """The generic route's stage 1 (the shared coder over one sketch per
-    key) emits, per (ord, key), the row count and state bytes of a
-    per-batch {key -> sketch} loop, for every sketch kind, NaN and null
-    keys, one and two key columns, and a cap that flushes mid-partition.
-    Row order inside a flush may differ; stage 2 orders by ord."""
-    batches = _raw_batches()
+    key, one update per key per consolidation) emits, per (ord, key), the
+    row count and state bytes of a per-batch {key -> sketch} loop, for
+    every sketch kind, NaN and null keys, one and two key columns, ~2k
+    keys whose rows span batches (``i``), and a cap that flushes
+    mid-partition. Row order inside a flush may differ; stage 2 orders
+    by ord."""
+    batches = _wide_batches() if group_cols == ["i"] else _raw_batches()
     want = _reference_stage1(_ALL_KINDS, group_cols, _ALL_COLS, cap, batches)
     got = {}
-    for out in _row_builder(_ALL_KINDS, group_cols, _ALL_COLS, cap)(iter(batches)):
+    stage1 = _row_builder(_ALL_KINDS, group_cols, _ALL_COLS, cap, _SketchKernel())
+    for out in stage1(iter(batches)):
         for _, r in out.iterrows():
             key = tuple(None if pd.isna(r[c]) else r[c] for c in group_cols)
             assert (r[_ORD_COL], key) not in got
@@ -287,10 +310,10 @@ class _HugeStateKernel:
     def init_acc():
         return None
 
-    def row_payloads(self, spec, h):
-        return h
+    def row_payloads(self, spec, arrays):
+        return arrays[0]
 
-    def absorb_payloads(self, acc, spec, g, pay):
+    def absorb_payloads(self, acc, spec, g, pays):
         return acc
 
     def emit_buf(self, acc, spec, n):

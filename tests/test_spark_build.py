@@ -446,7 +446,7 @@ def test_grouped_nan_key_single_state(spark):
     import pandas as pd
 
     from probably_jl_spark.operators.build import plan_columns
-    from probably_jl_spark.operators.grouped import _row_builder
+    from probably_jl_spark.operators.grouped import _SketchKernel, _row_builder
 
     specs = [SketchSpec("v", "tdigest", value_col="value")]
     _, col_map = plan_columns(specs)
@@ -457,7 +457,8 @@ def test_grouped_nan_key_single_state(spark):
         pd.DataFrame({"g": np.array([np.nan, 1.0], dtype=np.float32), "__v0": [3.0, 4.0]}),
         pd.DataFrame({"g": np.array([np.nan], dtype=np.float32), "__v0": [5.0]}),
     ]
-    out = pd.concat(list(_row_builder(specs, ["g"], col_map, cap=1 << 16)(iter(batches))))
+    stage1 = _row_builder(specs, ["g"], col_map, 1 << 16, _SketchKernel())
+    out = pd.concat(list(stage1(iter(batches))))
     # one row for the NaN group, one for key 1.0 — not one per batch
     assert len(out) == 2, out
     nan_rows = out[out["g"].isna()]
@@ -743,6 +744,25 @@ def test_negative_count_column_raises(spark):
             df,
             [SketchSpec("f", "cms", key_cols=("k",), count_col="cnt")],
         )
+
+
+def test_generic_route_nullable_count_exact(spark):
+    """A nullable count column reaches the pandas routes as exact int64:
+    a generic-route Misra-Gries state over counts 2^63 - 1 and null has
+    the bytes of an in-process update with 2^63 - 1 and 0. PySpark's
+    Arrow->pandas conversion widens an int64 column holding a null to
+    float64; 2^63 - 1 then rounds to 2^63, which wraps negative in int64
+    and failed the negative-count check."""
+    spec = SketchSpec("m", "mg", key_cols=("k",), count_col="cnt", params={"k": 8})
+    big = (1 << 63) - 1
+    df = spark.createDataFrame([("g", "a", big), ("g", "b", None)], "g string, k string, cnt bigint")
+    df = df.coalesce(1)
+    got = grouped_sketch(df, ["g"], [spec]).collect()
+    assert len(got) == 1 and got[0]["n_rows"] == 2
+    h = np.array([r[0] for r in df.selectExpr("xxhash64(k)").collect()], dtype=np.int64)
+    want = spec.new()
+    spec.update(want, h.view(np.uint64), None, np.array([big, 0], dtype=np.uint64))
+    assert bytes(got[0]["state_m"]) == want.to_bytes()
 
 
 def test_synth_transcripts_monotone_ts(spark):
