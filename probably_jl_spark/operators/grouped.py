@@ -5,27 +5,39 @@ Per-group sketches (e.g. distinct conv_ids per tool, turn-length digest
 per role) never materialize a group's rows. Every sketch is mergeable, so
 each route does two jobs only: assign group codes, then fold states.
 
-* Generic route (any spec mix): a ``mapInPandas`` stage 1 keeps one
+One Arrow builder loop (``_arrow_builder``) runs every grouped and
+rollup stage, over raw rows or over state rows: it codes each batch's
+group columns, folds the batch into one accumulator per output column,
+flushes on a live-key cap and emits zero-copy RecordBatches.
+
+* Generic route (any spec mix): a ``mapInArrow`` stage 1 keeps one
   sketch per key per input partition (``_SketchKernel``: one
   ``spec.update`` per key per coder consolidation, on the key's rows in
   batch and row order) and emits one small *state* row per (partition,
   key); only those states shuffle, and a per-key ``applyInPandas``
   merges them in ascending partition order.
 * Vectorized routes (all-HLL or all-KMV spec lists): no per-group Python;
-  the kind's kernel folds (code, payload) arrays. The partial route
-  builds map-side partials, hash-repartitions them and merges them with
-  rollup's state fold (``operators/rollup.py::_rollup_builder``, the only
-  vectorized state merge), all in ``mapInPandas``. The direct route
+  the kind's kernel folds (code, payload) arrays. The direct route
   shuffles raw (key, hash) rows once and emits final states from one
-  ``mapInArrow`` builder for every key shape: Arrow ``dictionary_encode``
-  codes each key column and the codes fold pairwise across columns.
+  ``mapInArrow`` stage. The partial route builds map-side partials,
+  hash-repartitions them and merges them with rollup's state fold
+  (``operators/rollup.py::_rollup_builder``); both of its stages run the
+  Arrow loop inside ``mapInPandas`` through the ``_in_pandas`` adapter,
+  kept only while perfbench tells the routes apart by plan node kind
+  (ROADMAP D6).
 
-One deferred key coder (``_KeyCoder``) assigns first-seen group codes on
-every route, null and NaN keys as one group. It stashes each batch's own
-factorized uniques and codes, and consolidates them with ONE factorize
-over known keys + stashed uniques when the pending bytes (codes,
-payloads, state blobs) pass ``_FOLD_BYTES``, or when live plus pending
-keys could pass the builder's flush cap — so flush points match a
+One key rule holds on every route. Each grouped and rollup projection
+passes its group columns through ``_group_key``, which turns a float
+key's -0.0 into 0.0 and its NaN into null, so {0.0, -0.0} form one group
+and {NaN, null} one group, emitted as null; a nested key raises at plan
+time. ``_pa_encode`` dictionary-encodes each key column, a null key
+coded at first sight.
+
+One deferred key coder (``_KeyCoder``) assigns first-seen group codes. It
+stashes each batch's own encoded uniques and codes, and consolidates them
+with ONE encode over known keys + stashed uniques when the pending bytes
+(codes, payloads, state blobs) pass ``_FOLD_BYTES``, or when live plus
+pending keys could pass the builder's flush cap — so flush points match a
 per-batch live-key count exactly.
 
 Skew/fan-in controls:
@@ -47,11 +59,13 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, BinaryType, DoubleType, FloatType, LongType, MapType
 from pyspark.sql.types import StructField, StructType
 
+from ..sketches import codec
 from .build import batch_arrays, plan_exprs, sql_ident
 from .specs import SketchSpec, merge_blobs
 
@@ -149,14 +163,6 @@ class _HllKernel:
         packed.sort()
         return _absorb_max(acc, _dedup_max_rho(packed))
 
-    def emit_blobs(self, acc, spec, n: int) -> list:
-        from ..sketches.hll import packed_entries_many_to_bytes
-
-        bounds = np.searchsorted(acc >> np.int64(24), np.arange(n + 1))
-        return packed_entries_many_to_bytes(
-            self.ps[spec.name], (acc & _MASK24).astype(np.uint32), bounds
-        )
-
     def emit_buf(self, acc, spec, n: int):
         from ..sketches.hll import packed_entries_many_to_buf
 
@@ -195,13 +201,6 @@ class _KmvKernel:
             return acc
         gg = np.repeat(g, counts)
         return _kmv_combine(acc[0], acc[1], gg, hh, self.ks[spec.name])
-
-    def emit_blobs(self, acc, spec, n: int) -> list:
-        from ..sketches.kmv import mins_many_to_bytes
-
-        g_acc, h_acc = acc
-        bounds = np.searchsorted(g_acc, np.arange(n + 1))
-        return mins_many_to_bytes(self.ks[spec.name], h_acc, bounds)
 
     def emit_buf(self, acc, spec, n: int):
         from ..sketches.kmv import mins_many_to_buf
@@ -265,8 +264,8 @@ class _SketchKernel:
         return acc
 
     @staticmethod
-    def emit_blobs(acc, spec, n: int) -> list:
-        return [sk.to_bytes() for sk in acc[:n]]
+    def emit_buf(acc, spec, n: int):
+        return codec.blob_buffers([sk.to_bytes() for sk in acc[:n]])
 
 
 _VEC_KERNELS = {"hll": _HllKernel, "kmv": _KmvKernel}
@@ -276,30 +275,13 @@ _VEC_KERNELS = {"hll": _HllKernel, "kmv": _KmvKernel}
 _FOLD_BYTES = 1 << 26
 
 
-def _pd_keys(pdf: pd.DataFrame, group_cols: list[str]) -> pd.Index:
-    """A batch's group keys as an Index (a MultiIndex for several columns)."""
-    if len(group_cols) == 1:
-        return pd.Index(pdf[group_cols[0]])
-    return pd.MultiIndex.from_frame(pdf[list(group_cols)])
-
-
-def _pd_encode(parts: list) -> tuple[np.ndarray, pd.Index]:
-    """(codes, uniques) of the concatenated key Indexes, first-seen order;
-    NaN keys form one group (pandas compares them by value)."""
-    keys = parts[0].append(parts[1:]) if len(parts) > 1 else parts[0]
-    codes, uniques = keys.factorize(use_na_sentinel=False)
-    return np.asarray(codes, dtype=np.int64), uniques
-
-
 def _pa_encode(parts: list):
-    """Arrow twin of ``_pd_encode`` over struct arrays of the key columns.
-    Each column is dictionary-encoded, a null key coded at first sight as
-    in pandas; the per-column codes fold pairwise as ``codes * card +
-    codes_j``, re-encoded after each step, so codes stay below the row
-    count and the product below n² fits int64. The uniques are the
-    first-occurrence rows."""
-    import pyarrow as pa
-
+    """(codes, uniques) of the concatenated struct arrays of the key
+    columns, first-seen order. Each column is dictionary-encoded, a null
+    key coded at first sight; the per-column codes fold pairwise as
+    ``codes * card + codes_j``, re-encoded after each step, so codes stay
+    below the row count and the product below n² fits int64. The uniques
+    are the first-occurrence rows."""
     keys = pa.concat_arrays(parts) if len(parts) > 1 else parts[0]
     codes = None
     for col in keys.flatten():
@@ -316,8 +298,8 @@ def _pa_encode(parts: list):
 
 
 class _KeyCoder:
-    """Deferred group coder shared by every vectorized grouped and rollup
-    builder. ``add`` stashes one batch (its own uniques, its codes into
+    """Deferred group coder of the builder loop (`_arrow_builder`).
+    ``add`` stashes one batch (its own uniques, its codes into
     them, its row counts and payloads); ``consolidate`` maps every stashed
     batch through ONE ``encode`` of known keys + stashed uniques — known
     keys lead, so first-seen codes never change — and returns the global
@@ -390,16 +372,13 @@ class _KernelCol:
     def absorb(self, g: np.ndarray, payloads: list) -> None:
         self.acc = self.kernel.absorb_payloads(self.acc, self.spec, g, payloads)
 
-    def emit_blobs(self, n: int) -> list:
-        return self.kernel.emit_blobs(self.acc, self.spec, n)
-
     def emit_buf(self, n: int):
         return self.kernel.emit_buf(self.acc, self.spec, n)
 
 
 def _row_payloads(batch, specs: list[SketchSpec], col_map: dict, kernel) -> tuple[dict, int]:
-    """({state col: payload}, payload bytes) of a pandas or Arrow batch of
-    raw rows: each spec's ``(h, v, c)`` arrays from `batch_arrays`, through
+    """({state col: payload}, payload bytes) of an Arrow batch of raw
+    rows: each spec's ``(h, v, c)`` arrays from `batch_arrays`, through
     the kernel's ``row_payloads``. The bytes are those of the arrays, a
     column shared by specs counted once per spec; every kernel's payload
     is that size."""
@@ -415,18 +394,68 @@ def _fold(coder: _KeyCoder, cols: dict) -> None:
             acc.absorb(g, [p[c] for p in pays])
 
 
-def _fold_builder(group_cols: list[str], cap: int | None, with_ord: bool, new_cols, stash):
-    """mapInPandas body of every pandas-side build: raw rows (stage 1 of
-    the grouped partial and generic routes, `_row_builder`, whose
-    accumulators are all `_KernelCol`) and state rows (both rollup stages,
-    which include the grouped partial route's merge).
-    ``stash(pdf)`` -> (per-row counts or None, {out col: payload},
-    payload bytes); ``new_cols()`` -> {out col: accumulator with
-    ``absorb(g, payloads)`` (a consolidation's payloads in batch order),
-    ``emit_blobs(n)`` and ``reset()``}. Flushes
-    when the live keys pass ``cap``; ``with_ord`` tags the output with
-    the merge order key ``pid << 20 | flush``, so mid-partition flushes
-    keep a total deterministic merge order even for one (key, pid)."""
+# state bytes of one emitted RecordBatch, over all its state columns: the
+# JVM reads each batch whole into direct memory, which concurrent tasks
+# share, and a pa.BinaryArray's offsets are int32
+_EMIT_BYTES = 1 << 26
+_INT32_MAX = (1 << 31) - 1
+
+
+def _emit(op: str, group_cols: list[str], coder: _KeyCoder, cols: dict, ord_tag: int | None):
+    """RecordBatches of the coder's keys, ``ord_tag`` (if any), row counts
+    and each column's ``emit_buf`` states, chunked so no batch holds
+    ``_EMIT_BYTES`` of states or more (one state past that goes alone).
+    Zero-copy: the group columns ARE the coder's uniques and each state
+    column wraps its (buf, offs) pair into a BinaryArray."""
+    n = len(coder)
+    keys, nr = coder.keys.flatten(), coder.n_rows[:n]
+    bufs = {c: acc.emit_buf(n) for c, acc in cols.items()}
+    total = np.zeros(n + 1, dtype=np.int64)  # state bytes of rows [0, i)
+    for _, offs in bufs.values():
+        total += offs
+    names = [*group_cols, *([] if ord_tag is None else [_ORD_COL]), _NROWS_COL, *bufs]
+    start = 0
+    while start < n:
+        stop = max(int(np.searchsorted(total, total[start] + _EMIT_BYTES)) - 1, start + 1)
+        arrays = [k.slice(start, stop - start) for k in keys]
+        if ord_tag is not None:
+            arrays.append(pa.array(np.full(stop - start, ord_tag, dtype=np.int64)))
+        arrays.append(pa.array(nr[start:stop], type=pa.int64()))
+        for c, (buf, offs) in bufs.items():
+            if offs[stop] - offs[start] > _INT32_MAX:
+                raise ValueError(
+                    f"{op}: state column {c!r} holds a "
+                    f"{int(offs[stop] - offs[start])}-byte group state, past the "
+                    "2^31-byte offsets of an Arrow binary column"
+                )
+            rel = (offs[start : stop + 1] - offs[start]).astype(np.int32)
+            chunk = np.ascontiguousarray(buf[offs[start] : offs[stop]])
+            arrays.append(
+                pa.Array.from_buffers(
+                    pa.binary(), stop - start, [None, pa.py_buffer(rel), pa.py_buffer(chunk)]
+                )
+            )
+        yield pa.RecordBatch.from_arrays(arrays, names=names)
+        start = stop
+
+
+def _arrow_builder(
+    op: str, group_cols: list[str], cap: int | None, with_ord: bool, new_cols, stash
+):
+    """``mapInArrow`` body of every grouped and rollup stage: raw rows
+    (the direct route and stage 1 of the partial and generic routes,
+    `_row_builder`, whose accumulators are all `_KernelCol`) and state
+    rows (both rollup stages, which include the partial route's merge).
+    The group columns of each batch code through `_pa_encode` and one
+    `_KeyCoder`. ``stash(rb)`` -> (per-row counts or None, {out col:
+    payload}, payload bytes); ``new_cols()`` -> {out col: accumulator
+    with ``absorb(g, payloads)`` (a consolidation's payloads in batch
+    order), ``emit_buf(n)`` -> (uint8 buf, int64 offs) and ``reset()``}.
+    Flushes when the live keys pass ``cap`` (None: never, so every key's
+    state is final); ``with_ord`` tags the output with the merge order key
+    ``pid << 20 | flush``, so mid-partition flushes keep a total
+    deterministic merge order even for one (key, pid). ``op`` names the
+    operator in errors."""
 
     def fn(batches):
         from pyspark import TaskContext
@@ -434,122 +463,81 @@ def _fold_builder(group_cols: list[str], cap: int | None, with_ord: bool, new_co
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx is not None else -1
         flush = 0
-        coder = _KeyCoder(_pd_encode, cap)
+        coder = _KeyCoder(_pa_encode, cap)
         cols = new_cols()
 
         def emit():
-            n = len(coder)
-            if len(group_cols) == 1:
-                out = pd.DataFrame({group_cols[0]: coder.keys})
-            else:
-                out = coder.keys.to_frame(index=False)
-                out.columns = list(group_cols)
-            if with_ord:
-                out[_ORD_COL] = (pid << 20) | flush
-            out[_NROWS_COL] = coder.n_rows[:n]
-            for c, acc in cols.items():
-                out[c] = acc.emit_blobs(n)
-            return out
+            return _emit(op, group_cols, coder, cols, (pid << 20) | flush if with_ord else None)
 
-        for pdf in batches:
-            if not len(pdf):
+        for rb in batches:
+            if rb.num_rows == 0:
                 continue
-            codes, uniques = _pd_encode([_pd_keys(pdf, group_cols)])
-            if not coder.add(uniques, codes, *stash(pdf)):
+            keys = pa.StructArray.from_arrays([rb.column(c) for c in group_cols], group_cols)
+            codes, uniques = _pa_encode([keys])
+            if not coder.add(uniques, codes, *stash(rb)):
                 continue
             _fold(coder, cols)
             if cap is not None and len(coder) > cap:
-                yield emit()
+                yield from emit()
                 flush += 1
                 coder.reset()
                 for acc in cols.values():
                     acc.reset()
         _fold(coder, cols)
         if len(coder):
-            yield emit()
+            yield from emit()
 
     return fn
 
 
-def _row_builder(specs: list[SketchSpec], group_cols: list[str], col_map: dict, cap: int, kernel):
-    """Stage 1 of the partial and generic routes: flush-capped partials
-    tagged with their merge order, each column a `_KernelCol` over
-    ``kernel`` (`_HllKernel` or `_KmvKernel` on the partial route,
-    `_SketchKernel` on the generic one). Every kernel flushes on the same
-    batches, and the HLL/KMV kernels emit the generic route's bytes
-    (test_grouped_hll_fast_path_byte_identical and its KMV twin)."""
+def _row_builder(
+    specs: list[SketchSpec],
+    group_cols: list[str],
+    col_map: dict,
+    cap: int | None,
+    kernel,
+    with_ord: bool = True,
+):
+    """The Arrow loop over raw rows, each column a `_KernelCol` over
+    ``kernel`` (`_HllKernel` or `_KmvKernel` on the direct and partial
+    routes, `_SketchKernel` on the generic one). Stage 1 of the partial
+    and generic routes: flush-capped partials tagged with their merge
+    order. The direct route (``cap=None, with_ord=False``): rows arrive
+    hash-partitioned on the group columns, so its states are final. Every
+    kernel flushes on the same batches, and the HLL/KMV kernels emit the
+    generic route's bytes (test_grouped_hll_fast_path_byte_identical and
+    its KMV twin; test_grouped_direct_route_byte_identical)."""
 
-    def stash(pdf):
-        return (None, *_row_payloads(pdf, specs, col_map, kernel))
+    def stash(rb):
+        return (None, *_row_payloads(rb, specs, col_map, kernel))
 
     def new_cols():
         return {s.state_col: _KernelCol(kernel, s) for s in specs}
 
-    return _fold_builder(group_cols, cap, True, new_cols, stash)
+    return _arrow_builder("grouped_sketch", group_cols, cap, with_ord, new_cols, stash)
 
 
-# pa.BinaryArray offsets are int32: cap the state bytes per emitted batch
-_EMIT_BYTES = 1 << 29
-_INT32_MAX = (1 << 31) - 1
+def _in_pandas(fn, schema: StructType):
+    """``mapInPandas`` body running the Arrow builder ``fn``: each pandas
+    batch converts to Arrow under ``schema`` (the input's Spark schema),
+    so a key column's type does not drift with a batch's nulls, and each
+    output batch converts back to pandas. Only the partial route uses it:
+    perfbench's route check tells that route by its MapInPandas nodes,
+    and ROADMAP D6 deletes route and adapter together."""
+    from pyspark.sql.pandas.types import to_arrow_schema
 
+    arrow = pa.schema(
+        # mapInPandas hands timestamps over as naive datetime64[ns]
+        pa.field(f.name, pa.timestamp("ns") if pa.types.is_timestamp(f.type) else f.type)
+        for f in to_arrow_schema(schema)
+    )
 
-def _vec_direct_builder_arrow(
-    specs: list[SketchSpec], group_cols: list[str], col_map: dict, kernel
-):
-    """``mapInArrow`` body of the direct route: rows arrive
-    hash-partitioned on the group columns, so every group is complete in
-    the partition and the states it emits are final. The shared coder and
-    kernels run with ``_pa_encode`` over a struct array of the key
-    columns. Input batches never convert to pandas, and the output
-    RecordBatch is assembled zero-copy: the group columns ARE the coder's
-    final uniques, and each state column wraps the kernel's ``emit_buf``
-    (buf, offs) pair into a BinaryArray. States are byte-identical to the
-    partial route (gated by the direct-route tests)."""
+    def run(pdfs):
+        rbs = (pa.RecordBatch.from_pandas(p, schema=arrow, preserve_index=False) for p in pdfs)
+        for rb in fn(rbs):
+            yield rb.to_pandas()
 
-    def grouped_direct(batches):
-        import pyarrow as pa
-
-        coder = _KeyCoder(_pa_encode)
-        cols = {s.state_col: _KernelCol(kernel, s) for s in specs}
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            keys = pa.StructArray.from_arrays([rb.column(c) for c in group_cols], group_cols)
-            codes, uniques = _pa_encode([keys])
-            if coder.add(uniques, codes, None, *_row_payloads(rb, specs, col_map, kernel)):
-                _fold(coder, cols)
-        _fold(coder, cols)
-        n = len(coder)
-        if n == 0:
-            return
-        keys, nr = coder.keys.flatten(), coder.n_rows[:n]
-        bufs = {c: acc.emit_buf(n) for c, acc in cols.items()}
-        start = 0
-        while start < n:
-            stop = n
-            for _, offs in bufs.values():  # keep each chunk under int32 offsets
-                stop = min(stop, int(np.searchsorted(offs, offs[start] + _EMIT_BYTES)) - 1)
-            stop = max(stop, start + 1)
-            arrays = [k.slice(start, stop - start) for k in keys]
-            arrays.append(pa.array(nr[start:stop], type=pa.int64()))
-            for c, (buf, offs) in bufs.items():
-                if offs[stop] - offs[start] > _INT32_MAX:
-                    raise ValueError(
-                        f"grouped_sketch: state column {c!r} holds a "
-                        f"{int(offs[stop] - offs[start])}-byte group state, past the "
-                        "2^31-byte offsets of an Arrow binary column"
-                    )
-                rel = (offs[start : stop + 1] - offs[start]).astype(np.int32)
-                chunk = np.ascontiguousarray(buf[offs[start] : offs[stop]])
-                arrays.append(
-                    pa.Array.from_buffers(
-                        pa.binary(), stop - start, [None, pa.py_buffer(rel), pa.py_buffer(chunk)]
-                    )
-                )
-            yield pa.RecordBatch.from_arrays(arrays, names=[*group_cols, _NROWS_COL, *bufs])
-            start = stop
-
-    return grouped_direct
+    return run
 
 
 def _preagg_dedup_ratio(df: DataFrame, group_cols: list[str], sample_rows: int) -> float:
@@ -615,7 +603,7 @@ def _pre_merge_states(
     rows feeding the final per-key merge. Exposed for fan-in tests and as
     the per-key reference of the HLL/KMV fast-path tests."""
     exprs, col_map = plan_exprs(specs)
-    prepared = df.selectExpr(*[sql_ident(c) for c in group_cols], *exprs)
+    prepared = df.selectExpr(*[_group_key(df, c, "grouped_sketch") for c in group_cols], *exprs)
     if salt_buckets is None:
         try:
             # plan -> RDD conversion is metadata-only for batch plans
@@ -627,7 +615,7 @@ def _pre_merge_states(
             salt_buckets = 1
 
     stage1 = _row_builder(specs, group_cols, col_map, max_states_per_partition, _SketchKernel())
-    partials = prepared.mapInPandas(
+    partials = prepared.mapInArrow(
         _named(stage1, "generic_stage1"),
         schema=_grouped_schema(df, group_cols, specs, with_ord=True),
     )
@@ -648,19 +636,18 @@ def _pre_merge_states(
     return partials
 
 
-def _direct_key(df: DataFrame, c: str) -> str:
-    """Group column ``c`` in the direct route's JVM projection, as a SQL
-    expression for ``selectExpr``, keeping its type. Arrow's
-    ``dictionary_encode`` hashes floats bitwise, so float keys are
-    normalized to group as in the pandas routes: -0.0 becomes 0.0, and
-    NaN becomes null (pandas reads a null float as NaN,
-    so those routes put null and NaN keys in one group, emitted as null).
-    Nested types have no Arrow dictionary kernel and raise here."""
+def _group_key(df: DataFrame, c: str, op: str) -> str:
+    """Group column ``c`` as a SQL expression for ``selectExpr``, keeping
+    its type: the one key rule of every grouped and rollup projection.
+    Arrow's ``dictionary_encode`` hashes floats bitwise, so a float key's
+    -0.0 becomes 0.0 and its NaN becomes null: {0.0, -0.0} form one group
+    and {NaN, null} one group, emitted as null. Nested types have no Arrow
+    dictionary kernel and raise here, naming ``op`` and the column."""
     t = df.schema[c].dataType
     if isinstance(t, (ArrayType, MapType, StructType)):
         raise ValueError(
-            f"grouped_sketch: group column {c!r} has nested type {t.simpleString()}, "
-            "which the direct route cannot dictionary-encode"
+            f"{op}: group column {c!r} has nested type {t.simpleString()}, "
+            "which cannot be a group key"
         )
     col = sql_ident(c)
     if isinstance(t, (DoubleType, FloatType)):
@@ -701,9 +688,7 @@ def grouped_sketch(
       repeats its group keys, so partials shrink the exchange
       (low-cardinality keys, clustered layouts).
     * ``False``: shuffle the raw (group, hash) projection once and build
-      FINAL states in a single post-shuffle ``mapInArrow`` pass, for any
-      number of group columns of any non-nested type (float keys are
-      normalized in the projection; nested keys raise). At group cardinality
+      FINAL states in a single post-shuffle ``mapInArrow`` pass. At group cardinality
       near the row count (rows scattered by a round-robin write) the
       partial route wraps, exchanges, and re-parses ~one state blob per
       INPUT row — measured 69s vs 31s on the 20M-conv bench shape.
@@ -714,30 +699,37 @@ def grouped_sketch(
 
     Both shapes emit byte-identical states — HLL/KMV states are pure set
     functions of the hashes seen (gated by
-    test_grouped_direct_route_byte_identical)."""
+    test_grouped_direct_route_byte_identical).
+
+    Group columns may be of any non-nested type and follow one rule on
+    every route (``_group_key``): -0.0 and 0.0 are one key, NaN and null
+    one null key; a nested group column raises here."""
     kinds = {s.kind for s in specs}
     if len(kinds) == 1 and next(iter(kinds)) in _VEC_KERNELS:
         from .rollup import _rollup_builder
 
         kernel = _VEC_KERNELS[next(iter(kinds))](specs)
         exprs, col_map = plan_exprs(specs)
+        prepared = df.selectExpr(*[_group_key(df, c, "grouped_sketch") for c in group_cols], *exprs)
         if pre_partial is None:
             pre_partial = _preagg_dedup_ratio(df, group_cols, 200_000) <= 0.5
         out_schema = _grouped_schema(df, group_cols, specs, with_ord=False)
         if not pre_partial:
-            direct = df.selectExpr(*[_direct_key(df, c) for c in group_cols], *exprs)
-            builder = _vec_direct_builder_arrow(specs, group_cols, col_map, kernel)
-            return direct.repartition(*group_cols).mapInArrow(builder, schema=out_schema)
+            direct = _row_builder(specs, group_cols, col_map, None, kernel, with_ord=False)
+            return prepared.repartition(*group_cols).mapInArrow(
+                _named(direct, "grouped_direct"), schema=out_schema
+            )
         stage1 = _row_builder(specs, group_cols, col_map, max_states_per_partition, kernel)
-        prepared = df.selectExpr(*[sql_ident(c) for c in group_cols], *exprs)
         partials = prepared.mapInPandas(
-            _named(stage1, "grouped_stage1"),
+            _named(_in_pandas(stage1, prepared.schema), "grouped_stage1"),
             schema=_grouped_schema(df, group_cols, specs, with_ord=True),
         )
         # HLL/KMV merges are order-insensitive: no sort before the fold
         merge = _rollup_builder(group_cols, [s.state_col for s in specs], None, with_ord=False)
         shuffled = partials.repartition(*group_cols).drop(_ORD_COL)
-        return shuffled.mapInPandas(_named(merge, "grouped_merge"), schema=out_schema)
+        return shuffled.mapInPandas(
+            _named(_in_pandas(merge, out_schema), "grouped_merge"), schema=out_schema
+        )
     partials = _pre_merge_states(df, group_cols, specs, salt_buckets, max_states_per_partition)
     out_schema = StructType([f for f in partials.schema.fields if f.name != _ORD_COL])
     return partials.groupBy(*group_cols).applyInPandas(

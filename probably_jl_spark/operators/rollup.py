@@ -16,16 +16,22 @@ kinds (t-digest, KLL, cuckoo) apply partials in ascending partition order
 — the same determinism law as the grouped build, with no per-key pandas
 group materialization at any fan-in.
 
-Both stages run the grouped build's pandas fold (``_fold_builder``: the
-shared deferred key coder, byte-budgeted consolidation) over ``_ColAcc``
-columns — the only vectorized state merge in the library; the grouped
-partial route runs stage 2 as its merge, unsorted, because its HLL/KMV
-merges do not depend on order. Column routing is detected executor-side
-from the blobs' own kind bytes: HLL and KMV columns fold through the
-grouped kernels (`_HllKernel`/`_KmvKernel`: joined-buffer many-blob
-decode -> packed accumulator -> flat-buffer emit, no per-state-row
-Python), every other kind folds through the generic ``merge_blobs``
-dispatch. Because HLL and KMV states are canonical pure set functions,
+Both stages are ``mapInArrow`` runs of the grouped build's one Arrow
+builder loop (``operators/grouped.py::_arrow_builder``: the shared
+deferred key coder over ``_pa_encode``, byte-budgeted consolidation,
+zero-copy emit under ``_EMIT_BYTES``) over ``_ColAcc`` columns — the
+only vectorized state merge in the library; the grouped partial route
+runs stage 2 as its merge, unsorted, because its HLL/KMV merges do not
+depend on order. The stage-1 projection passes the group columns through
+``_group_key``, the grouped build's key rule: -0.0 and 0.0 are one key,
+NaN and null one null key, and a nested key raises at plan time. State
+columns are read as the Arrow binary columns they arrive as. Column
+routing is detected executor-side from the blobs' own kind bytes: HLL
+and KMV columns fold through the grouped kernels
+(`_HllKernel`/`_KmvKernel`: joined-buffer many-blob decode -> packed
+accumulator -> flat-buffer emit, no per-state-row Python), every other
+kind folds through the generic ``merge_blobs`` dispatch and emits
+through ``codec.blob_buffers``. Because HLL and KMV states are canonical pure set functions,
 rolling up fine-grained states is BYTE-identical to building the coarse
 states directly from the raw rows (gated by test + the rollup_day_to_type
 oracle query); order-sensitive kinds stay inside their published bounds.
@@ -40,7 +46,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 
 from ..sketches import codec
-from .grouped import _NROWS_COL, _ORD_COL, _VEC_KERNELS, _fold_builder, _named
+from .build import _column, sql_ident
+from .grouped import _NROWS_COL, _ORD_COL, _VEC_KERNELS, _arrow_builder, _group_key, _named
 from .specs import SketchSpec, merge_blobs
 
 
@@ -120,10 +127,10 @@ class _ColAcc:
             self.acc = self.kernel.init_acc()
         self.acc = self.kernel.absorb_states(self.acc, self.spec, g, blobs)
 
-    def emit_blobs(self, n: int) -> list:
+    def emit_buf(self, n: int):
         if self.kind == "generic":
-            return [self.acc.get(i) for i in range(n)]
-        return self.kernel.emit_blobs(self.acc, self.spec, n)
+            return codec.blob_buffers([self.acc[i] for i in range(n)])
+        return self.kernel.emit_buf(self.acc, self.spec, n)
 
     def reset(self) -> None:
         if self.kind == "generic":
@@ -135,25 +142,28 @@ class _ColAcc:
 def _rollup_builder(
     group_cols: list[str], state_cols: list[str], cap: int | None, with_ord: bool
 ):
-    """mapInPandas body for both rollup stages and the grouped partial
-    route's merge. Stage 1 (``with_ord=True``): flush-capped partials, one
-    per (partition, coarse key), tagged with the deterministic merge
-    order key. Stage 2 (``with_ord=False``): one streaming pass over a
-    hash-partitioned partition — pending batches fold in row order, so a
-    (key, ord)-sorted input applies every group's partials in ascending
-    origin order (the grouped build's determinism law) with no per-key
-    pandas group materialization. Blobs convert to one Arrow binary array
-    per batch (C-level), which the checks and decoders read in place."""
+    """The Arrow loop over state rows, for both rollup stages and the
+    grouped partial route's merge. Stage 1 (``with_ord=True``):
+    flush-capped partials, one per (partition, coarse key), tagged with
+    the deterministic merge order key. Stage 2 (``with_ord=False``): one
+    streaming pass over a hash-partitioned partition — pending batches
+    fold in row order, so a (key, ord)-sorted input applies every group's
+    partials in ascending origin order (the grouped build's determinism
+    law) with no per-key group materialization. The checks and decoders
+    read each batch's binary state columns in place."""
 
-    def stash(pdf):
-        pay = {
-            c: pa.array(pdf[c], type=pa.large_binary(), from_pandas=True) for c in state_cols
-        }
-        rows = pdf[_NROWS_COL].to_numpy(dtype=np.int64)
+    def stash(rb):
+        pay = {c: rb.column(c) for c in state_cols}
+        rows = _column(rb, _NROWS_COL, np.int64, 0)
         return rows, pay, sum(a.nbytes for a in pay.values())
 
-    return _fold_builder(
-        group_cols, cap, with_ord, lambda: {c: _ColAcc(c) for c in state_cols}, stash
+    return _arrow_builder(
+        "rollup_states",
+        group_cols,
+        cap,
+        with_ord,
+        lambda: {c: _ColAcc(c) for c in state_cols},
+        stash,
     )
 
 
@@ -204,14 +214,15 @@ def rollup_states(
     part_schema = StructType(fields)
     if _NROWS_COL not in df.columns:
         df = df.withColumn(_NROWS_COL, F.lit(0).cast(LongType()))
-    keep = all_group + [_NROWS_COL] + state_cols
+    keep = [_group_key(df, c, "rollup_states") for c in all_group]
+    keep += [sql_ident(c) for c in [_NROWS_COL, *state_cols]]
     stage1 = _rollup_builder(all_group, state_cols, max_states_per_partition, with_ord=True)
-    partials = df.select(*keep).mapInPandas(_named(stage1, "rollup_stage1"), schema=part_schema)
+    partials = df.selectExpr(*keep).mapInArrow(_named(stage1, "rollup_stage1"), schema=part_schema)
     out_schema = StructType([f for f in part_schema.fields if f.name != _ORD_COL])
     out = (
         partials.repartition(*all_group)
         .sortWithinPartitions(*all_group, _ORD_COL)
-        .mapInPandas(
+        .mapInArrow(
             _named(_rollup_builder(all_group, state_cols, None, with_ord=False), "rollup_merge"),
             schema=out_schema,
         )

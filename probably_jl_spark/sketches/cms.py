@@ -30,7 +30,7 @@ import struct
 import numpy as np
 
 from . import codec
-from .hashing import SALT_CMS, mix64, mix64_scalar, xxhash64_any
+from .hashing import SALT_CMS, mix64, mix64_scalar, weight_sums, xxhash64_any
 
 _HDR = struct.Struct("<IIB")
 
@@ -86,30 +86,27 @@ class CountMinSketch:
         """Add a batch of uint64 item hashes with optional multiplicities
         (reference add!(sketch, x, count), sketch.jl:77-88). Vectorized:
         per-table bincount then one saturating add — exact saturating
-        semantics because the bincount accumulates in uint64 before the
-        clip."""
+        semantics for any int64 counts, because the per-cell sums are
+        exact (`weight_sums`) and the add never wraps a uint64 cell."""
         if h.size == 0:
             return
         h = h.astype(np.uint64, copy=False)
-        cap = self._cap
+        cap = np.uint64(self._cap)
         w = np.uint64(self.width)
         pow2 = self.width & (self.width - 1) == 0
         wmask = np.uint64(self.width - 1)
         out = np.empty_like(h)
         tmp = np.empty_like(h)
-        weights = None if counts is None else counts.astype(np.float64, copy=False)
         for t in range(self.depth):
             ht = h if t == 0 else mix64(h, SALT_CMS + t, out=out, tmp=tmp)
             # pow2 width: mask instead of the ~10x slower uint64 mod
             idx = ((ht & wmask) if pow2 else (ht % w)).astype(np.int64)
-            if weights is None:
+            if counts is None:
                 add = np.bincount(idx, minlength=self.width).astype(np.uint64)
             else:
-                # float64 weights are exact up to 2^53 per cell per batch
-                add = np.bincount(idx, weights=weights, minlength=self.width).astype(np.uint64)
+                add = np.minimum(weight_sums(idx, counts, self.width), cap).astype(np.uint64)
             wide = self.table[t].astype(np.uint64)
-            wide += add
-            np.minimum(wide, cap, out=wide)
+            wide += np.minimum(add, cap - wide)
             self.table[t] = wide.astype(self.dtype)
 
     # -------------------------------------------------------------- query

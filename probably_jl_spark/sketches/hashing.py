@@ -235,3 +235,16 @@ def trailing_zeros64(x: np.ndarray) -> np.ndarray:
     with np.errstate(over="ignore"):
         low = (x & (~x + _U(1))).astype(np.float64)
     return (np.frexp(low)[1] - 1).astype(np.uint8)
+
+
+def weight_sums(idx: np.ndarray, w: np.ndarray, n: int) -> np.ndarray:
+    """Exact per-bin sums of non-negative integer weights ``w`` over bins
+    ``idx`` (each < ``n``): the CMS cell and MG key sums of a count
+    column. One float64 ``bincount`` while no sum can reach 2^53, past
+    which float64 rounds; otherwise Python ints in an object array, exact
+    past 2^64 - 1 for the caller to saturate or refuse."""
+    if not w.size or int(w.max()) < (1 << 53) // w.size:
+        return np.bincount(idx, weights=w.astype(np.float64), minlength=n).astype(np.uint64)
+    out = np.zeros(n, dtype=object)
+    np.add.at(out, idx, np.array(w.astype(np.uint64).tolist(), dtype=object))
+    return out

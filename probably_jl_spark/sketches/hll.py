@@ -348,9 +348,9 @@ def packed_entries_many_to_buf(
     sparse-v2 common case is ONE flat buffer build (constant 9-byte head
     scatter + one entry-byte scatter); groups past the sparse threshold
     (> m/8 nonzero registers, rare for per-entity sketches) run the
-    scalar dense encoder and splice in. The Arrow-native grouped route
-    wraps (buf, offs) directly into a BinaryArray with ZERO per-group
-    Python; ``packed_entries_many_to_bytes`` slices it for pandas."""
+    scalar dense encoder and splice in. The grouped and rollup builders
+    wrap (buf, offs) directly into a BinaryArray with ZERO per-group
+    Python."""
     bounds = np.asarray(bounds, dtype=np.int64)
     counts = np.diff(bounds)
     n = counts.size
@@ -387,22 +387,6 @@ def packed_entries_many_to_buf(
     for i, b in dense_blobs.items():
         buf[offs[i] : offs[i] + len(b)] = np.frombuffer(b, dtype=np.uint8)
     return buf, offs
-
-
-def packed_entries_many_to_bytes(
-    p: int, entries: np.ndarray, bounds: np.ndarray
-) -> list:
-    """Canonical wire blobs for MANY register files at once: group i's
-    sorted packed uint32 entries are ``entries[bounds[i]:bounds[i+1]]``.
-    Byte-identical to ``[packed_entries_to_bytes(p, ...) per group]``;
-    one flat buffer build (``packed_entries_many_to_buf``) plus C-level
-    bytes slicing — no per-group struct packing. The grouped vectorized
-    route emits a flushful of groups through this; the scalar loop was
-    ~5.6 us/group, this is ~0.5."""
-    buf, offs = packed_entries_many_to_buf(p, entries, bounds)
-    data = buf.tobytes()
-    ol = offs.tolist()
-    return [data[ol[i] : ol[i + 1]] for i in range(len(ol) - 1)]
 
 
 def packed_entries_many_from_bytes(blobs) -> tuple[np.ndarray, np.ndarray]:

@@ -75,9 +75,8 @@ def mins_many_to_buf(
 ) -> tuple[np.ndarray, np.ndarray]:
     """(uint8 buf, int64 offs): wire for MANY k-min sets laid end to end
     — blob i is ``buf[offs[i]:offs[i+1]]``, byte-identical to
-    ``mins_to_bytes(k, ...)`` per group. The Arrow-native grouped route
-    wraps this into a BinaryArray directly; ``mins_many_to_bytes``
-    slices it for pandas (the HLL twin is
+    ``mins_to_bytes(k, ...)`` per group. The grouped and rollup builders
+    wrap this into a BinaryArray directly (the HLL twin is
     ``packed_entries_many_to_buf``)."""
     bounds = np.asarray(bounds, dtype=np.int64)
     counts = np.diff(bounds)
@@ -98,18 +97,6 @@ def mins_many_to_buf(
         )
         buf[pos] = mins_b
     return buf, offs
-
-
-def mins_many_to_bytes(k: int, mins: np.ndarray, bounds: np.ndarray) -> list:
-    """Wire blobs for MANY k-min sets at once: group i's sorted uint64
-    mins are ``mins[bounds[i]:bounds[i+1]]``. Byte-identical to
-    ``[mins_to_bytes(k, ...) per group]``; one flat buffer build + bytes
-    slicing instead of per-group struct packing."""
-    buf, offs = mins_many_to_buf(k, mins, bounds)
-    n = offs.size - 1
-    data = buf.tobytes()
-    ol = offs.tolist()
-    return [data[ol[i] : ol[i + 1]] for i in range(n)]
 
 
 def mins_many_from_bytes(blobs) -> tuple[np.ndarray, np.ndarray]:

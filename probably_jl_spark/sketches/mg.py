@@ -47,10 +47,11 @@ import struct
 import numpy as np
 
 from . import codec
-from .hashing import xxhash64_any
+from .hashing import weight_sums, xxhash64_any
 
 _HDR = struct.Struct("<IIQQQ")  # k, count, n, n_items, deficit
 _B = 8192
+_U64_MAX = (1 << 64) - 1
 
 
 class MisraGries:
@@ -88,16 +89,16 @@ class MisraGries:
         h = h.astype(np.uint64, copy=False)
         weights = None
         if counts is not None:
-            weights = counts.astype(np.float64, copy=False)
             # MG's deterministic est <= true <= est+deficit guarantee only
             # holds for non-negative integer multiplicities: a negative
-            # weight would wrap through the float64->uint64 cast to a
-            # ~2^64 counter that no trim ever drops, and fractional
-            # weights truncate per-slice so retained mass diverges from n
-            if np.any(weights < 0):
+            # weight would wrap through the uint64 cast to a ~2^64
+            # counter that no trim ever drops, and fractional weights
+            # truncate so retained mass diverges from n
+            if np.any(counts < 0):
                 raise ValueError("MisraGries counts must be non-negative")
-            if np.any(weights != np.floor(weights)):
+            if counts.dtype.kind == "f" and np.any(counts != np.floor(counts)):
                 raise ValueError("MisraGries counts must be integral")
+            weights = counts.astype(np.uint64, copy=False)
         pos = 0
         while pos < h.size:
             room = _B - (self.n_items % _B)
@@ -106,19 +107,23 @@ class MisraGries:
             if weights is None:
                 uh, uc = np.unique(sl, return_counts=True)
                 uc = uc.astype(np.uint64)
-                self.n += int(take)
+                n_add = int(take)
             else:
                 uh, inv = np.unique(sl, return_inverse=True)
-                # float64 sums are exact up to 2^53 per key per slice
-                wsum = np.bincount(inv, weights=weights[pos : pos + take])
-                uc = wsum.astype(np.uint64)
-                self.n += int(wsum.sum())
+                uc = weight_sums(inv, weights[pos : pos + take], uh.size)
+                n_add = int(uc.sum())
+                # no counter exceeds n, so this bounds every key's sum
+                # too; the wire format stores n as a uint64
+                if self.n + n_add > _U64_MAX:
+                    raise ValueError("MisraGries: the count total passes 2^64 - 1")
+                uc = uc.astype(np.uint64, copy=False)
                 # zero-weight entries must not install phantom counters
                 # (they would occupy summary slots and show in candidates)
                 nz = uc > 0
                 if not nz.all():
                     uh, uc = uh[nz], uc[nz]
             self._absorb(uh, uc)
+            self.n += n_add
             self.n_items += int(take)
             pos += take
             if self.n_items % _B == 0:

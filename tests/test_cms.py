@@ -68,6 +68,27 @@ def test_saturation():
     assert cms.query("x") == 255  # stays saturated, no wraparound
 
 
+def test_count_sums_exact_past_2_53():
+    """Per-cell count sums are exact for any int64 count (a float64 sum
+    rounds 2^60 + 1 to 2^60): a uint64-cell CMS holds 2^60 + 1 and
+    saturates at 2^64 - 1 instead of wrapping; a uint32-cell CMS still
+    saturates at 2^32 - 1."""
+    from probably_jl_spark.operators.specs import SketchSpec
+
+    h = np.full(2, xxhash64_any("x"), dtype=np.uint64)
+    c = np.array([2**60 + 1, 0], dtype=np.uint64)
+    params = {"width": 64, "depth": 3, "dtype": np.uint64}
+    spec = SketchSpec("c", "cms", key_cols=("k",), params=params)
+    wide = spec.new()
+    spec.update(wide, h, None, c)
+    assert wide.query("x") == 2**60 + 1
+    wide.update_hashes(h, np.full(2, 2**63, dtype=np.uint64))
+    assert wide.query("x") == 2**64 - 1
+    narrow = CountMinSketch(64, 3)
+    narrow.update_hashes(h, c)
+    assert narrow.query("x") == 2**32 - 1
+
+
 def test_merge_law():
     # reference test/countmin.jl:119-138: (x+y)[k] == x[k] + y[k]
     for seed in range(5):

@@ -1,10 +1,11 @@
-"""The shared deferred key coder of the grouped and rollup builders
-(operators/grouped.py::_KeyCoder), driven without Spark: codes match one
-factorize over all keys, the Arrow encoder matches the pandas one, flush
-points match a per-batch live-key count, the byte budget never changes a
-builder's output, the generic stage 1 matches a per-batch, per-key
-sketch loop byte for byte, and the Arrow emitter refuses a state past
-int32 offsets."""
+"""The one Arrow builder loop of the grouped and rollup stages and its
+deferred key coder (operators/grouped.py::_arrow_builder, _KeyCoder),
+driven without Spark: codes match one factorize over all keys, the Arrow
+encoder matches a pandas factorize reference, flush points match a
+per-batch live-key count, the byte budget never changes a builder's
+output, the generic stage 1 matches a per-batch, per-key sketch loop
+byte for byte, the emitter chunks every flush under ``_EMIT_BYTES``,
+and it refuses a state past int32 offsets."""
 
 import numpy as np
 import pandas as pd
@@ -15,13 +16,10 @@ from probably_jl_spark.operators import grouped
 from probably_jl_spark.operators.grouped import (
     _ORD_COL,
     _KeyCoder,
-    _fold_builder,
+    _arrow_builder,
     _pa_encode,
-    _pd_encode,
-    _pd_keys,
     _row_builder,
     _SketchKernel,
-    _vec_direct_builder_arrow,
 )
 from probably_jl_spark.operators.rollup import _rollup_builder
 from probably_jl_spark.operators.specs import SketchSpec
@@ -31,7 +29,17 @@ def _batches(df: pd.DataFrame, size: int) -> list[pd.DataFrame]:
     return [df.iloc[i : i + size].reset_index(drop=True) for i in range(0, len(df), size)]
 
 
-def _coder_codes(batches, keys_of, fold_after, encode=_pd_encode):
+def _arrow(batches: list[pd.DataFrame]) -> list[pa.RecordBatch]:
+    """Pandas batches as Arrow ones; a NaN or None cell becomes null, as
+    the key projection hands a NaN key to the builders."""
+    return [pa.RecordBatch.from_pandas(b, preserve_index=False) for b in batches]
+
+
+def _pa_keys_of(group_cols):
+    return lambda rb: pa.StructArray.from_arrays([rb.column(c) for c in group_cols], group_cols)
+
+
+def _coder_codes(batches, keys_of, fold_after, encode=_pa_encode):
     """Per-row global codes and the final uniques from the coder,
     consolidating after the batch indexes in ``fold_after`` and at the
     end."""
@@ -46,10 +54,6 @@ def _coder_codes(batches, keys_of, fold_after, encode=_pd_encode):
     return np.concatenate(out), coder.keys
 
 
-def _pd_keys_of(group_cols):
-    return lambda pdf: _pd_keys(pdf, group_cols)
-
-
 @pytest.mark.parametrize("fold_after", [set(), {0}, {1, 2, 4}, set(range(20))])
 def test_coder_codes_equal_one_factorize(fold_after):
     rs = np.random.default_rng(7)
@@ -57,14 +61,14 @@ def test_coder_codes_equal_one_factorize(fold_after):
     f = rs.integers(0, 40, n).astype(np.float64)
     f[rs.random(n) < 0.1] = np.nan
     df = pd.DataFrame({"f": f, "s": rs.choice(["a", "b", "c"], n)})
-    batches = _batches(df, 97)
+    batches = _arrow(_batches(df, 97))
 
-    got, _ = _coder_codes(batches, _pd_keys_of(["f"]), fold_after)
+    got, _ = _coder_codes(batches, _pa_keys_of(["f"]), fold_after)
     want, uniq = pd.factorize(df["f"], use_na_sentinel=False)
     assert (got == want).all()
     assert np.isnan(uniq).sum() == 1  # NaN keys form one group
 
-    got, _ = _coder_codes(batches, _pd_keys_of(["f", "s"]), fold_after)
+    got, _ = _coder_codes(batches, _pa_keys_of(["f", "s"]), fold_after)
     want, _ = pd.MultiIndex.from_frame(df[["f", "s"]]).factorize(use_na_sentinel=False)
     assert (got == want).all()
 
@@ -81,11 +85,11 @@ def _key_rows(keys) -> list[tuple]:
 @pytest.mark.parametrize("group_cols", [["s"], ["s", "i"]])
 @pytest.mark.parametrize("fold_after", [set(), {0, 3, 9}])
 def test_pa_encode_matches_pd_encode(group_cols, fold_after):
-    """The Arrow encoder of the direct route gives the pandas encoder's
-    codes and first-seen uniques, null keys and null parts of multi-column
-    keys included, across coder consolidations. The pandas side sees
-    what Spark hands ``mapInPandas``: None strings and NaN for a null
-    integer."""
+    """The Arrow encoder of every builder gives a pandas ``factorize``
+    reference's codes and first-seen uniques, null keys and null parts of
+    multi-column keys included, across coder consolidations. The pandas
+    side sees what Spark hands ``mapInPandas``: None strings and NaN for
+    a null integer."""
     rs = np.random.default_rng(5)
     n = 2000
     s = rs.choice(np.array(["a", "b", "c", "d", None], dtype=object), n)
@@ -102,8 +106,18 @@ def test_pa_encode_matches_pd_encode(group_cols, fold_after):
             [t.column(c).combine_chunks() for c in group_cols], group_cols
         )
 
-    want, want_keys = _coder_codes(pd_batches, _pd_keys_of(group_cols), fold_after)
-    got, got_keys = _coder_codes(pa_batches, pa_keys, fold_after, encode=_pa_encode)
+    def pd_keys(pdf):
+        if len(group_cols) == 1:
+            return pd.Index(pdf[group_cols[0]])
+        return pd.MultiIndex.from_frame(pdf[list(group_cols)])
+
+    def pd_encode(parts):
+        keys = parts[0].append(parts[1:]) if len(parts) > 1 else parts[0]
+        codes, uniques = keys.factorize(use_na_sentinel=False)
+        return np.asarray(codes, dtype=np.int64), uniques
+
+    want, want_keys = _coder_codes(pd_batches, pd_keys, fold_after, encode=pd_encode)
+    got, got_keys = _coder_codes(pa_batches, pa_keys, fold_after)
     assert (got == want).all()
     assert [f.name for f in got_keys.type] == group_cols
     assert _key_rows(got_keys) == _key_rows(want_keys)
@@ -111,7 +125,9 @@ def test_pa_encode_matches_pd_encode(group_cols, fold_after):
 
 
 def _flushes(builder, batches) -> list[tuple[list, list]]:
-    return [(list(o["k"]), list(o["n_rows"])) for o in builder(iter(batches))]
+    return [
+        (o.column("k").to_pylist(), o.column("n_rows").to_pylist()) for o in builder(iter(batches))
+    ]
 
 
 def test_coder_flushes_on_live_count_batches():
@@ -120,26 +136,26 @@ def test_coder_flushes_on_live_count_batches():
     seen order) and row counts."""
     rs = np.random.default_rng(3)
     df = pd.DataFrame({"k": rs.integers(0, 300, 5000)})
-    batches = _batches(df, 64)
+    batches = _arrow(_batches(df, 64))
 
-    def stash(pdf):
+    def stash(rb):
         return None, {}, 0
 
     for cap in (1, 10, 100, 250, 1000):
         want, live = [], {}
-        for pdf in batches:
-            for k in pdf["k"]:
+        for rb in batches:
+            for k in rb.column("k").to_pylist():
                 live[k] = live.get(k, 0) + 1
             if len(live) > cap:
                 want.append((list(live), list(live.values())))
                 live = {}
         if live:
             want.append((list(live), list(live.values())))
-        got = _flushes(_fold_builder(["k"], cap, True, dict, stash), batches)
+        got = _flushes(_arrow_builder("grouped_sketch", ["k"], cap, True, dict, stash), batches)
         assert got == want, cap
 
 
-def _state_batches() -> list[pd.DataFrame]:
+def _state_batches() -> list[pa.RecordBatch]:
     """State rows with repeated keys: HLL, KMV and (generic) CMS columns."""
     from probably_jl_spark.sketches.cms import CountMinSketch
     from probably_jl_spark.sketches.hll import HyperLogLog
@@ -155,7 +171,7 @@ def _state_batches() -> list[pd.DataFrame]:
         cms.update_hashes(h)
         rows.append((f"k{rs.integers(0, 40)}", int(h.size), hll.to_bytes(), kmv.to_bytes(), cms.to_bytes()))
     df = pd.DataFrame(rows, columns=["k", "n_rows", "u", "m", "c"])
-    return _batches(df, 23)
+    return _arrow(_batches(df, 23))
 
 
 def test_merge_builder_output_ignores_byte_budget(monkeypatch):
@@ -180,7 +196,7 @@ def test_merge_builder_output_ignores_byte_budget(monkeypatch):
     assert [c for c in calls if c] == [1] * len(batches)
 
     assert len(one) == len(every) == 1
-    pd.testing.assert_frame_equal(one[0], every[0])
+    pd.testing.assert_frame_equal(one[0].to_pandas(), every[0].to_pandas())
 
 
 _ALL_KINDS = [
@@ -206,8 +222,9 @@ _ALL_COLS = {
 
 
 def _raw_batches() -> list[pd.DataFrame]:
-    """Raw rows as Spark hands them to ``mapInPandas``: float32 keys with
-    NaN, string keys with None, hash, value and count columns."""
+    """Raw rows as pandas batches (the per-key reference reads them, the
+    builders read them through `_arrow`): float32 keys with NaN, string
+    keys with None, hash, value and count columns."""
     rs = np.random.default_rng(17)
     n = 1500
     f = rs.integers(0, 6, n).astype(np.float32)
@@ -288,8 +305,8 @@ def test_generic_stage1_matches_per_key_reference(group_cols, cap):
     want = _reference_stage1(_ALL_KINDS, group_cols, _ALL_COLS, cap, batches)
     got = {}
     stage1 = _row_builder(_ALL_KINDS, group_cols, _ALL_COLS, cap, _SketchKernel())
-    for out in stage1(iter(batches)):
-        for _, r in out.iterrows():
+    for out in stage1(iter(_arrow(batches))):
+        for _, r in out.to_pandas().iterrows():
             key = tuple(None if pd.isna(r[c]) else r[c] for c in group_cols)
             assert (r[_ORD_COL], key) not in got
             got[(r[_ORD_COL], key)] = (r["n_rows"], [r[s.state_col] for s in _ALL_KINDS])
@@ -327,6 +344,36 @@ def test_arrow_emit_refuses_state_past_int32_offsets():
         [pa.array(["a", "a"]), pa.array([1, 2], type=pa.int64())],
         names=["g", "__h0"],
     )
-    fn = _vec_direct_builder_arrow(specs, ["g"], col_map, _HugeStateKernel())
+    fn = _row_builder(specs, ["g"], col_map, None, _HugeStateKernel(), with_ord=False)
     with pytest.raises(ValueError, match=r"grouped_sketch: state column 'state_u'"):
         list(fn(iter([rb])))
+
+
+def _state_bytes(rb: pa.RecordBatch) -> int:
+    """Bytes of a batch's state (binary) columns."""
+    return sum(len(b) for c in rb.columns if pa.types.is_binary(c.type) for b in c.to_pylist())
+
+
+@pytest.mark.parametrize("stage", ["rollup_stage1", "generic_stage1"])
+def test_emit_chunks_every_flush_under_byte_bound(monkeypatch, stage):
+    """With ``_EMIT_BYTES`` at a few KB, a flush holding many times that
+    comes out as several RecordBatches, each with fewer state bytes than
+    the bound, which concatenated equal the unchunked output row for
+    row: rollup's stage 1 over state rows and the generic stage 1 over
+    raw rows."""
+    if stage == "rollup_stage1":
+        builder = _rollup_builder(["k"], ["u", "m", "c"], 1 << 16, True)
+        batches = _state_batches()
+    else:
+        builder = _row_builder(_ALL_KINDS, ["f", "s"], _ALL_COLS, 1 << 16, _SketchKernel())
+        batches = _arrow(_raw_batches())
+
+    whole = list(builder(iter(batches)))
+    assert len(whole) == 1
+    bound = 4096
+    assert _state_bytes(whole[0]) > 4 * bound
+    monkeypatch.setattr(grouped, "_EMIT_BYTES", bound)
+    chunks = list(builder(iter(batches)))
+    assert len(chunks) > 1
+    assert all(_state_bytes(rb) < bound for rb in chunks)
+    assert pa.Table.from_batches(chunks).equals(pa.Table.from_batches(whole))

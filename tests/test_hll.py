@@ -231,7 +231,7 @@ def test_packed_entries_many_helpers_match_scalar():
     from probably_jl_spark.sketches.hll import (
         packed_entries_from_bytes,
         packed_entries_many_from_bytes,
-        packed_entries_many_to_bytes,
+        packed_entries_many_to_buf,
         packed_entries_to_bytes,
     )
 
@@ -247,7 +247,8 @@ def test_packed_entries_many_helpers_match_scalar():
     bounds = np.zeros(len(sizes) + 1, dtype=np.int64)
     np.cumsum(sizes, out=bounds[1:])
 
-    fast = packed_entries_many_to_bytes(p, entries, bounds)
+    buf, offs = packed_entries_many_to_buf(p, entries, bounds)
+    fast = [buf[a:b].tobytes() for a, b in zip(offs[:-1], offs[1:])]
     assert fast == [packed_entries_to_bytes(p, g) for g in groups]
 
     counts, ent = packed_entries_many_from_bytes(fast)
@@ -258,6 +259,7 @@ def test_packed_entries_many_helpers_match_scalar():
         assert np.array_equal(ent[off : off + c], e)
         off += c
 
-    assert packed_entries_many_to_bytes(p, entries[:0], bounds[:1]) == []
+    buf, offs = packed_entries_many_to_buf(p, entries[:0], bounds[:1])
+    assert [buf[a:b].tobytes() for a, b in zip(offs[:-1], offs[1:])] == []
     c0, e0 = packed_entries_many_from_bytes([])
     assert c0.size == 0 and e0.size == 0

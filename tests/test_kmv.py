@@ -188,7 +188,7 @@ def test_mins_many_helpers_match_scalar():
     from probably_jl_spark.sketches.kmv import (
         mins_from_bytes,
         mins_many_from_bytes,
-        mins_many_to_bytes,
+        mins_many_to_buf,
         mins_to_bytes,
     )
 
@@ -200,7 +200,8 @@ def test_mins_many_helpers_match_scalar():
     bounds = np.zeros(len(sizes) + 1, dtype=np.int64)
     np.cumsum(sizes, out=bounds[1:])
 
-    fast = mins_many_to_bytes(k, mins, bounds)
+    buf, offs = mins_many_to_buf(k, mins, bounds)
+    fast = [buf[a:b].tobytes() for a, b in zip(offs[:-1], offs[1:])]
     assert fast == [mins_to_bytes(k, g) for g in groups]
 
     counts, out = mins_many_from_bytes(fast)
@@ -216,6 +217,7 @@ def test_mins_many_helpers_match_scalar():
     assert counts[0] == sizes[2] and np.array_equal(out[: counts[0]], groups[2])
     assert counts[1] == sizes[1]
 
-    assert mins_many_to_bytes(k, mins[:0], bounds[:1]) == []
+    buf, offs = mins_many_to_buf(k, mins[:0], bounds[:1])
+    assert [buf[a:b].tobytes() for a, b in zip(offs[:-1], offs[1:])] == []
     c0, e0 = mins_many_from_bytes([])
     assert c0.size == 0 and e0.size == 0

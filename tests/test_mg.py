@@ -148,7 +148,7 @@ def test_prop_laws_any_stream(xs, k):
 
 def test_weight_validation_and_zero_drop():
     """Negative/fractional weights are rejected (they would wrap through
-    the float64→uint64 cast into a ~2^64 counter no trim ever drops,
+    the uint64 cast into a ~2^64 counter no trim ever drops,
     permanently breaking est ≤ true); zero weights install no phantom
     counters."""
     mg = MisraGries(4)
@@ -164,6 +164,27 @@ def test_weight_validation_and_zero_drop():
     assert int(h[0]) not in keys.tolist()  # zero-weight key absent
     assert mg.n == 5 and counts.sum() == 5
     assert mg.query_hash(int(h[0])) == 0
+
+
+def test_weight_sums_exact_past_2_53():
+    """A key's count sum is exact for any int64 count: a float64 sum
+    would round 2^60 + 1 to 2^60. A sum past 2^64 - 1, within one update
+    or across updates, raises instead of wrapping, and leaves n as it
+    was."""
+    h = np.full(2, xxhash64_any("x"), dtype=np.uint64)
+    mg = MisraGries(8)
+    mg.update_hashes(h, counts=np.array([2**60 + 1, 0], dtype=np.int64))
+    assert mg.query_hash(int(h[0])) == 2**60 + 1
+    assert mg.n == 2**60 + 1
+    big = np.full(3, 2**63 - 1, dtype=np.int64)
+    with pytest.raises(ValueError, match=r"passes 2\^64 - 1"):
+        MisraGries(8).update_hashes(np.full(3, h[0]), counts=big)
+    mg = MisraGries(8)
+    mg.update_hashes(h[:1], counts=big[:1])
+    mg.update_hashes(h[:1], counts=big[:1])
+    with pytest.raises(ValueError, match=r"passes 2\^64 - 1"):
+        mg.update_hashes(h[:1], counts=big[:1])
+    assert mg.n == 2 * (2**63 - 1)
 
 
 def test_absorb_matches_double_sort_reference():

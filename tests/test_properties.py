@@ -148,13 +148,13 @@ def test_quantile_merge_rank_consistency(vs, split):
     seed=st.integers(min_value=0, max_value=2**31 - 1),
 )
 def test_hll_many_blob_helpers_equal_scalar(sizes, p, seed):
-    """packed_entries_many_to/from_bytes == the scalar helpers for ANY
+    """packed_entries_many_to_buf/from_bytes == the scalar helpers for ANY
     mix of group sizes, including empty groups and dense-v1 fallbacks
     (sizes above m/8)."""
     from probably_jl_spark.sketches.hll import (
         packed_entries_from_bytes,
         packed_entries_many_from_bytes,
-        packed_entries_many_to_bytes,
+        packed_entries_many_to_buf,
         packed_entries_to_bytes,
     )
 
@@ -172,7 +172,8 @@ def test_hll_many_blob_helpers_equal_scalar(sizes, p, seed):
     )
     bounds = np.zeros(len(groups) + 1, dtype=np.int64)
     np.cumsum([g.size for g in groups], out=bounds[1:])
-    blobs = packed_entries_many_to_bytes(p, entries, bounds)
+    buf, offs = packed_entries_many_to_buf(p, entries, bounds)
+    blobs = [buf[a:b].tobytes() for a, b in zip(offs[:-1], offs[1:])]
     assert blobs == [packed_entries_to_bytes(p, g) for g in groups]
     counts, ent = packed_entries_many_from_bytes(blobs)
     off = 0
@@ -193,7 +194,7 @@ def test_kmv_many_blob_helpers_equal_scalar(sizes, k, seed):
     from probably_jl_spark.sketches.kmv import (
         mins_from_bytes,
         mins_many_from_bytes,
-        mins_many_to_bytes,
+        mins_many_to_buf,
         mins_to_bytes,
     )
 
@@ -209,7 +210,8 @@ def test_kmv_many_blob_helpers_equal_scalar(sizes, k, seed):
     )
     bounds = np.zeros(len(groups) + 1, dtype=np.int64)
     np.cumsum([g.size for g in groups], out=bounds[1:])
-    blobs = mins_many_to_bytes(k, mins, bounds)
+    buf, offs = mins_many_to_buf(k, mins, bounds)
+    blobs = [buf[a:b].tobytes() for a, b in zip(offs[:-1], offs[1:])]
     assert blobs == [mins_to_bytes(k, g) for g in groups]
     counts, out = mins_many_from_bytes(blobs)
     off = 0

@@ -437,28 +437,33 @@ def test_intersection_cardinality():
 
 
 def test_grouped_nan_key_single_state(spark):
-    """ADVICE r02: pandas hands back a fresh float-NaN object per Arrow
-    batch, so without normalization the NaN group fragments into one dict
-    entry per batch (same _ORD_COL -> merge order rides on shuffle row
-    order). The generic stage-1 builder, whose key coder groups NaN keys
-    by value, must emit exactly ONE state row per (partition, NaN-group),
-    however many batches feed it."""
+    """ADVICE r02: a NaN key must not fragment into one group per batch
+    (same _ORD_COL -> merge order rides on shuffle row order). The key
+    projection (``_group_key``) turns NaN keys into null, and the generic
+    stage-1 builder, whose Arrow key coder codes null keys as one group,
+    must emit exactly ONE state row per (partition, NaN-group), however
+    many batches feed it."""
     import pandas as pd
+    import pyarrow as pa
 
     from probably_jl_spark.operators.build import plan_columns
     from probably_jl_spark.operators.grouped import _SketchKernel, _row_builder
 
     specs = [SketchSpec("v", "tdigest", value_col="value")]
     _, col_map = plan_columns(specs)
-    # np.float32 NaN keys too: FloatType columns reach pandas as float32,
-    # which is NOT a Python-float subclass (code-review r3)
+
+    def batch(g, v):
+        # FloatType keys, NaN turned into null as the projection does
+        g = pa.array(np.array(g, dtype=np.float32), from_pandas=True)
+        return pa.RecordBatch.from_arrays([g, pa.array(v)], names=["g", "__v0"])
+
     batches = [
-        pd.DataFrame({"g": np.array([np.nan, 1.0], dtype=np.float32), "__v0": [1.0, 2.0]}),
-        pd.DataFrame({"g": np.array([np.nan, 1.0], dtype=np.float32), "__v0": [3.0, 4.0]}),
-        pd.DataFrame({"g": np.array([np.nan], dtype=np.float32), "__v0": [5.0]}),
+        batch([np.nan, 1.0], [1.0, 2.0]),
+        batch([np.nan, 1.0], [3.0, 4.0]),
+        batch([np.nan], [5.0]),
     ]
     stage1 = _row_builder(specs, ["g"], col_map, 1 << 16, _SketchKernel())
-    out = pd.concat(list(stage1(iter(batches))))
+    out = pd.concat([rb.to_pandas() for rb in stage1(iter(batches))])
     # one row for the NaN group, one for key 1.0 — not one per batch
     assert len(out) == 2, out
     nan_rows = out[out["g"].isna()]
@@ -890,6 +895,58 @@ def test_grouped_direct_route_rejects_nested_keys(spark, events):
     for c in ("s", "a", "m"):
         with pytest.raises(ValueError, match=rf"grouped_sketch: group column '{c}'"):
             grouped_sketch(nested, [c], specs, pre_partial=False)
+
+
+def test_one_group_key_rule_on_every_route(spark):
+    """Over a float key holding 0.0, -0.0, NaN and null, the direct,
+    partial and generic routes and ``rollup_states`` each put {0.0, -0.0}
+    in one group keyed 0.0 and {NaN, null} in one group emitted as null,
+    with the same row counts and, for the HLL column, the same states. A
+    nested (struct or array) group column raises at plan time on every
+    route, naming the operator and the column."""
+    import math
+
+    from probably_jl_spark.operators.rollup import rollup_states
+    from probably_jl_spark.sketches.hll import HyperLogLog
+
+    keys = [0.0, -0.0, float("nan"), None]
+    rows = [(keys[i % 4], f"u{i}", 1.0) for i in range(40)]
+    df = spark.createDataFrame(rows, "f double, u string, v double").repartition(3)
+    hll = [SketchSpec("u", "hll", key_cols=("u",))]
+    mixed = hll + [SketchSpec("td", "tdigest", value_col="v")]
+    blob = HyperLogLog(14).to_bytes()
+    states = spark.createDataFrame(
+        [(keys[i % 4], 1, blob) for i in range(40)], "f double, n_rows long, state_u binary"
+    ).repartition(3)
+    outs = {
+        "direct": grouped_sketch(df, ["f"], hll, pre_partial=False),
+        "partial": grouped_sketch(df, ["f"], hll, pre_partial=True),
+        "generic": grouped_sketch(df, ["f"], mixed),
+        "rollup": rollup_states(states, ["f"]),
+    }
+    got = {}
+    for route, out in outs.items():
+        rs = sorted(out.collect(), key=lambda r: r["f"] is None)
+        assert len(rs) == 2, (route, rs)
+        zero, null = rs
+        assert zero["f"] == 0.0 and math.copysign(1.0, zero["f"]) == 1.0, route
+        assert null["f"] is None, route
+        assert zero["n_rows"] == null["n_rows"] == 20, route
+        got[route] = [bytes(r["state_u"]) for r in rs]
+    assert got["direct"] == got["partial"] == got["generic"]
+
+    nested = df.select(
+        "u", "v", F.struct("u").alias("s"), F.array("u").alias("a"),
+        F.lit(blob).alias("state_u"),
+    )
+    for c in ("s", "a"):
+        for pre_partial in (False, True):
+            with pytest.raises(ValueError, match=rf"grouped_sketch: group column '{c}'"):
+                grouped_sketch(nested, [c], hll, pre_partial=pre_partial)
+        with pytest.raises(ValueError, match=rf"grouped_sketch: group column '{c}'"):
+            grouped_sketch(nested, [c], mixed)
+        with pytest.raises(ValueError, match=rf"rollup_states: group column '{c}'"):
+            rollup_states(nested.select(c, "state_u"), [c])
 
 
 def test_tree_merge_driver_fold_equals_tree(spark, events):
