@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.specs import sketch_from_bytes
+from ..sketches import codec
 from ..sketches.bloom import BloomFilter
 from ..sketches.cms import CountMinSketch
 from ..sketches.cuckoo import CuckooFilter
@@ -122,6 +123,16 @@ def _materialize(state):
     return state
 
 
+def _state_blob(state, fn: str, kinds: dict) -> bytes:
+    """``state``'s wire bytes, checked on the driver by the blob's kind
+    byte (no decode) against ``kinds`` ({codec kind: name}): a state of
+    another kind raises a TypeError naming ``fn``, not an executor error."""
+    blob = bytes(state if isinstance(state, (bytes, bytearray)) else state.to_bytes())
+    if codec.peek_kind(blob) not in kinds:
+        raise TypeError(f"{fn} expects a {' or '.join(kinds.values())} state")
+    return blob
+
+
 # ----------------------------------------------------------- batch queries
 
 # per-worker-process decode cache for broadcast sketch states, keyed by a
@@ -161,8 +172,10 @@ def batch_contains(
     ``key_cols`` is a single column ALREADY holding xxhash64 item hashes
     (e.g. a precomputed content-hash column shared with the filter's
     update path), skipping the re-hash."""
-    blob = state if isinstance(state, (bytes, bytearray)) else state.to_bytes()
-    bc = keys_df.sparkSession.sparkContext.broadcast(bytes(blob))
+    blob = _state_blob(
+        state, "batch_contains", {codec.KIND_BLOOM: "Bloom", codec.KIND_CUCKOO: "cuckoo"}
+    )
+    bc = keys_df.sparkSession.sparkContext.broadcast(blob)
 
     token = uuid.uuid4().hex  # stable across closure pickling
 
@@ -183,8 +196,10 @@ def batch_query_counts(keys_df: DataFrame, key_cols: list[str], state, out_col: 
     """CMS (or Misra-Gries lower-bound) point-frequency estimates for
     every row of keys_df (both expose the same vectorized
     ``query_hashes`` contract)."""
-    blob = state if isinstance(state, (bytes, bytearray)) else state.to_bytes()
-    bc = keys_df.sparkSession.sparkContext.broadcast(bytes(blob))
+    blob = _state_blob(
+        state, "batch_query_counts", {codec.KIND_CMS: "count-min", codec.KIND_MG: "Misra-Gries"}
+    )
+    bc = keys_df.sparkSession.sparkContext.broadcast(blob)
 
     token = uuid.uuid4().hex  # stable across closure pickling
 

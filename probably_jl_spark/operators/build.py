@@ -258,28 +258,9 @@ _DRIVER_MERGE_MAX_BYTES = 64 << 20
 
 
 def _est_partial_bytes(specs: list[SketchSpec]) -> int:
-    """Upper bound on one partial row's serialized state bytes, sized per
-    kind from the spec's parameters: the empty wire (header; bloom, cms
-    and cuckoo wires are their whole fixed-size table) plus the most the
-    wire grows with content — dense HLL registers (the sparse wire
-    densifies at m/8 entries), k KMV hashes, k MG (key, count) pairs,
-    <= delta t-digest (mean, weight) centroids, and KLL's <= 3k + 2H items
-    plus H level sizes for H <= 64 levels."""
-    total = 0
-    for s in specs:
-        sk = s.new()
-        total += len(sk.to_bytes())
-        if s.kind == "hll":
-            total += 1 << sk.p
-        elif s.kind == "kmv":
-            total += 8 * sk.k
-        elif s.kind == "mg":
-            total += 16 * sk.k
-        elif s.kind == "tdigest":
-            total += 16 * math.ceil(sk.delta)
-        elif s.kind == "kll":
-            total += 8 * (3 * sk.k + 2 * 64) + 4 * 64
-    return total
+    """Upper bound on one partial row's state bytes: each spec's fixed
+    plus growth bytes (`SketchSpec.size_model`)."""
+    return sum(sum(s.size_model()) for s in specs)
 
 
 def tree_merge(partials: DataFrame, specs: list[SketchSpec], depth: int | None = None) -> dict:

@@ -8,7 +8,7 @@ each route does two jobs only: assign group codes, then fold states.
 One Arrow builder loop (``_arrow_builder``) runs every grouped and
 rollup stage, over raw rows or over state rows: it codes each batch's
 group columns, folds the batch into one accumulator per output column,
-flushes on a live-key cap and emits zero-copy RecordBatches.
+flushes stage 1 under a byte budget and emits zero-copy RecordBatches.
 
 * Generic route (any spec mix): a ``mapInArrow`` stage 1 keeps one
   sketch per key per input partition (``_SketchKernel``: one
@@ -37,14 +37,19 @@ One deferred key coder (``_KeyCoder``) assigns first-seen group codes. It
 stashes each batch's own encoded uniques and codes, and consolidates them
 with ONE encode over known keys + stashed uniques when the pending bytes
 (codes, payloads, state blobs) pass ``_FOLD_BYTES``, or when live plus
-pending keys could pass the builder's flush cap — so flush points match a
+pending keys could pass ``_MAX_KEYS`` — so flush points match a
 per-batch live-key count exactly.
 
 Skew/fan-in controls:
 
-* ``max_states_per_partition`` bounds stage-1 memory on high-cardinality
-  keys (per-user sketches): when the live keys exceed the cap, partials
-  are flushed mid-partition and rebuilt — merges make that lossless.
+* Stage 1 of the partial and generic routes (and of rollup) holds at
+  most ``_STATE_BYTES`` (64 MB) of keys, row counts and states, counted
+  from what it holds: a CMS, Bloom or cuckoo key costs its whole table,
+  so high-cardinality keys (per-user sketches) flush mid-partition,
+  splitting a batch between two keys when it brings more new keys than
+  the budget has room for; merges make that lossless. Below the budget
+  it flushes past ``_MAX_KEYS`` (65,536) live keys. There is no knob:
+  both are module constants.
 * ``salt_buckets=S > 1`` bounds the generic route's per-key fan-in on
   huge clusters: states first merge on ``(key, partition_id mod S)``, then
   the S survivors merge per key — two state shuffles, never row shuffles.
@@ -163,6 +168,14 @@ class _HllKernel:
         packed.sort()
         return _absorb_max(acc, _dedup_max_rho(packed))
 
+    @staticmethod
+    def key_bytes(spec) -> int:
+        return 0
+
+    @staticmethod
+    def acc_bytes(acc, spec) -> int:
+        return acc.nbytes
+
     def emit_buf(self, acc, spec, n: int):
         from ..sketches.hll import packed_entries_many_to_buf
 
@@ -201,6 +214,14 @@ class _KmvKernel:
             return acc
         gg = np.repeat(g, counts)
         return _kmv_combine(acc[0], acc[1], gg, hh, self.ks[spec.name])
+
+    @staticmethod
+    def key_bytes(spec) -> int:
+        return 0
+
+    @staticmethod
+    def acc_bytes(acc, spec) -> int:
+        return acc[0].nbytes + acc[1].nbytes
 
     def emit_buf(self, acc, spec, n: int):
         from ..sketches.kmv import mins_many_to_buf
@@ -242,11 +263,21 @@ class _SketchKernel:
     ``spec.update`` on its rows in row order. Every kind's state depends
     on its update sequence alone, not on how it is sliced into calls
     (kll.py's ``_B`` note), so this equals one update per (batch, key)
-    byte for byte (test_generic_stage1_matches_per_key_reference)."""
+    byte for byte (test_generic_stage1_matches_per_key_reference).
+
+    The held bytes are counted, not measured: each key holds its spec's
+    fixed bytes (`SketchSpec.size_model`, sized here on the driver) and
+    grows by at most the bytes of the rows it absorbed, capped at the
+    model's growth per key. Measuring the sketches would cost a Python
+    call per key per consolidation; Python object headers are not
+    counted."""
+
+    def __init__(self, specs: list[SketchSpec]):
+        self.sizes = {s.name: s.size_model() for s in specs}
 
     @staticmethod
     def init_acc():
-        return []
+        return _Sketches()
 
     @staticmethod
     def row_payloads(spec, arrays: tuple) -> tuple:
@@ -255,6 +286,7 @@ class _SketchKernel:
     @staticmethod
     def absorb_payloads(acc, spec, g: np.ndarray, pays: list):
         arrays = [None if a[0] is None else np.concatenate(a) for a in zip(*pays)]
+        acc.fed += sum(a.nbytes for a in arrays if a is not None)
         top = int(g.max())
         acc += [spec.new() for _ in range(top + 1 - len(acc))]
         # numpy's stable sort is a radix sort on ints of <= 16 bits
@@ -263,9 +295,23 @@ class _SketchKernel:
             spec.update(acc[g[idx[0]]], *(None if a is None else a[idx] for a in arrays))
         return acc
 
+    def key_bytes(self, spec) -> int:
+        return self.sizes[spec.name][0]
+
+    def acc_bytes(self, acc, spec) -> int:
+        fixed, growth = self.sizes[spec.name]
+        return len(acc) * fixed + min(acc.fed, len(acc) * growth)
+
     @staticmethod
     def emit_buf(acc, spec, n: int):
         return codec.blob_buffers([sk.to_bytes() for sk in acc[:n]])
+
+
+class _Sketches(list):
+    """`_SketchKernel`'s accumulator: one sketch per group code, and the
+    payload bytes they absorbed (``fed``)."""
+
+    fed = 0
 
 
 _VEC_KERNELS = {"hll": _HllKernel, "kmv": _KmvKernel}
@@ -273,6 +319,12 @@ _VEC_KERNELS = {"hll": _HllKernel, "kmv": _KmvKernel}
 # pending bytes (codes, row counts, payloads, state blobs) per deferred
 # consolidation; ~4M raw rows of one spec at 16 B/row
 _FOLD_BYTES = 1 << 26
+
+# a flushing stage (`_arrow_builder`) flushes before the bytes it holds
+# pass _STATE_BYTES, or once its live keys pass _MAX_KEYS, the count that
+# keeps the flush points of every stage the budget does not reach
+_STATE_BYTES = 1 << 26
+_MAX_KEYS = 1 << 16
 
 
 def _pa_encode(parts: list):
@@ -325,6 +377,10 @@ class _KeyCoder:
     def __len__(self) -> int:
         return 0 if self.keys is None else len(self.keys)
 
+    def nbytes(self) -> int:
+        """Bytes of the known keys and their row counts."""
+        return (0 if self.keys is None else self.keys.nbytes) + self.n_rows.nbytes
+
     def add(self, uniques, codes: np.ndarray, rows, payload, nbytes: int) -> bool:
         """Stash a batch; ``rows`` holds per-row counts, None for one each."""
         self._pend.append((uniques, codes, rows, payload))
@@ -371,6 +427,12 @@ class _KernelCol:
 
     def absorb(self, g: np.ndarray, payloads: list) -> None:
         self.acc = self.kernel.absorb_payloads(self.acc, self.spec, g, payloads)
+
+    def key_bytes(self, payload) -> int:
+        return self.kernel.key_bytes(self.spec)
+
+    def nbytes(self) -> int:
+        return self.kernel.acc_bytes(self.acc, self.spec)
 
     def emit_buf(self, n: int):
         return self.kernel.emit_buf(self.acc, self.spec, n)
@@ -439,9 +501,24 @@ def _emit(op: str, group_cols: list[str], coder: _KeyCoder, cols: dict, ord_tag:
         start = stop
 
 
-def _arrow_builder(
-    op: str, group_cols: list[str], cap: int | None, with_ord: bool, new_cols, stash
-):
+def _held_bytes(coder: _KeyCoder, cols: dict) -> int:
+    """Bytes a flushing stage holds: its coder's keys and row counts and
+    each accumulator's ``nbytes()``."""
+    return coder.nbytes() + sum(acc.nbytes() for acc in cols.values())
+
+
+def _room_cut(coder: _KeyCoder, codes: np.ndarray, uniques, room: int) -> int:
+    """First row of a batch's first key past the ``room`` keys of it that
+    the coder does not hold yet, or the batch's row count when they all
+    fit. ``codes`` code the rows into ``uniques`` in first-seen order, so
+    a key's first row is where the running max code grows."""
+    first = np.flatnonzero(np.diff(np.maximum.accumulate(codes), prepend=-1))
+    if len(coder):
+        first = first[_pa_encode([coder.keys, uniques])[0][len(coder) :] >= len(coder)]
+    return int(first[room]) if room < first.size else codes.size
+
+
+def _arrow_builder(op: str, group_cols: list[str], with_ord: bool, new_cols, stash):
     """``mapInArrow`` body of every grouped and rollup stage: raw rows
     (the direct route and stage 1 of the partial and generic routes,
     `_row_builder`, whose accumulators are all `_KernelCol`) and state
@@ -450,12 +527,27 @@ def _arrow_builder(
     `_KeyCoder`. ``stash(rb)`` -> (per-row counts or None, {out col:
     payload}, payload bytes); ``new_cols()`` -> {out col: accumulator
     with ``absorb(g, payloads)`` (a consolidation's payloads in batch
-    order), ``emit_buf(n)`` -> (uint8 buf, int64 offs) and ``reset()``}.
-    Flushes when the live keys pass ``cap`` (None: never, so every key's
-    state is final); ``with_ord`` tags the output with the merge order key
-    ``pid << 20 | flush``, so mid-partition flushes keep a total
-    deterministic merge order even for one (key, pid). ``op`` names the
-    operator in errors."""
+    order), ``emit_buf(n)`` -> (uint8 buf, int64 offs), ``reset()``,
+    ``nbytes()`` (the bytes it holds) and ``key_bytes(payload)`` (the
+    bytes one new key of a batch adds)}. ``op`` names the operator in
+    errors.
+
+    A stage whose output carries the merge order key ``pid << 20 |
+    flush`` (``with_ord``: stage 1 of the partial and generic routes and
+    of rollup) flushes mid-partition; the key keeps a total deterministic
+    merge order even for one (key, pid). The others (the direct route and
+    both merges) never flush, so every key's state is final. A flushing
+    stage keeps what it holds (`_held_bytes`) under `_STATE_BYTES`: when a
+    batch could pass it, the stage folds what is pending and counts the
+    batch's new keys, and if they are more than the budget has room for
+    it splits the batch, zero-copy, at the first row of the first key
+    past the room and flushes between the pieces. States that grow with
+    their rows can pass the budget by one piece's growth, and the stage
+    flushes after that fold. It also flushes after a fold that leaves
+    more than `_MAX_KEYS` live keys, so a stage the budget never reaches
+    flushes where a per-batch live-key count would. Both constants are
+    read here, on the driver, so a test can lower them."""
+    budget, max_keys = _STATE_BYTES, _MAX_KEYS
 
     def fn(batches):
         from pyspark import TaskContext
@@ -463,26 +555,51 @@ def _arrow_builder(
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx is not None else -1
         flush = 0
-        coder = _KeyCoder(_pa_encode, cap)
+        coder = _KeyCoder(_pa_encode, max_keys if with_ord else None)
         cols = new_cols()
+        bound = 0  # most bytes held once the pending batches fold
+
+        def fold():
+            nonlocal bound
+            _fold(coder, cols)
+            bound = _held_bytes(coder, cols) if with_ord else 0
 
         def emit():
-            return _emit(op, group_cols, coder, cols, (pid << 20) | flush if with_ord else None)
+            nonlocal flush, bound
+            yield from _emit(op, group_cols, coder, cols, (pid << 20) | flush if with_ord else None)
+            flush, bound = flush + 1, 0
+            coder.reset()
+            for acc in cols.values():
+                acc.reset()
 
         for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            keys = pa.StructArray.from_arrays([rb.column(c) for c in group_cols], group_cols)
-            codes, uniques = _pa_encode([keys])
-            if not coder.add(uniques, codes, *stash(rb)):
-                continue
-            _fold(coder, cols)
-            if cap is not None and len(coder) > cap:
-                yield from emit()
-                flush += 1
-                coder.reset()
-                for acc in cols.values():
-                    acc.reset()
+            while rb.num_rows:
+                keys = pa.StructArray.from_arrays([rb.column(c) for c in group_cols], group_cols)
+                codes, uniques = _pa_encode([keys])
+                rows, pay, nbytes = stash(rb)
+                if with_ord:
+                    # one new key adds its states, its key and its row count
+                    cost = 8 + -(-uniques.nbytes // len(uniques))
+                    cost += sum(acc.key_bytes(pay[c]) for c, acc in cols.items())
+                    if bound + nbytes + len(uniques) * cost > budget:
+                        fold()
+                        room = (budget - bound) // cost if len(coder) else max(budget // cost, 1)
+                        cut = _room_cut(coder, codes, uniques, max(room, 0))
+                        if cut < rb.num_rows:
+                            if cut:
+                                piece = rb.slice(0, cut)
+                                k = int(codes[:cut].max()) + 1
+                                coder.add(uniques.slice(0, k), codes[:cut], *stash(piece))
+                                fold()
+                            yield from emit()
+                            rb = rb.slice(cut)
+                            continue
+                    bound += nbytes + len(uniques) * cost
+                if coder.add(uniques, codes, rows, pay, nbytes):
+                    fold()
+                    if with_ord and (len(coder) > max_keys or bound > budget):
+                        yield from emit()
+                break
         _fold(coder, cols)
         if len(coder):
             yield from emit()
@@ -494,19 +611,19 @@ def _row_builder(
     specs: list[SketchSpec],
     group_cols: list[str],
     col_map: dict,
-    cap: int | None,
     kernel,
     with_ord: bool = True,
 ):
     """The Arrow loop over raw rows, each column a `_KernelCol` over
     ``kernel`` (`_HllKernel` or `_KmvKernel` on the direct and partial
     routes, `_SketchKernel` on the generic one). Stage 1 of the partial
-    and generic routes: flush-capped partials tagged with their merge
-    order. The direct route (``cap=None, with_ord=False``): rows arrive
+    and generic routes: byte-bounded partials tagged with their merge
+    order. The direct route (``with_ord=False``): rows arrive
     hash-partitioned on the group columns, so its states are final. Every
-    kernel flushes on the same batches, and the HLL/KMV kernels emit the
-    generic route's bytes (test_grouped_hll_fast_path_byte_identical and
-    its KMV twin; test_grouped_direct_route_byte_identical)."""
+    kernel flushes on the same batches while the byte budget is not
+    reached, and the HLL/KMV kernels emit the generic route's bytes
+    (test_grouped_hll_fast_path_byte_identical and its KMV twin;
+    test_grouped_direct_route_byte_identical)."""
 
     def stash(rb):
         return (None, *_row_payloads(rb, specs, col_map, kernel))
@@ -514,7 +631,7 @@ def _row_builder(
     def new_cols():
         return {s.state_col: _KernelCol(kernel, s) for s in specs}
 
-    return _arrow_builder("grouped_sketch", group_cols, cap, with_ord, new_cols, stash)
+    return _arrow_builder("grouped_sketch", group_cols, with_ord, new_cols, stash)
 
 
 def _in_pandas(fn, schema: StructType):
@@ -547,15 +664,17 @@ def _preagg_dedup_ratio(df: DataFrame, group_cols: list[str], sample_rows: int) 
     pre-aggregation only adds work. ``coalesce(1)`` before ``limit``
     makes it one task with no exchange: it reads partitions in order and
     stops after ``sample_rows`` rows (no full scan), so the sample keeps
-    the within-partition locality the partial builder would see."""
+    the within-partition locality the partial builder would see. It counts
+    the groups the routes build: distinct keys of the ``_group_key``
+    projection as one struct, so a key with a null part counts as a group
+    (``count(DISTINCT a, b)`` would skip it)."""
+    names = [f"k{i}" for i in range(len(group_cols))]
+    keys = df.selectExpr(*[_group_key(df, c, "grouped_sketch") for c in group_cols])
     row = (
-        df.select(*group_cols)
+        keys.toDF(*names)
         .coalesce(1)
         .limit(sample_rows)
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count_distinct(*[F.col(c) for c in group_cols]).alias("d"),
-        )
+        .agg(F.count(F.lit(1)).alias("n"), F.count_distinct(F.struct(*names)).alias("d"))
         .collect()[0]
     )
     return row["d"] / max(row["n"], 1)
@@ -596,7 +715,6 @@ def _pre_merge_states(
     group_cols: list[str],
     specs: list[SketchSpec],
     salt_buckets: int | None,
-    max_states_per_partition: int,
 ) -> DataFrame:
     """The generic route's stage 1 (`_row_builder` over `_SketchKernel`,
     one sketch per key) plus the optional salted level-1 merge: the state
@@ -614,7 +732,7 @@ def _pre_merge_states(
         except Exception:
             salt_buckets = 1
 
-    stage1 = _row_builder(specs, group_cols, col_map, max_states_per_partition, _SketchKernel())
+    stage1 = _row_builder(specs, group_cols, col_map, _SketchKernel(specs))
     partials = prepared.mapInArrow(
         _named(stage1, "generic_stage1"),
         schema=_grouped_schema(df, group_cols, specs, with_ord=True),
@@ -662,7 +780,6 @@ def grouped_sketch(
     group_cols: list[str],
     specs: list[SketchSpec],
     salt_buckets: int | None = None,
-    max_states_per_partition: int = 1 << 16,
     pre_partial: bool | None = None,
 ) -> DataFrame:
     """Per-group sketch states: returns one row per group with
@@ -670,7 +787,10 @@ def grouped_sketch(
 
     Rows never shuffle on the generic route: partition-local partial
     states are built in one streaming pass over the shared key coder,
-    one sketch per key, then only states move.
+    one sketch per key, then only states move. Stage 1 holds at most
+    ``_STATE_BYTES`` (64 MB) of keys, row counts and states per task,
+    counted per kind (a CMS, Bloom or cuckoo key costs its table), and
+    flushes losslessly before it would pass them; no parameter sets it.
     ``salt_buckets=S`` adds a pre-merge level on (key, partition mod S)
     to bound per-key fan-in on very wide scans; the default (None)
     derives S from the scan's partition count so fan-in stays ~256 at any
@@ -715,22 +835,22 @@ def grouped_sketch(
             pre_partial = _preagg_dedup_ratio(df, group_cols, 200_000) <= 0.5
         out_schema = _grouped_schema(df, group_cols, specs, with_ord=False)
         if not pre_partial:
-            direct = _row_builder(specs, group_cols, col_map, None, kernel, with_ord=False)
+            direct = _row_builder(specs, group_cols, col_map, kernel, with_ord=False)
             return prepared.repartition(*group_cols).mapInArrow(
                 _named(direct, "grouped_direct"), schema=out_schema
             )
-        stage1 = _row_builder(specs, group_cols, col_map, max_states_per_partition, kernel)
+        stage1 = _row_builder(specs, group_cols, col_map, kernel)
         partials = prepared.mapInPandas(
             _named(_in_pandas(stage1, prepared.schema), "grouped_stage1"),
             schema=_grouped_schema(df, group_cols, specs, with_ord=True),
         )
         # HLL/KMV merges are order-insensitive: no sort before the fold
-        merge = _rollup_builder(group_cols, [s.state_col for s in specs], None, with_ord=False)
+        merge = _rollup_builder(group_cols, [s.state_col for s in specs], with_ord=False)
         shuffled = partials.repartition(*group_cols).drop(_ORD_COL)
         return shuffled.mapInPandas(
             _named(_in_pandas(merge, out_schema), "grouped_merge"), schema=out_schema
         )
-    partials = _pre_merge_states(df, group_cols, specs, salt_buckets, max_states_per_partition)
+    partials = _pre_merge_states(df, group_cols, specs, salt_buckets)
     out_schema = StructType([f for f in partials.schema.fields if f.name != _ORD_COL])
     return partials.groupBy(*group_cols).applyInPandas(
         _named(_merge_groups(specs, group_cols, with_ord=False), "generic_merge"),

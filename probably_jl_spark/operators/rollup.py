@@ -7,7 +7,7 @@ states instead of rescanning 10^12 turns.
 
 ``rollup_states`` has the same no-hot-key two-stage shape as the grouped
 build (operators/grouped.py): stage 1 folds each input partition's state
-rows into one partial per coarse key (flush-capped memory), so a coarse
+rows into one partial per coarse key (byte-bounded memory), so a coarse
 key covering the whole table costs one partial per partition — never a
 single-task row pile-up; stage 2 hash-repartitions only those folded
 partials on the coarse key and merges each partition in ONE streaming
@@ -19,7 +19,8 @@ group materialization at any fan-in.
 Both stages are ``mapInArrow`` runs of the grouped build's one Arrow
 builder loop (``operators/grouped.py::_arrow_builder``: the shared
 deferred key coder over ``_pa_encode``, byte-budgeted consolidation,
-zero-copy emit under ``_EMIT_BYTES``) over ``_ColAcc`` columns — the
+zero-copy emit under ``_EMIT_BYTES``, stage 1 flushed under the
+``_STATE_BYTES`` budget) over ``_ColAcc`` columns — the
 only vectorized state merge in the library; the grouped partial route
 runs stage 2 as its merge, unsorted, because its HLL/KMV merges do not
 depend on order. The stage-1 projection passes the group columns through
@@ -89,7 +90,11 @@ class _ColAcc:
     through the generic ``merge_blobs`` dispatch (one Python merge per
     STATE row — rollup inputs are state tables, never raw rows).
     Payloads arrive as one Arrow binary array per pending batch
-    (``_rollup_builder``)."""
+    (``_rollup_builder``). The bytes it holds are the kernel's arrays or
+    the dict's blobs (``held``). A new key is taken to add the longest
+    blob of its batch: exact for the dict, an estimate for the kernels,
+    which unpack a dense HLL blob to 8 bytes per register; the builder
+    measures the held bytes after each fold either way."""
 
     def __init__(self, col: str):
         self.col = col
@@ -98,6 +103,7 @@ class _ColAcc:
         self.kernel = None
         self.spec: SketchSpec | None = None
         self.acc = None
+        self.held = 0
 
     def absorb(self, g: np.ndarray, payloads: list) -> None:
         blobs = pa.concat_arrays(payloads) if len(payloads) > 1 else payloads[0]
@@ -115,7 +121,9 @@ class _ColAcc:
         if self.kind == "generic":
             acc = self.acc
             for code, blob in zip(g.tolist(), blobs.to_pylist()):
-                acc[code] = merge_blobs(acc.get(code), blob)
+                old = acc.get(code)
+                acc[code] = merge_blobs(old, blob)
+                self.held += len(acc[code]) - (0 if old is None else len(old))
             return
         self.param = _check_uniform_param(blobs, self.col, self.kind, self.param)
         if self.kernel is None:
@@ -127,24 +135,32 @@ class _ColAcc:
             self.acc = self.kernel.init_acc()
         self.acc = self.kernel.absorb_states(self.acc, self.spec, g, blobs)
 
+    @staticmethod
+    def key_bytes(payload) -> int:
+        return int(np.diff(codec.blob_buffers(payload)[1]).max(initial=0))
+
+    def nbytes(self) -> int:
+        if self.kernel is not None:
+            return self.kernel.acc_bytes(self.acc, self.spec)
+        return self.held
+
     def emit_buf(self, n: int):
         if self.kind == "generic":
             return codec.blob_buffers([self.acc[i] for i in range(n)])
         return self.kernel.emit_buf(self.acc, self.spec, n)
 
     def reset(self) -> None:
+        self.held = 0
         if self.kind == "generic":
             self.acc = {}
         elif self.kernel is not None:
             self.acc = self.kernel.init_acc()
 
 
-def _rollup_builder(
-    group_cols: list[str], state_cols: list[str], cap: int | None, with_ord: bool
-):
+def _rollup_builder(group_cols: list[str], state_cols: list[str], with_ord: bool):
     """The Arrow loop over state rows, for both rollup stages and the
     grouped partial route's merge. Stage 1 (``with_ord=True``):
-    flush-capped partials, one per (partition, coarse key), tagged with
+    byte-bounded partials, one per (partition, coarse key), tagged with
     the deterministic merge order key. Stage 2 (``with_ord=False``): one
     streaming pass over a hash-partitioned partition — pending batches
     fold in row order, so a (key, ord)-sorted input applies every group's
@@ -158,12 +174,7 @@ def _rollup_builder(
         return rows, pay, sum(a.nbytes for a in pay.values())
 
     return _arrow_builder(
-        "rollup_states",
-        group_cols,
-        cap,
-        with_ord,
-        lambda: {c: _ColAcc(c) for c in state_cols},
-        stash,
+        "rollup_states", group_cols, with_ord, lambda: {c: _ColAcc(c) for c in state_cols}, stash
     )
 
 
@@ -171,7 +182,6 @@ def rollup_states(
     states_df: DataFrame,
     group_cols: list[str],
     state_cols: list[str] | None = None,
-    max_states_per_partition: int = 1 << 16,
 ) -> DataFrame:
     """Re-merge sketch-state rows to the coarser key ``group_cols``:
     returns one row per coarse group with ``group_cols + [n_rows] +
@@ -185,9 +195,11 @@ def rollup_states(
     path in BOTH stages, and mixed sizing parameters within a column
     raise rather than merge garbage. State columns must be non-null.
 
-    Scale shape: stage 1 never holds more than ``max_states_per_partition``
-    coarse groups in memory (flushes are lossless — merges are
-    associative) and emits one partial per (partition, coarse key), so a
+    Scale shape: stage 1 holds at most ``_STATE_BYTES`` (64 MB) of keys,
+    row counts and states (operators/grouped.py; the HLL/KMV kernels'
+    arrays, every other kind's blobs; no parameter sets it) and flushes
+    before it would pass them (flushes are lossless — merges are
+    associative). It emits one partial per (partition, coarse key), so a
     coarse key absorbing the entire input costs #partitions state rows,
     not a single-task row pile-up; only those partials shuffle, and the
     final merge streams each hash-partition in one pass (no per-key
@@ -216,14 +228,14 @@ def rollup_states(
         df = df.withColumn(_NROWS_COL, F.lit(0).cast(LongType()))
     keep = [_group_key(df, c, "rollup_states") for c in all_group]
     keep += [sql_ident(c) for c in [_NROWS_COL, *state_cols]]
-    stage1 = _rollup_builder(all_group, state_cols, max_states_per_partition, with_ord=True)
+    stage1 = _rollup_builder(all_group, state_cols, with_ord=True)
     partials = df.selectExpr(*keep).mapInArrow(_named(stage1, "rollup_stage1"), schema=part_schema)
     out_schema = StructType([f for f in part_schema.fields if f.name != _ORD_COL])
     out = (
         partials.repartition(*all_group)
         .sortWithinPartitions(*all_group, _ORD_COL)
         .mapInArrow(
-            _named(_rollup_builder(all_group, state_cols, None, with_ord=False), "rollup_merge"),
+            _named(_rollup_builder(all_group, state_cols, with_ord=False), "rollup_merge"),
             schema=out_schema,
         )
     )

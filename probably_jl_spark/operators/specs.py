@@ -14,6 +14,7 @@ per sketch.
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -82,6 +83,33 @@ class SketchSpec:
         if self.kind == "mg":
             return MisraGries(p.get("k", 256))
         return KLL(p.get("k", 200))
+
+    def size_model(self) -> tuple[int, int]:
+        """(fixed, growth) bytes of one state of this spec, sized from its
+        parameters. ``fixed`` is what ``new()`` holds before any row: the
+        empty wire, which for cms, bloom and cuckoo is the whole table,
+        or smallcuckoo's in-memory table, larger than its compressed wire.
+        ``growth`` is the most the state grows with content: dense HLL
+        registers (the sparse wire densifies at m/8 entries), k KMV
+        hashes, k MG (key, count) pairs, <= delta t-digest (mean, weight)
+        centroids, and KLL's <= 3k + 2H items plus H level sizes for
+        H <= 64 levels. The driver-merge gate (operators/build.py) and the
+        byte budget of the grouped stages (operators/grouped.py) read it."""
+        sk = self.new()
+        fixed = len(sk.to_bytes())
+        if self.kind == "smallcuckoo" and sk.buckets is not None:
+            fixed = max(fixed, sk.buckets.nbytes)
+        if self.kind == "hll":
+            return fixed, 1 << sk.p
+        if self.kind == "kmv":
+            return fixed, 8 * sk.k
+        if self.kind == "mg":
+            return fixed, 16 * sk.k
+        if self.kind == "tdigest":
+            return fixed, 16 * math.ceil(sk.delta)
+        if self.kind == "kll":
+            return fixed, 8 * (3 * sk.k + 2 * 64) + 4 * 64
+        return fixed, 0
 
     def update(self, sketch, h: np.ndarray | None, values: np.ndarray | None, counts: np.ndarray | None):
         if self.kind in ("tdigest", "kll"):

@@ -206,6 +206,9 @@ class MisraGries:
         Deficits add; the merged bound deficit·(k+1) ≤ N − M holds."""
         if not isinstance(other, MisraGries) or other.k != self.k:
             raise ValueError("can only merge MisraGries summaries with equal k")
+        # no counter exceeds n, so this bounds the summed counters too
+        if self.n + other.n > _U64_MAX:
+            raise ValueError("MisraGries: the count total passes 2^64 - 1")
         out = MisraGries(
             self.k,
             self.keys.copy(),

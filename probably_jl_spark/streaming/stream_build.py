@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType, LongType, StructField, StructType, TimestampNTZType
 
 from ..operators.build import sketch_table
-from ..operators.grouped import _grouped_schema, grouped_sketch
+from ..operators.grouped import _group_key, _grouped_schema, grouped_sketch
 from ..operators.specs import SketchSpec, merge_blobs, sketch_from_bytes
 
 
@@ -405,13 +405,20 @@ def stateful_grouped_stream_df(
     Restart note (verified): the state store recovers across query
     restarts when the sink supports checkpoint recovery — use foreachBatch
     or a transactional sink; Spark's memory sink does not recover.
+
+    Group columns follow the grouped build's key rule (``_group_key``):
+    -0.0 and 0.0 are one key, NaN and null one null key, and a nested
+    group column raises here. A running state that a checkpoint stored
+    under a NaN key is not carried over: new NaN rows fold into the null
+    key's state.
     """
     import pandas as pd
 
-    from ..operators.build import batch_arrays, plan_exprs, sql_ident
+    from ..operators.build import batch_arrays, plan_exprs
 
     exprs, col_map = plan_exprs(specs)
-    prepared = sdf.selectExpr(*[sql_ident(c) for c in group_cols], *exprs)
+    keys = [_group_key(sdf, c, "stateful_grouped_stream_df") for c in group_cols]
+    prepared = sdf.selectExpr(*keys, *exprs)
     # StructTypes, not DDL strings: a group column named ``my col`` does
     # not parse unquoted
     out_schema = _grouped_schema(sdf, group_cols, specs)

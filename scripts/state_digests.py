@@ -13,7 +13,8 @@ and null. The cases:
 * ``sketch_table`` over all 9 kinds (CMS and MG with the count column);
 * ``grouped_sketch`` on the direct and the partial route (HLL, then KMV)
   and the generic route (all 9 kinds), each over ``(role, tool)`` and
-  ``(fk,)``, with ``max_states_per_partition=3`` so that stage 1 flushes;
+  ``(fk,)``, with ``operators/grouped.py::_MAX_KEYS`` lowered to 3 so
+  that stage 1 flushes;
 * ``rollup_states`` of the generic and direct states to ``role`` and to
   one global row.
 
@@ -64,6 +65,7 @@ def main() -> int:
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
+    from probably_jl_spark.operators import grouped
     from probably_jl_spark.operators.build import sketch_table
     from probably_jl_spark.operators.grouped import grouped_sketch
     from probably_jl_spark.operators.rollup import rollup_states
@@ -101,20 +103,21 @@ def main() -> int:
         out[f"sketch_table/{s.state_col}"] = _sha([res.sketches[s.name].to_bytes()])
 
     states = {}
+    # a stage reads the constant when it is planned
+    max_keys, grouped._MAX_KEYS = grouped._MAX_KEYS, 3
     for keys in (["role", "tool"], ["fk"]):
         tag = ",".join(keys)
         for kind in ("hll", "kmv"):
             for route, pre in (("direct", False), ("partial", True)):
                 case = f"{route}[{tag}]/{kind}"
-                g = grouped_sketch(
-                    df, keys, [by_name[kind]], max_states_per_partition=3, pre_partial=pre
-                )
+                g = grouped_sketch(df, keys, [by_name[kind]], pre_partial=pre)
                 _grouped_digests(out, case, g, keys)
                 states[case] = g
         case = f"generic[{tag}]"
-        g = grouped_sketch(df, keys, specs, max_states_per_partition=3)
+        g = grouped_sketch(df, keys, specs)
         _grouped_digests(out, case, g, keys)
         states[case] = g
+    grouped._MAX_KEYS = max_keys
 
     for src in ("generic[role,tool]", "direct[role,tool]/hll"):
         _grouped_digests(out, f"rollup[role]<-{src}", rollup_states(states[src], ["role"]), ["role"])

@@ -130,10 +130,11 @@ def _flushes(builder, batches) -> list[tuple[list, list]]:
     ]
 
 
-def test_coder_flushes_on_live_count_batches():
-    """Under a cap, the fold builder flushes on exactly the batches where
-    a per-batch live-key count passes the cap, with the same keys (first-
-    seen order) and row counts."""
+def test_coder_flushes_on_live_count_batches(monkeypatch):
+    """Under a cap (the live-key count `_MAX_KEYS`), the fold builder
+    flushes on exactly the batches where a per-batch live-key count
+    passes the cap, with the same keys (first-seen order) and row
+    counts."""
     rs = np.random.default_rng(3)
     df = pd.DataFrame({"k": rs.integers(0, 300, 5000)})
     batches = _arrow(_batches(df, 64))
@@ -151,7 +152,8 @@ def test_coder_flushes_on_live_count_batches():
                 live = {}
         if live:
             want.append((list(live), list(live.values())))
-        got = _flushes(_arrow_builder("grouped_sketch", ["k"], cap, True, dict, stash), batches)
+        monkeypatch.setattr(grouped, "_MAX_KEYS", cap)
+        got = _flushes(_arrow_builder("grouped_sketch", ["k"], True, dict, stash), batches)
         assert got == want, cap
 
 
@@ -187,12 +189,12 @@ def test_merge_builder_output_ignores_byte_budget(monkeypatch):
         return real(self)
 
     monkeypatch.setattr(_KeyCoder, "consolidate", counting)
-    one = list(_rollup_builder(["k"], ["u", "m", "c"], None, False)(iter(batches)))
+    one = list(_rollup_builder(["k"], ["u", "m", "c"], False)(iter(batches)))
     assert [c for c in calls if c] == [len(batches)]
 
     calls.clear()
     monkeypatch.setattr(grouped, "_FOLD_BYTES", 1)
-    every = list(_rollup_builder(["k"], ["u", "m", "c"], None, False)(iter(batches)))
+    every = list(_rollup_builder(["k"], ["u", "m", "c"], False)(iter(batches)))
     assert [c for c in calls if c] == [1] * len(batches)
 
     assert len(one) == len(every) == 1
@@ -293,7 +295,7 @@ def _reference_stage1(specs, group_cols, col_map, cap, batches) -> dict:
 
 @pytest.mark.parametrize("group_cols", [["f"], ["s"], ["f", "s"], ["i"]])
 @pytest.mark.parametrize("cap", [1 << 16, 3])
-def test_generic_stage1_matches_per_key_reference(group_cols, cap):
+def test_generic_stage1_matches_per_key_reference(monkeypatch, group_cols, cap):
     """The generic route's stage 1 (the shared coder over one sketch per
     key, one update per key per consolidation) emits, per (ord, key), the
     row count and state bytes of a per-batch {key -> sketch} loop, for
@@ -304,7 +306,8 @@ def test_generic_stage1_matches_per_key_reference(group_cols, cap):
     batches = _wide_batches() if group_cols == ["i"] else _raw_batches()
     want = _reference_stage1(_ALL_KINDS, group_cols, _ALL_COLS, cap, batches)
     got = {}
-    stage1 = _row_builder(_ALL_KINDS, group_cols, _ALL_COLS, cap, _SketchKernel())
+    monkeypatch.setattr(grouped, "_MAX_KEYS", cap)
+    stage1 = _row_builder(_ALL_KINDS, group_cols, _ALL_COLS, _SketchKernel(_ALL_KINDS))
     for out in stage1(iter(_arrow(batches))):
         for _, r in out.to_pandas().iterrows():
             key = tuple(None if pd.isna(r[c]) else r[c] for c in group_cols)
@@ -344,7 +347,7 @@ def test_arrow_emit_refuses_state_past_int32_offsets():
         [pa.array(["a", "a"]), pa.array([1, 2], type=pa.int64())],
         names=["g", "__h0"],
     )
-    fn = _row_builder(specs, ["g"], col_map, None, _HugeStateKernel(), with_ord=False)
+    fn = _row_builder(specs, ["g"], col_map, _HugeStateKernel(), with_ord=False)
     with pytest.raises(ValueError, match=r"grouped_sketch: state column 'state_u'"):
         list(fn(iter([rb])))
 
@@ -362,10 +365,10 @@ def test_emit_chunks_every_flush_under_byte_bound(monkeypatch, stage):
     row: rollup's stage 1 over state rows and the generic stage 1 over
     raw rows."""
     if stage == "rollup_stage1":
-        builder = _rollup_builder(["k"], ["u", "m", "c"], 1 << 16, True)
+        builder = _rollup_builder(["k"], ["u", "m", "c"], True)
         batches = _state_batches()
     else:
-        builder = _row_builder(_ALL_KINDS, ["f", "s"], _ALL_COLS, 1 << 16, _SketchKernel())
+        builder = _row_builder(_ALL_KINDS, ["f", "s"], _ALL_COLS, _SketchKernel(_ALL_KINDS))
         batches = _arrow(_raw_batches())
 
     whole = list(builder(iter(batches)))
@@ -377,3 +380,64 @@ def test_emit_chunks_every_flush_under_byte_bound(monkeypatch, stage):
     assert len(chunks) > 1
     assert all(_state_bytes(rb) < bound for rb in chunks)
     assert pa.Table.from_batches(chunks).equals(pa.Table.from_batches(whole))
+
+
+def _cms_bloom_stage1(monkeypatch, budget: int, batches) -> tuple[list, list]:
+    """(output rows as (ord, key, n_rows, cms, bloom), held bytes after
+    each fold) of the generic stage 1 over a CMS and a Bloom spec under
+    ``budget``."""
+    specs = [
+        SketchSpec("cms", "cms", key_cols=("a",), params={"width": 64, "depth": 3}),
+        SketchSpec("bloom", "bloom", key_cols=("a",), params={"m": 1 << 12, "k": 3}),
+    ]
+    held = []
+    real = grouped._held_bytes
+
+    def counting(coder, cols):
+        held.append(real(coder, cols))
+        return held[-1]
+
+    monkeypatch.setattr(grouped, "_held_bytes", counting)
+    monkeypatch.setattr(grouped, "_STATE_BYTES", budget)
+    col_map = {"cms": {"h": "__h0"}, "bloom": {"h": "__h0"}}
+    stage1 = _row_builder(specs, ["i"], col_map, _SketchKernel(specs))
+    rows = []
+    for rb in stage1(iter(batches)):
+        rows += zip(*[rb.column(c).to_pylist() for c in (_ORD_COL, "i", "n_rows")],
+                    rb.column("state_cms").to_pylist(), rb.column("state_bloom").to_pylist())
+    return rows, held
+
+
+def test_byte_budget_bounds_generic_stage1(monkeypatch):
+    """The generic stage 1 over ~19k int keys, each holding a CMS and a
+    Bloom table, never holds more than a lowered byte budget: batches
+    that bring more new keys than the budget has room for split between
+    two keys, with a flush between the pieces. Merging each key's
+    partials in ord order gives the bytes of one unbounded fold."""
+    from probably_jl_spark.operators.specs import merge_blobs
+
+    rs = np.random.default_rng(29)
+    n = 60_000
+    df = pd.DataFrame({
+        "i": rs.integers(0, 20_000, n),
+        "__h0": rs.integers(-(2**63), 2**63 - 1, n, dtype=np.int64),
+    })
+    batches = _arrow(_batches(df, 20_000))
+    budget = 1 << 20
+
+    whole, _ = _cms_bloom_stage1(monkeypatch, 1 << 40, batches)
+    assert len({r[0] for r in whole}) == 1  # one unbounded fold
+    parts, held = _cms_bloom_stage1(monkeypatch, budget, batches)
+    assert max(held) <= budget
+    assert max(held) > budget // 2
+
+    merged: dict = {}
+    for o, k, nr, cms, bloom in sorted(parts, key=lambda r: r[0]):
+        m = merged.get(k)
+        merged[k] = (nr, cms, bloom) if m is None else (
+            m[0] + nr, merge_blobs(m[1], cms), merge_blobs(m[2], bloom)
+        )
+    assert len(merged) == len(whole) > 18_000
+    assert len(parts) > 2 * len(whole)  # most keys come in several partials
+    for _, k, nr, cms, bloom in whole:
+        assert merged[k] == (nr, cms, bloom), k

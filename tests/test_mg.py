@@ -187,6 +187,31 @@ def test_weight_sums_exact_past_2_53():
     assert mg.n == 2 * (2**63 - 1)
 
 
+def test_merge_refuses_total_past_2_64():
+    """A merge whose count total would pass 2^64 - 1 (the wire's uint64
+    n) raises the update's ValueError instead of a bare struct.error at
+    ``to_bytes``, and leaves both operands as they were; a total of
+    exactly 2^64 - 1 still merges and round-trips."""
+    h = np.full(1, xxhash64_any("x"), dtype=np.uint64)
+    states = []
+    for i in range(3):
+        mg = MisraGries(8)
+        mg.update_hashes(h + np.uint64(i % 2), counts=np.array([2**63 - 1]))
+        states.append(mg)
+    two = states[0].merge(states[1])
+    assert two.n == 2 * (2**63 - 1)
+    with pytest.raises(ValueError, match=r"passes 2\^64 - 1"):
+        two.merge(states[2])
+    with pytest.raises(ValueError, match=r"passes 2\^64 - 1"):
+        merge_blobs(two.to_bytes(), states[2].to_bytes())
+    assert two.n == 2 * (2**63 - 1) and states[2].n == 2**63 - 1
+    one = MisraGries(8)
+    one.update_hashes(h, counts=np.array([1]))
+    full = two.merge(one)
+    assert full.n == 2**64 - 1
+    assert MisraGries.from_bytes(full.to_bytes()).n == 2**64 - 1
+
+
 def test_absorb_matches_double_sort_reference():
     """The searchsorted O(n) merge in _absorb must agree exactly with the
     straightforward concatenate-sort-reduceat definition."""

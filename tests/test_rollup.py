@@ -5,6 +5,7 @@ state tables), stay lossless under flush caps and salt levels, and
 refuse mixed sizing parameters."""
 
 import numpy as np
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -50,17 +51,19 @@ def test_rollup_equals_direct_build_byte_exact(spark, fine_states):
         )
 
 
-def test_rollup_flush_cap_is_lossless(spark, fine_states):
+def test_rollup_flush_cap_is_lossless(spark, fine_states, monkeypatch):
+    from probably_jl_spark.operators import grouped
+
     _, _, fine = fine_states
     base = {
         r["event_type"]: (r["state_u"], r["state_uk"], r["n_rows"])
         for r in rollup_states(fine, ["event_type"]).collect()
     }
+    monkeypatch.setattr(grouped, "_MAX_KEYS", 1)
     capped = {
         r["event_type"]: (r["state_u"], r["state_uk"], r["n_rows"])
         for r in rollup_states(
             fine, ["event_type"], state_cols=["state_u", "state_uk"],
-            max_states_per_partition=1,
         ).collect()
     }
     assert base.keys() == capped.keys()
@@ -120,3 +123,45 @@ def test_rollup_chains(spark, fine_states):
     assert two_step["state_u"] == one_step["state_u"]
     assert two_step["state_uk"] == one_step["state_uk"]
     assert two_step["n_rows"] == one_step["n_rows"]
+
+
+def test_byte_budget_keeps_cms_bloom_states(spark, monkeypatch):
+    """Under a byte budget of three CMS + Bloom keys, ``grouped_sketch``
+    and ``rollup_states`` return the default budget's states byte for
+    byte, while stage 1 of each emits more than one partial for a key of
+    one input partition."""
+    from probably_jl_spark.operators import grouped
+    from probably_jl_spark.operators.grouped import _ORD_COL, _pre_merge_states
+    from probably_jl_spark.operators.rollup import _rollup_builder
+
+    ev = spark.read.parquet(f"{SF_DIR}/events.parquet").coalesce(1)
+    specs = [
+        SketchSpec("c", "cms", key_cols=("event_type",), params={"width": 256, "depth": 3}),
+        SketchSpec("b", "bloom", key_cols=("event_id",), params={"m": 1 << 14, "k": 3}),
+    ]
+
+    def by_user(df):
+        return {r["user_id"]: (r["n_rows"], r["state_c"], r["state_b"]) for r in df.collect()}
+
+    # each user's rows apart, so a flushing stage 1 meets a user again
+    fine = (
+        grouped_sketch(ev, ["user_id", "event_type"], specs)
+        .orderBy("event_type", "user_id")
+        .coalesce(1)
+        .cache()
+    )
+    want = by_user(grouped_sketch(ev, ["user_id"], specs))
+    want_rolled = by_user(rollup_states(fine, ["user_id"]))
+    assert len(want) == len(want_rolled) > 10
+
+    monkeypatch.setattr(grouped, "_STATE_BYTES", 3 * sum(s.size_model()[0] for s in specs))
+    assert by_user(grouped_sketch(ev, ["user_id"], specs)) == want
+    assert by_user(rollup_states(fine, ["user_id"])) == want_rolled
+
+    pre = _pre_merge_states(ev, ["user_id"], specs, 1).groupBy("user_id").count()
+    assert pre.agg(F.max("count")).collect()[0][0] > 1
+    stage1 = _rollup_builder(["user_id"], ["state_c", "state_b"], with_ord=True)
+    out = pa.Table.from_batches(stage1(iter(fine.toArrow().to_batches(max_chunksize=100))))
+    assert len(set(out.column(_ORD_COL).to_pylist())) > 1
+    assert out.num_rows > len(want)
+    fine.unpersist()

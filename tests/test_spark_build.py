@@ -173,6 +173,29 @@ def test_batch_query_functions(spark, events):
     assert (j["est_count"] >= j["count"]).all()  # CMS never underestimates
 
 
+def test_batch_query_functions_check_state_kind(spark, events):
+    """A state of the wrong kind raises a TypeError naming the function
+    on the driver (from the blob's kind byte), as ``contains`` and
+    ``query_count`` do, instead of an AttributeError in the executor; a
+    SmallCuckoo blob and an MG state pass the check."""
+    from probably_jl_spark.sketches.mg import MisraGries
+    from probably_jl_spark.sketches.smallcuckoo import SmallCuckooFilter
+
+    res = sketch_table(events, SPECS[:4])
+    bloom, cms = res.sketches["user_member"], res.sketches["type_freq"]
+    keys = events.select("user_id", "event_type")
+    for state in (cms, cms.to_bytes(), res.sketches["users"]):
+        with pytest.raises(TypeError, match="batch_contains expects a Bloom or cuckoo state"):
+            batch_contains(keys, ["user_id"], state)
+    for state in (bloom, bloom.to_bytes()):
+        with pytest.raises(
+            TypeError, match="batch_query_counts expects a count-min or Misra-Gries state"
+        ):
+            batch_query_counts(keys, ["event_type"], state)
+    batch_contains(keys, ["user_id"], SmallCuckooFilter(1 << 10).to_bytes())
+    batch_query_counts(keys, ["event_type"], MisraGries(8))
+
+
 def test_synth_transcripts_deterministic(spark):
     a = synth_transcripts(spark, n_convs=200, seed=42)
     b = synth_transcripts(spark, n_convs=200, seed=42)
@@ -242,17 +265,21 @@ def test_empty_spec_list_raises(spark, events):
         sketch_table(events, [])
 
 
-def test_grouped_flush_cap_is_lossless(spark, events):
-    """Bounded-memory stage 1: forcing mid-partition state flushes (cap=3
-    on ~150 distinct user groups) must yield byte-identical merged states
-    for commutative kinds and identical n_rows."""
+def test_grouped_flush_cap_is_lossless(spark, events, monkeypatch):
+    """Bounded-memory stage 1: forcing mid-partition state flushes (a
+    live-key cap of 3 on ~150 distinct user groups) must yield
+    byte-identical merged states for commutative kinds and identical
+    n_rows."""
+    from probably_jl_spark.operators import grouped
+
     specs = [SketchSpec("t", "hll", key_cols=("event_type",))]
     base = (
         grouped_sketch(events, ["user_id"], specs)
         .toPandas().set_index("user_id").sort_index()
     )
+    monkeypatch.setattr(grouped, "_MAX_KEYS", 3)
     flushed = (
-        grouped_sketch(events, ["user_id"], specs, max_states_per_partition=3)
+        grouped_sketch(events, ["user_id"], specs)
         .toPandas().set_index("user_id").sort_index()
     )
     assert list(base.index) == list(flushed.index)
@@ -462,7 +489,7 @@ def test_grouped_nan_key_single_state(spark):
         batch([np.nan, 1.0], [3.0, 4.0]),
         batch([np.nan], [5.0]),
     ]
-    stage1 = _row_builder(specs, ["g"], col_map, 1 << 16, _SketchKernel())
+    stage1 = _row_builder(specs, ["g"], col_map, _SketchKernel(specs))
     out = pd.concat([rb.to_pandas() for rb in stage1(iter(batches))])
     # one row for the NaN group, one for key 1.0 — not one per batch
     assert len(out) == 2, out
@@ -507,9 +534,7 @@ def test_grouped_auto_salt_bounds_fan_in(spark, events):
         SketchSpec("v", "tdigest", value_col="value"),
     ]
     wide = events.repartition(40)
-    pre = _pre_merge_states(
-        wide, ["event_type"], specs, salt_buckets=8, max_states_per_partition=1 << 16
-    ).toPandas()
+    pre = _pre_merge_states(wide, ["event_type"], specs, salt_buckets=8).toPandas()
     per_key = pre.groupby("event_type").size()
     assert (per_key <= 8).all(), per_key  # final merge reads <= S rows/key
 
@@ -539,7 +564,7 @@ def test_grouped_auto_salt_bounds_fan_in(spark, events):
         )
 
 
-def test_grouped_hll_fast_path_byte_identical(spark, events):
+def test_grouped_hll_fast_path_byte_identical(spark, events, monkeypatch):
     """All-HLL spec lists dispatch to the vectorized packed-entries
     builder + partition-wide register-max merge. Gate: partials AND the
     final grouped output are byte-identical to the generic route (one
@@ -548,6 +573,7 @@ def test_grouped_hll_fast_path_byte_identical(spark, events):
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
 
+    from probably_jl_spark.operators import grouped
     from probably_jl_spark.operators.grouped import (
         _ORD_COL,
         _merge_groups,
@@ -555,11 +581,11 @@ def test_grouped_hll_fast_path_byte_identical(spark, events):
         grouped_sketch,
     )
 
-    def generic_route(df, group_cols, specs, cap=1 << 16):
+    def generic_route(df, group_cols, specs):
         # _pre_merge_states always builds one sketch per key (the all-HLL
         # dispatch lives ONLY in grouped_sketch), so this is a true
         # independent baseline for the fast path
-        pre = _pre_merge_states(df, group_cols, specs, None, cap)
+        pre = _pre_merge_states(df, group_cols, specs, None)
         out_schema = StructType([f for f in pre.schema.fields if f.name != _ORD_COL])
         return pre.groupBy(*group_cols).applyInPandas(
             _merge_groups(specs, group_cols, with_ord=False), schema=out_schema
@@ -567,12 +593,13 @@ def test_grouped_hll_fast_path_byte_identical(spark, events):
 
     def assert_same(df, group_cols, specs, cap=1 << 16):
         key = list(group_cols)
+        monkeypatch.setattr(grouped, "_MAX_KEYS", cap)
         fast = (
-            grouped_sketch(df, group_cols, specs, max_states_per_partition=cap)
+            grouped_sketch(df, group_cols, specs)
             .toPandas().sort_values(key, na_position="first").reset_index(drop=True)
         )
         gen = (
-            generic_route(df, group_cols, specs, cap)
+            generic_route(df, group_cols, specs)
             .toPandas().sort_values(key, na_position="first").reset_index(drop=True)
         )
         assert len(fast) == len(gen)
@@ -633,13 +660,14 @@ def test_grouped_hll_fast_path_dense_partials(spark, events):
     assert saw_dense  # the dense branch actually exercised
 
 
-def test_grouped_kmv_fast_path_byte_identical(spark, events):
+def test_grouped_kmv_fast_path_byte_identical(spark, events, monkeypatch):
     """All-KMV spec lists take the vectorized (group, hash) k-min route;
     gate: byte-identical to the generic route (one sketch per key in
     stage 1, per-key applyInPandas merge), across flush caps and multi-spec lists, and
     exact per-group distincts below capacity."""
     from pyspark.sql.types import StructType
 
+    from probably_jl_spark.operators import grouped
     from probably_jl_spark.operators.grouped import (
         _ORD_COL,
         _merge_groups,
@@ -647,8 +675,8 @@ def test_grouped_kmv_fast_path_byte_identical(spark, events):
         grouped_sketch,
     )
 
-    def generic_route(df, group_cols, specs, cap=1 << 16):
-        pre = _pre_merge_states(df, group_cols, specs, None, cap)
+    def generic_route(df, group_cols, specs):
+        pre = _pre_merge_states(df, group_cols, specs, None)
         out_schema = StructType([f for f in pre.schema.fields if f.name != _ORD_COL])
         return pre.groupBy(*group_cols).applyInPandas(
             _merge_groups(specs, group_cols, with_ord=False), schema=out_schema
@@ -656,12 +684,13 @@ def test_grouped_kmv_fast_path_byte_identical(spark, events):
 
     def assert_same(df, group_cols, specs, cap=1 << 16):
         key = list(group_cols)
+        monkeypatch.setattr(grouped, "_MAX_KEYS", cap)
         fast = (
-            grouped_sketch(df, group_cols, specs, max_states_per_partition=cap)
+            grouped_sketch(df, group_cols, specs)
             .toPandas().sort_values(key, na_position="first").reset_index(drop=True)
         )
         gen = (
-            generic_route(df, group_cols, specs, cap)
+            generic_route(df, group_cols, specs)
             .toPandas().sort_values(key, na_position="first").reset_index(drop=True)
         )
         assert len(fast) == len(gen)
@@ -1084,6 +1113,30 @@ def test_dispatch_sample_is_one_task_without_exchange(spark, monkeypatch):
     (p,) = plans
     assert "Coalesce 1" in p, p
     assert "Exchange" not in p, p
+
+
+def test_dispatch_sample_counts_null_key_parts(spark):
+    """The distinct-ratio sample counts the groups the routes build, a key
+    with a null part included: on transcripts, where ``tool`` is null on
+    most turns, (conv_id, tool) reads ~0.56 distinct per row and takes
+    the direct route (``count(DISTINCT conv_id, tool)`` read ~0.3 and
+    picked the partial one), while (role, tool) stays on the partial
+    route."""
+    from probably_jl_spark.operators.grouped import _preagg_dedup_ratio
+
+    df = synth_transcripts(spark, n_convs=2000, seed=3).cache()
+    specs = [SketchSpec("u", "hll", key_cols=("turn_idx",))]
+
+    def plan(group_cols):
+        gdf = grouped_sketch(df, group_cols, specs)
+        return gdf._jdf.queryExecution().executedPlan().toString()
+
+    assert _preagg_dedup_ratio(df, ["conv_id", "tool"], 200_000) > 0.5
+    direct = plan(["conv_id", "tool"])
+    assert "MapInArrow" in direct and "MapInPandas" not in direct, direct
+    assert _preagg_dedup_ratio(df, ["role", "tool"], 200_000) <= 0.5
+    assert "MapInPandas" in plan(["role", "tool"])
+    df.unpersist()
 
 
 def test_worker_zip_gate_installed_in_tasks(spark):
